@@ -411,7 +411,7 @@ DF_QUERIES = {
 DF_ONLY_QUERIES = {"q_dedup_chain": q_dedup_chain}
 
 
-def _synth_scaled_documents(spark, sf_dir: str, mult: int = 4) -> str:
+def _synth_scaled_documents(spark, sf_dir: str, mult: int) -> str:
     """Synthesize a ``mult``× documents directory from the fixture (round
     13 — the scaling-row corpus the r12 verdict prescribed): ``mult``
     unions of the documents table with disjoint doc_id offsets, written
@@ -1048,7 +1048,7 @@ def main() -> None:
     except ValueError:
         sf_val = sf
     # "value" stays the sum of the headline rows (comparable with
-    # BENCH_r01–r12); the scaling row rides a 4× corpus and is published
+    # BENCH_r01–r12); the scaling row rides an 8× corpus and is published
     # as its own queries entry only (round 13, disclosed above).
     total = round(sum(results.values()), 4)
     results["q_dedup_chain_x8data"] = scaling_row_sec

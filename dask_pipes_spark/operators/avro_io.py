@@ -1102,7 +1102,7 @@ def k18_vacuum_generations(spark, sf_dir):
     data deleted, manifest before vacuum — is exactly what this key
     pins. tests/test_avro.py asserts the generation files are gone, the
     manifest names them, and the rowset survived the vacuum."""
-    import json as _json
+    from dask_pipes_spark.session import _write_manifest
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     land = scratch_path(f"dps_k18_land_{tag}")
@@ -1128,12 +1128,9 @@ def k18_vacuum_generations(spark, sf_dir):
             os.path.join(tmp, f), os.path.join(land, f"compacted-{f}")
         )
         final_names.append(f"compacted-{f}")
-    # write-temp + os.replace (round 9 — the session.py manifest
-    # discipline): a crash mid-write must not leave a corrupt manifest
-    vac = os.path.join(land, "VACUUM.json")
-    with open(vac + ".tmp", "w") as fh:
-        _json.dump({"superseded": gens, "by": final_names}, fh)
-    os.replace(vac + ".tmp", vac)
+    # write-temp + os.replace: a crash mid-write must not leave a
+    # corrupt manifest
+    _write_manifest(land, {"superseded": gens, "by": final_names})
     for f in gens:
         os.remove(os.path.join(land, f))
     back = read_avro_split(spark, land, target_splits=8)

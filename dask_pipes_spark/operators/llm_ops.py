@@ -1071,10 +1071,12 @@ def persisted_signature_table(spark, sf_dir: str) -> DataFrame:
     100 TB: this IS the deployment default — the signature table is the
     artifact a crawl pipeline keeps (l66), and chains that ride it leave
     localCheckpoint as the no-index fallback only."""
-    import json
     import os
 
-    from dask_pipes_spark.session import checkpoint_index_generation
+    from dask_pipes_spark.session import (
+        checkpoint_index_generation,
+        head_generations,
+    )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
 
@@ -1094,7 +1096,7 @@ def persisted_signature_table(spark, sf_dir: str) -> DataFrame:
         version="sig-full-v1",
         build=_build,
     )
-    head = json.load(open(os.path.join(idx, "VACUUM.json")))["by"]
+    head = head_generations(idx)["signatures-"]
     return spark.read.schema(_SIG_SCHEMA).parquet(os.path.join(idx, head))
 
 

@@ -23,8 +23,10 @@ from dask_pipes_spark.pipeline import (
 )
 from dask_pipes_spark.registry import query
 from dask_pipes_spark.session import (
+    _read_branches,
     ensure_index,
     fanout,
+    head_generations,
     load,
     load_tables,
     scratch_path,
@@ -1766,8 +1768,6 @@ def p22_mv_restore(spark, sf_dir):
     one O(MV-size) re-commit — never a fact-table replay — and the
     forensic read of the bad generation is a plain retained-generation
     scan (p21)."""
-    import json
-
     from dask_pipes_spark.session import checkpoint_index_generation
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
@@ -1833,8 +1833,7 @@ def p22_mv_restore(spark, sf_dir):
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="mv-restore-v1", build=_stage)
     # --- serving: resolve the head from the manifest, then ONE scan ---
-    manifest = json.load(open(os.path.join(base, "VACUUM.json")))
-    head = manifest["history"][-1]["by"]
+    head = head_generations(base)["agg_mv-"]
     mv = spark.read.schema(gen_schema).parquet(os.path.join(base, head))
     return mv.select(
         "n_name",
@@ -2223,8 +2222,7 @@ def p25_write_audit_publish(spark, sf_dir):
             # resolve the CURRENT head from the manifest — on a zero-row
             # fixture even the buggy batch conserves trivially and
             # publishes, so the next attempt must not hardcode g001
-            man = json.load(open(os.path.join(d, "VACUUM.json")))
-            head_gen = man["history"][-1]["by"]
+            head_gen = head_generations(d)["agg_mv-"]
             nxt = f"agg_mv-g{int(head_gen.rsplit('g', 1)[1]) + 1:03d}"
             g1 = spark.read.schema(gen_schema).parquet(
                 os.path.join(d, head_gen)
@@ -2287,8 +2285,7 @@ def p25_write_audit_publish(spark, sf_dir):
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="wap-v1", build=_stage)
     # --- serving: head from the manifest (the bad batch never appears) ---
-    manifest = json.load(open(os.path.join(base, "VACUUM.json")))
-    head = manifest["history"][-1]["by"]
+    head = head_generations(base)["agg_mv-"]
     mv = spark.read.schema(gen_schema).parquet(os.path.join(base, head))
     return mv.select(
         "n_name",
@@ -2431,8 +2428,7 @@ def p26_concurrent_commit_rebase(spark, sf_dir):
     # fingerprint the whole fixture dir: the staged state derives from
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="occ-v1", build=_stage)
-    manifest = json.load(open(os.path.join(base, "VACUUM.json")))
-    head = manifest["history"][-1]["by"]
+    head = head_generations(base)["agg_mv-"]
     mv = spark.read.schema(gen_schema).parquet(os.path.join(base, head))
     return mv.select(
         "n_name",
@@ -2554,8 +2550,7 @@ def p27_mv_schema_evolution(spark, sf_dir):
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="mvevo-v1", build=_stage)
     # --- serving: resolve (head, schema) together from the registries ---
-    man = json.load(open(os.path.join(base, "VACUUM.json")))
-    head = man["history"][-1]["by"]
+    head = head_generations(base)["agg_mv-"]
     cols = json.load(open(os.path.join(base, "SCHEMA.json")))[head]
     if cols != ["n_name", "cnt", "rev", "qty"]:
         # explicit raise, not `assert` (stripped under python -O): a head
@@ -2693,8 +2688,7 @@ def p28_orphan_gc(spark, sf_dir):
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="gc-v1", build=_stage)
     # --- serving: head from the manifest — GC never moved it ---
-    manifest = json.load(open(os.path.join(base, "VACUUM.json")))
-    head = manifest["history"][-1]["by"]
+    head = head_generations(base)["agg_mv-"]
     mv = spark.read.schema(gen_schema).parquet(os.path.join(base, head))
     return mv.select(
         "n_name",
@@ -2844,7 +2838,7 @@ def p29_branch_wap(spark, sf_dir):
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="branch-wap-v1", build=_stage)
     # --- serving: resolve main's ref — the only head readers ever see ---
-    head = json.load(open(os.path.join(base, "BRANCHES.json")))["main"]
+    head = _read_branches(base)["main"]
     mv = spark.read.schema(gen_schema).parquet(os.path.join(base, head))
     return mv.select(
         "n_name",
@@ -2954,8 +2948,7 @@ def p30_expire_snapshots(spark, sf_dir):
     # fingerprint the whole fixture dir: the staged state derives from
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="expire-v1", build=_stage)
-    manifest = json.load(open(os.path.join(base, "VACUUM.json")))
-    head = manifest["history"][-1]["by"]
+    head = head_generations(base)["agg_mv-"]
     mv = spark.read.schema(gen_schema).parquet(os.path.join(base, head))
     return mv.select(
         "n_name",
@@ -3075,8 +3068,7 @@ def p31_manifest_compaction(spark, sf_dir):
     # fingerprint the whole fixture dir: the staged state derives from
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="compact-v1", build=_stage)
-    manifest = json.load(open(os.path.join(base, "VACUUM.json")))
-    head = manifest["history"][-1]["by"]
+    head = head_generations(base)["agg_mv-"]
     mv = spark.read.schema(gen_schema).parquet(os.path.join(base, head))
     return mv.select(
         "n_name",

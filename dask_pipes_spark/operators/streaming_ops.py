@@ -20,17 +20,31 @@ Scale notes (100 TB / continuous ingest):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from dask_pipes_spark.registry import dsum, query, sql_dsum
-from dask_pipes_spark.session import load, load_tables, scratch_path
+from dask_pipes_spark.session import (
+    checkpoint_index_generation,
+    checkpoint_index_generations,
+    collect_local,
+    compact_manifest,
+    ensure_index,
+    fanout,
+    gc_index_dir,
+    head_generations,
+    load,
+    load_tables,
+    scratch_path,
+)
 from dask_pipes_spark.streaming import (
     drain,
     read_events_stream,
-    stage_slice_file,
     run_to_memory,
     run_with_progress,
-    stage_events_dir_out_of_order,
+    stage_events_dir,
+    stage_slice_file,
 )
 
 _WINDOW_ORACLE = f"""
@@ -329,7 +343,6 @@ def k9_stream_foreach_sink(spark, sf_dir):
     holds the full aggregate, which the SQL oracle checks against a one-pass
     batch aggregation. Sums stay DECIMAL through the sink round-trip so the
     final double is bit-identical."""
-    import os
     import shutil
     import tempfile
 
@@ -572,7 +585,7 @@ def k14_stream_progress_audit(spark, sf_dir):
     100 TB: progress metadata is O(batches), not O(rows) — the audit adds
     zero data-path cost; in production the same numbers stream from
     ``StreamingQueryListener`` into the metrics pipeline."""
-    path = stage_events_dir_out_of_order(spark, sf_dir, n_files=4, swap=(1, 2))
+    path = stage_events_dir(spark, sf_dir, n_files=4, swap=(1, 2))
     schema = spark.read.parquet(path).schema
     stream = (
         spark.readStream.schema(schema)
@@ -619,8 +632,6 @@ def stage_documents_dedup_stream(spark, sf_dir: str) -> str:
     vs. the corpus state, id + 2000000). mtime order = replay order, the
     stage_events_dir idiom; replaying the state table as micro-batch 0 is
     how a streaming dedup job seeds its state from an existing corpus."""
-    import os
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     out = scratch_path(f"dps_docs_dedup_stream_{tag}")
     marker = os.path.join(out, "_STAGED")
@@ -799,8 +810,6 @@ def k16_stream_avro_sink(spark, sf_dir):
     micro-batches append immutable columnar container files, readers fan
     out per data block (a18), compaction is a rewrite of old generations.
     State lives in the files; the stream itself is stateless."""
-    import os
-
     out = scratch_path("dps_k16_avro_sink")
     os.makedirs(out, exist_ok=True)
     for old in os.listdir(out):  # parity runs repeat: drop stale generations
@@ -841,7 +850,6 @@ def _stage_cdc_slices(cdc, index_dir: str, slice_key, n: int = 4) -> None:
     replay order is pinned by the explicit mtimes, never by write
     order. ``slice_key`` is the integer column the fixture slices on
     (disjointness of the slices is the caller's contract, as before)."""
-    import os
     from concurrent.futures import ThreadPoolExecutor
 
     cdc_dir = os.path.join(index_dir, "cdc")
@@ -860,13 +868,113 @@ def _stage_cdc_slices(cdc, index_dir: str, slice_key, n: int = 4) -> None:
         list(pool.map(_one, range(n)))
 
 
+# --- the streaming-IVM runner (k19-k27) ---------------------------------------
+
+
+def _next_generation(head: str) -> str:
+    """The generation name after ``head``: ``<prefix>g<n+1>``, 3 digits."""
+    prefix, n = head.rsplit("g", 1)
+    return f"{prefix}g{int(n) + 1:03d}"
+
+
+def run_ivm_stream(
+    spark,
+    index_dir: str,
+    step,
+    max_files_per_trigger: int = 1,
+    timeout: int = 300,
+    target_files: int = 8,
+    gc_each_window: bool = False,
+    compact_keep_tail: int | None = None,
+) -> None:
+    """Drain the CDC staged under ``<index_dir>/cdc`` through the ACTUAL
+    streaming runtime, maintaining the index by generations — the one
+    maintenance loop every streaming-IVM key (k19-k27) runs. Each
+    non-empty micro-batch's ``foreachBatch`` window:
+
+    1. resolves the current heads with :func:`head_generations`
+       (``{table_prefix: newest generation}``, compaction-proof);
+    2. calls ``step(batch_df, heads)`` — the only per-family code — which
+       returns ``{table_prefix: merged_frame}``, the tables this window
+       moves (an empty dict moves nothing: k22's quarantined batch);
+    3. lands every returned table as its head's next generation
+       (``…-g{n+1:03d}``, superseding the head) under ONE
+       :func:`checkpoint_index_generations` link, so a reader never sees
+       one table moved without its siblings;
+    4. runs the janitor riding the loop when asked: orphan GC
+       (``gc_each_window``, k25) and manifest compaction
+       (``compact_keep_tail``, k26).
+
+    The generation chain IS the stream's state: crash recovery is the
+    last durable generation plus the source's replay offset in
+    ``<index_dir>/_stream_ckpt`` — exactly what Structured Streaming's
+    checkpoint protocol assumes of an idempotent sink. Every family's
+    fold is associative and commutative over disjoint CDC slices, so the
+    final state is invariant to ``max_files_per_trigger`` (test-pinned
+    per family). ``target_files`` is the per-generation file count (1 for
+    the 25-row aggregate MV, 8 for the vector indexes).
+
+    100 TB: per-window cost is O(|batch|) map-side work plus the
+    generation rewrite; nothing lives in the streaming state store."""
+
+    def _apply(batch_df, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        heads = head_generations(index_dir)
+        moves = [
+            (merged, [heads[p]], _next_generation(heads[p]))
+            for p, merged in step(batch_df, heads).items()
+        ]
+        if moves:
+            checkpoint_index_generations(
+                index_dir, moves, target_files=target_files
+            )
+        if gc_each_window:
+            # inside foreachBatch this window's checkpoint has completed
+            # and this stream is the only maintainer, so a zero age guard
+            # is safe here; a multi-maintainer deployment keeps the
+            # default one-day guard (see gc_index_dir)
+            gc_index_dir(index_dir, older_than_sec=0)
+        if compact_keep_tail is not None:
+            # after the window's GC has vacuumed the superseded
+            # generation, its history link is provably inert and folds
+            # into the bounded checkpoint record, so a maintainer that
+            # never stops also never grows its per-commit manifest rewrite
+            compact_manifest(index_dir, keep_tail=compact_keep_tail)
+
+    cdc = os.path.join(index_dir, "cdc")
+    q = (
+        spark.readStream.schema(spark.read.parquet(cdc).schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(cdc)
+        .writeStream.foreachBatch(_apply)
+        .option("checkpointLocation", os.path.join(index_dir, "_stream_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    drain(q, timeout)
+
+
+def _read_gen(spark, index_dir: str, name: str, schema: str):
+    """Scan one persisted generation (or quantizer artifact) of an index."""
+    return spark.read.schema(schema).parquet(os.path.join(index_dir, name))
+
+
+def _cdc_split(batch_df, cols=("vec_id", "e", "nrm")):
+    """(tombstone keys, insert rows) of an embedding-CDC micro-batch."""
+    d_del = batch_df.filter(F.col("op") == "D").select("vec_id")
+    d_ins = batch_df.filter(F.col("op") == "I").select(*cols)
+    return d_del, d_ins
+
+
+def _drop_deleted(table, d_del):
+    """Broadcast anti-join of a keyed index table against the tombstones."""
+    return table.join(F.broadcast(d_del), "vec_id", "left_anti")
+
+
 # --- k19: streaming aggregate IVM (round 9) ----------------------------------
 
 _K19_MV_SCHEMA = "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
-_K19_FEED_SCHEMA = (
-    "l_orderkey bigint, l_extendedprice double, l_discount double, "
-    "l_quantity double, sign int"
-)
 
 
 def _stage_k19_state(spark, sf_dir: str, d: str) -> None:
@@ -881,14 +989,11 @@ def _stage_k19_state(spark, sf_dir: str, d: str) -> None:
     ≡0 mod 4 by construction) — mtime order = replay order (the
     stage_events_dir idiom). Every slice is non-empty and mixes signs,
     so each micro-batch exercises the interleaved insert/retract path."""
-    import os
-
     from dask_pipes_spark.operators.pipeline_ops import (
         _AGG_MV_FEED_COLS,
         _agg_mv_qty,
         _agg_mv_rev,
     )
-    from dask_pipes_spark.session import checkpoint_index_generation
 
     lineitem = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
@@ -935,111 +1040,70 @@ def _stage_k19_state(spark, sf_dir: str, d: str) -> None:
     _stage_cdc_slices(cdc, d, F.expr("l_orderkey div 10"))
 
 
-def _run_agg_mv_stream(
-    spark, index_dir: str, max_files_per_trigger: int = 1, timeout: int = 300,
-    gc_each_window: bool = False, compact_keep_tail: int | None = None,
-) -> None:
-    """Drain the staged lineitem CDC through the ACTUAL streaming runtime,
-    maintaining the aggregate MV by generations: each micro-batch's
-    ``foreachBatch`` reads the CURRENT generation from the VACUUM
-    manifest, folds the batch into signed per-nation partials (broadcast
-    batch ⋈ map-side bridge — p18's algebra with the sign carried per
-    row, since one batch can interleave inserts and retractions), merges
-    partials exactly (count + decimal sums), retires zero-count groups,
-    and checkpoints the result as the NEXT generation — the p20
-    write-back applied continuously. Because the merge algebra is
-    associative AND commutative, the final state is invariant to how the
-    CDC files batch (pinned by the invariance test)."""
-    import json
-    import os
-
+def _agg_mv_fold(batch_df, index_dir: str, head: str):
+    """The signed aggregate-MV fold shared by k19/k25/k26 and k22: fold
+    the CDC batch into signed per-nation partials (broadcast batch ⋈
+    map-side bridge — p18's algebra with the sign carried per row, since
+    one batch can interleave inserts and retractions), merge them into
+    the ``head`` MV exactly (count + decimal sums), and retire zero-count
+    groups. Associative AND commutative, so the final state is invariant
+    to how the CDC files batch."""
     from dask_pipes_spark.operators.pipeline_ops import (
         _agg_mv_qty,
         _agg_mv_rev,
     )
-    from dask_pipes_spark.session import checkpoint_index_generation
 
-    bridge_path = os.path.join(index_dir, "bridge")
-
-    def _apply(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ss = batch_df.sparkSession
-        man = json.load(open(os.path.join(index_dir, "VACUUM.json")))
-        cur = man["by"]
-        mv = ss.read.schema(_K19_MV_SCHEMA).parquet(
-            os.path.join(index_dir, cur)
-        )
-        bridge = ss.read.schema("o_orderkey bigint, n_name string").parquet(
-            bridge_path
-        )
-        partial = (
-            F.broadcast(batch_df)
-            .join(bridge, F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy("n_name")
-            .agg(
-                F.sum("sign").alias("cnt"),
-                F.sum(F.col("sign") * _agg_mv_rev())
-                .cast("decimal(38,6)")
-                .alias("rev"),
-                F.sum(F.col("sign") * _agg_mv_qty())
-                .cast("decimal(38,6)")
-                .alias("qty"),
-            )
-        )
-        merged = (
-            mv.unionAll(partial)
-            .groupBy("n_name")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("rev").alias("rev"),
-                F.sum("qty").alias("qty"),
-            )
-            .filter(F.col("cnt") > 0)  # retired groups leave the MV
-        )
-        nxt = int(cur.rsplit("g", 1)[1]) + 1
-        checkpoint_index_generation(
-            index_dir, merged, superseded=[cur],
-            generation=f"agg_mv-g{nxt:03d}",
-        )
-        if gc_each_window:
-            # the janitor riding the maintenance loop (round 10, k25):
-            # inside foreachBatch this window's checkpoint has completed
-            # and this stream is the only maintainer, so a zero age guard
-            # is safe here; a multi-maintainer deployment keeps the
-            # default one-day guard (see gc_index_dir)
-            from dask_pipes_spark.session import gc_index_dir
-
-            gc_index_dir(index_dir, older_than_sec=0)
-        if compact_keep_tail is not None:
-            # manifest compaction riding the same janitor step (round 12,
-            # k26 — the r11 verdict's item 5): after the window's GC has
-            # vacuumed the superseded generation, its history link is
-            # provably inert and folds into the bounded checkpoint
-            # record, so a maintainer that never stops also never grows
-            # its per-commit manifest rewrite. Readers are compaction-
-            # proof by construction: serving resolves heads via the
-            # top-level "by" / head_bys (checkpoint.heads + tail), the
-            # r11-advice rule the whole commit plane now follows.
-            from dask_pipes_spark.session import compact_manifest
-
-            compact_manifest(index_dir, keep_tail=compact_keep_tail)
-
-    schema = spark.read.parquet(os.path.join(index_dir, "cdc")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(os.path.join(index_dir, "cdc"))
+    ss = batch_df.sparkSession
+    mv = _read_gen(ss, index_dir, head, _K19_MV_SCHEMA)
+    bridge = ss.read.schema("o_orderkey bigint, n_name string").parquet(
+        os.path.join(index_dir, "bridge")
     )
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation", os.path.join(index_dir, "_stream_ckpt")
+    partial = (
+        F.broadcast(batch_df)
+        .join(bridge, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("n_name")
+        .agg(
+            F.sum("sign").alias("cnt"),
+            F.sum(F.col("sign") * _agg_mv_rev())
+            .cast("decimal(38,6)")
+            .alias("rev"),
+            F.sum(F.col("sign") * _agg_mv_qty())
+            .cast("decimal(38,6)")
+            .alias("qty"),
         )
-        .trigger(availableNow=True)
-        .start()
     )
-    drain(q, timeout)
+    return (
+        mv.unionAll(partial)
+        .groupBy("n_name")
+        .agg(
+            F.sum("cnt").alias("cnt"),
+            F.sum("rev").alias("rev"),
+            F.sum("qty").alias("qty"),
+        )
+        .filter(F.col("cnt") > 0)  # retired groups leave the MV
+    )
+
+
+def _agg_mv_step(spark, index_dir: str):
+    """k19/k25/k26's :func:`run_ivm_stream` step: each window reads the
+    CURRENT MV generation and checkpoints :func:`_agg_mv_fold` as the
+    next one — the p20 write-back applied continuously."""
+
+    def step(batch_df, heads):
+        return {"agg_mv-": _agg_mv_fold(batch_df, index_dir, heads["agg_mv-"])}
+
+    return step
+
+
+def _serve_agg_mv(spark, idx: str):
+    """The aggregate MV's serving read: one scan of the head generation."""
+    mv = _read_gen(spark, idx, head_generations(idx)["agg_mv-"], _K19_MV_SCHEMA)
+    return mv.select(
+        "n_name",
+        F.col("cnt").alias("n_items"),
+        F.col("rev").cast("double").alias("sum_revenue"),
+        F.col("qty").cast("double").alias("sum_qty"),
+    )
 
 
 @query(
@@ -1087,31 +1151,17 @@ def k19_stream_agg_ivm(spark, sf_dir):
     map-side work per trigger — no shuffle of the fact stream, no
     unbounded state store; the periodic write-back bounds both the
     serving cost and the feed history exactly as p20 does nightly."""
-    import json
-    import os
-
-    from dask_pipes_spark.session import ensure_index
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_k19_aggmv_stream_{tag}")
 
     def _stage(d: str) -> None:
         _stage_k19_state(spark, sf_dir, d)
-        _run_agg_mv_stream(spark, d, max_files_per_trigger=1)
+        run_ivm_stream(spark, d, _agg_mv_step(spark, d), target_files=1)
 
     # fingerprint the whole fixture dir: the staged state derives from
     # lineitem AND the dimension chain (orders/customer/nation)
     idx = ensure_index(base, sf_dir, version="k19-v1", build=_stage)
-    man = json.load(open(os.path.join(idx, "VACUUM.json")))
-    mv = spark.read.schema(_K19_MV_SCHEMA).parquet(
-        os.path.join(idx, man["by"])
-    )
-    return mv.select(
-        "n_name",
-        F.col("cnt").alias("n_items"),
-        F.col("rev").cast("double").alias("sum_revenue"),
-        F.col("qty").cast("double").alias("sum_qty"),
-    )
+    return _serve_agg_mv(spark, idx)
 
 
 # --- k20: streaming ANN index maintenance (round 9) ---------------------------
@@ -1129,16 +1179,9 @@ def _stage_k20_state(spark, sf_dir: str, d: str) -> None:
     sliced by ``vec_id % 4``; mtime order = replay order. Insert and
     delete key sets are disjoint by construction, so the maintenance
     algebra is fully commutative across any batching."""
-    import os
-    import shutil
-
     from dask_pipes_spark.operators.llm_ext import (
         _ivf_corpus_and_centroids,
         ivf_assign,
-    )
-    from dask_pipes_spark.session import (
-        checkpoint_index_generation,
-        collect_local,
     )
 
     vecs_old, cent = _ivf_corpus_and_centroids(
@@ -1168,23 +1211,13 @@ def _stage_k20_state(spark, sf_dir: str, d: str) -> None:
     _stage_cdc_slices(cdc, d, F.col("vec_id"))
 
 
-def _run_ann_ivm_stream(
-    spark, index_dir: str, max_files_per_trigger: int = 1, timeout: int = 300
-) -> None:
-    """Drain the embedding CDC through the streaming runtime, maintaining
-    the inverted file by generations: each micro-batch anti-joins its
-    tombstones against the CURRENT generation and map-side-assigns its
-    inserts against the FIXED coarse codebook (l65's algebra — the
-    codebook is collected once, before the stream starts, because it is
-    exactly the artifact that does NOT change per batch), then
-    checkpoints the merged table as the next generation. Disjoint
-    insert/delete key sets make the fold commutative — batching
-    invariance is test-pinned."""
-    import json
-    import os
-
+def _ivf_step(spark, index_dir: str):
+    """k20's :func:`run_ivm_stream` step — l65's algebra per window:
+    tombstones anti-join out of the CURRENT inverted file, inserts are
+    assigned map-side against the FIXED coarse codebook. The codebook is
+    collected once, before the stream starts, because it is exactly the
+    artifact that does NOT change per batch."""
     from dask_pipes_spark.operators.llm_ext import ivf_assign
-    from dask_pipes_spark.session import checkpoint_index_generation
 
     cent_rows = (
         spark.read.schema("bucket int, ce array<double>, cnrm double")
@@ -1192,43 +1225,19 @@ def _run_ann_ivm_stream(
         .collect()
     )
 
-    def _apply(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ss = batch_df.sparkSession
-        man = json.load(open(os.path.join(index_dir, "VACUUM.json")))
-        cur = man["by"]
-        assigned = ss.read.schema(_K20_ASSIGN_SCHEMA).parquet(
-            os.path.join(index_dir, cur)
+    def step(batch_df, heads):
+        assigned = _read_gen(
+            batch_df.sparkSession, index_dir, heads["assignments-"],
+            _K20_ASSIGN_SCHEMA,
         )
-        d_del = batch_df.filter(F.col("op") == "D").select("vec_id")
-        d_ins = batch_df.filter(F.col("op") == "I").select(
-            "vec_id", "e", "nrm"
-        )
-        merged = assigned.join(
-            F.broadcast(d_del), "vec_id", "left_anti"
-        ).unionAll(ivf_assign(d_ins, cent_rows, nprobe=1))
-        nxt = int(cur.rsplit("g", 1)[1]) + 1
-        checkpoint_index_generation(
-            index_dir, merged, superseded=[cur],
-            generation=f"assignments-g{nxt:03d}", target_files=8,
-        )
+        d_del, d_ins = _cdc_split(batch_df)
+        return {
+            "assignments-": _drop_deleted(assigned, d_del).unionAll(
+                ivf_assign(d_ins, cent_rows, nprobe=1)
+            )
+        }
 
-    schema = spark.read.parquet(os.path.join(index_dir, "cdc")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(os.path.join(index_dir, "cdc"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation", os.path.join(index_dir, "_stream_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q, timeout)
+    return step
 
 
 from dask_pipes_spark.operators.llm_ext import _L65_ORACLE
@@ -1260,18 +1269,14 @@ def k20_stream_ann_ivm(spark, sf_dir):
     cadence quantizer retrain is exactly what the l62 staleness manifest
     models. State is the generation chain itself — nothing lives in the
     streaming state store."""
-    import json
-    import os
-
     from dask_pipes_spark.operators.llm_ext import _ivf_probe_topk
-    from dask_pipes_spark.session import ensure_index
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_k20_ann_stream_{tag}")
 
     def _stage(d: str) -> None:
         _stage_k20_state(spark, sf_dir, d)
-        _run_ann_ivm_stream(spark, d, max_files_per_trigger=1)
+        run_ivm_stream(spark, d, _ivf_step(spark, d))
 
     idx = ensure_index(
         base,
@@ -1279,14 +1284,11 @@ def k20_stream_ann_ivm(spark, sf_dir):
         version="k20-v1",
         build=_stage,
     )
-    man = json.load(open(os.path.join(idx, "VACUUM.json")))
-    cent_rows = (
-        spark.read.schema("bucket int, ce array<double>, cnrm double")
-        .parquet(os.path.join(idx, "centroids"))
-        .collect()
-    )
-    indexed = spark.read.schema(_K20_ASSIGN_SCHEMA).parquet(
-        os.path.join(idx, man["by"])
+    cent_rows = _read_gen(
+        spark, idx, "centroids", "bucket int, ce array<double>, cnrm double"
+    ).collect()
+    indexed = _read_gen(
+        spark, idx, head_generations(idx)["assignments-"], _K20_ASSIGN_SCHEMA
     )
     return _ivf_probe_topk(
         indexed.select("vec_id", "e", "nrm"), indexed, cent_rows
@@ -1306,11 +1308,7 @@ def _stage_k21_state(spark, sf_dir: str, d: str) -> None:
     rows — raw-vector inserts (``%9==5``, op='I', arriving UNASSIGNED)
     and tombstones (``%11==3``, op='D'); mtime order = replay order.
     Disjoint key sets keep the fold commutative across any batching."""
-    import os
-    import shutil
-
     from dask_pipes_spark.operators.llm_ext import _lsh_corpus_index
-    from dask_pipes_spark.session import checkpoint_index_generation, fanout, load
 
     old = _lsh_corpus_index(spark, sf_dir, pred=F.col("vec_id") % 9 != 5)
     checkpoint_index_generation(
@@ -1342,60 +1340,28 @@ def _stage_k21_state(spark, sf_dir: str, d: str) -> None:
     _stage_cdc_slices(cdc, d, F.col("vec_id"))
 
 
-def _run_lsh_ivm_stream(
-    spark, index_dir: str, max_files_per_trigger: int = 1, timeout: int = 300
-) -> None:
-    """Drain the embedding CDC through the streaming runtime, maintaining
-    the sign-LSH bucket table by generations: each micro-batch anti-joins
-    its tombstones against the CURRENT generation and sign-buckets its
-    inserts against the FIXED hyperplane basis (l75's algebra — the basis
-    is code, not data, so there is nothing to collect per batch), then
-    checkpoints the merged table as the next generation."""
-    import json
-    import os
-
+def _lsh_step(spark, index_dir: str):
+    """k21's :func:`run_ivm_stream` step — l75's algebra per window:
+    tombstones anti-join out of the CURRENT bucket table, inserts are
+    sign-bucketed against the FIXED hyperplane basis (code, not data, so
+    there is nothing to collect per batch)."""
     from dask_pipes_spark.operators.llm_ext import _hyperplanes, lsh_bucket
-    from dask_pipes_spark.session import checkpoint_index_generation
 
     planes = _hyperplanes(6, 64)
 
-    def _apply(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ss = batch_df.sparkSession
-        man = json.load(open(os.path.join(index_dir, "VACUUM.json")))
-        cur = man["by"]
-        buckets = ss.read.schema(_K21_BUCKET_SCHEMA).parquet(
-            os.path.join(index_dir, cur)
+    def step(batch_df, heads):
+        buckets = _read_gen(
+            batch_df.sparkSession, index_dir, heads["buckets-"],
+            _K21_BUCKET_SCHEMA,
         )
-        d_del = batch_df.filter(F.col("op") == "D").select("vec_id")
-        d_ins = batch_df.filter(F.col("op") == "I").select(
-            "vec_id", "e", "nrm"
-        ).withColumn("bucket", lsh_bucket("e", planes))
-        merged = buckets.join(
-            F.broadcast(d_del), "vec_id", "left_anti"
-        ).unionAll(d_ins)
-        nxt = int(cur.rsplit("g", 1)[1]) + 1
-        checkpoint_index_generation(
-            index_dir, merged, superseded=[cur],
-            generation=f"buckets-g{nxt:03d}", target_files=8,
-        )
+        d_del, d_ins = _cdc_split(batch_df)
+        return {
+            "buckets-": _drop_deleted(buckets, d_del).unionAll(
+                d_ins.withColumn("bucket", lsh_bucket("e", planes))
+            )
+        }
 
-    schema = spark.read.parquet(os.path.join(index_dir, "cdc")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(os.path.join(index_dir, "cdc"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation", os.path.join(index_dir, "_stream_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q, timeout)
+    return step
 
 
 from dask_pipes_spark.operators.llm_ext import _L75_ORACLE
@@ -1430,18 +1396,14 @@ def k21_stream_lsh_ivm(spark, sf_dir):
     and on a cluster its layout would be bucketed BY ``bucket`` so the
     probe equi-join is shuffle-free. State is the generation chain —
     nothing lives in the streaming state store."""
-    import json
-    import os
-
     from dask_pipes_spark.operators.llm_ext import _lsh_probe_topk
-    from dask_pipes_spark.session import ensure_index
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_k21_lsh_stream_{tag}")
 
     def _stage(d: str) -> None:
         _stage_k21_state(spark, sf_dir, d)
-        _run_lsh_ivm_stream(spark, d, max_files_per_trigger=1)
+        run_ivm_stream(spark, d, _lsh_step(spark, d))
 
     idx = ensure_index(
         base,
@@ -1449,11 +1411,9 @@ def k21_stream_lsh_ivm(spark, sf_dir):
         version="k21-v1",
         build=_stage,
     )
-    man = json.load(open(os.path.join(idx, "VACUUM.json")))
-    indexed = spark.read.schema(_K21_BUCKET_SCHEMA).parquet(
-        os.path.join(idx, man["by"])
+    return _lsh_probe_topk(
+        _read_gen(spark, idx, head_generations(idx)["buckets-"], _K21_BUCKET_SCHEMA)
     )
-    return _lsh_probe_topk(indexed)
 
 
 # --- k22: streaming write-audit-publish (round 9) ------------------------------
@@ -1467,9 +1427,6 @@ def _stage_k22_state(spark, sf_dir: str, d: str) -> None:
     bug: a producer emits keys from the wrong environment). mtime order
     puts the poison mid-stream, so the gate must quarantine it and KEEP
     GOING."""
-    import os
-    import shutil
-
     _stage_k19_state(spark, sf_dir, d)
     cdc_dir = os.path.join(d, "cdc")
     base_t = 1_700_000_000
@@ -1491,117 +1448,65 @@ def _stage_k22_state(spark, sf_dir: str, d: str) -> None:
     )
 
 
-def _run_wap_stream(spark, index_dir: str, timeout: int = 300) -> None:
-    """Drain the CDC through the streaming runtime with a WRITE-AUDIT-
-    PUBLISH gate per micro-batch: the merged MV lands in a STAGED
-    directory first, the conservation audit runs against the staged
-    bytes (Σcnt must equal head total + Σsign over the batch — a batch
-    whose rows matched nothing, or double-applied, misses it), and only
-    a passing batch is promoted via :func:`publish_generation` (O(1)
-    rename + manifest link). A failing batch quarantines — the head
-    NEVER serves it — and the stream continues with the next trigger.
-    Every verdict appends to AUDIT.json (write-temp + rename)."""
+def _wap_step(spark, index_dir: str):
+    """k22's :func:`run_ivm_stream` step — a WRITE-AUDIT-PUBLISH gate
+    around :func:`_agg_mv_fold`: the merged MV is written to the next
+    generation's ``.tmp`` directory (off the serving path: no manifest
+    names it), the conservation audit runs against those staged bytes
+    (Σcnt must equal head total + Σsign over the batch — a batch whose
+    rows matched nothing, or double-applied, misses it), and only a
+    passing batch is returned for the runner to commit — whose commit
+    finds the durable tmp and publishes it by O(1) rename + manifest
+    link, so the audited bytes ARE the published bytes. A failing batch
+    quarantines (renamed to ``.quarantine-t<trigger>``), the head NEVER
+    serves it, and the stream continues with the next trigger. Every
+    verdict appends to AUDIT.json (write-temp + rename)."""
     import json
-    import os
 
-    from dask_pipes_spark.operators.pipeline_ops import (
-        _agg_mv_qty,
-        _agg_mv_rev,
-    )
-    from dask_pipes_spark.session import publish_generation
-
-    bridge_path = os.path.join(index_dir, "bridge")
     audit_path = os.path.join(index_dir, "AUDIT.json")
 
-    def _record(entry: dict) -> None:
-        audits = []
-        if os.path.exists(audit_path):
-            audits = json.load(open(audit_path))
-        audits.append(entry)
-        with open(audit_path + ".tmp", "w") as fh:
-            json.dump(audits, fh)
-        os.replace(audit_path + ".tmp", audit_path)
-
-    def _apply(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(batch_df, heads):
         ss = batch_df.sparkSession
-        man = json.load(open(os.path.join(index_dir, "VACUUM.json")))
-        cur = man["by"]
-        mv = ss.read.schema(_K19_MV_SCHEMA).parquet(
-            os.path.join(index_dir, cur)
-        )
-        bridge = ss.read.schema("o_orderkey bigint, n_name string").parquet(
-            bridge_path
-        )
-        head_total, = mv.agg(F.sum("cnt")).collect()[0]
-        head_total = head_total or 0
-        batch_signed, = batch_df.agg(F.sum("sign")).collect()[0]
-        partial = (
-            F.broadcast(batch_df)
-            .join(bridge, F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy("n_name")
-            .agg(
-                F.sum("sign").alias("cnt"),
-                F.sum(F.col("sign") * _agg_mv_rev())
-                .cast("decimal(38,6)")
-                .alias("rev"),
-                F.sum(F.col("sign") * _agg_mv_qty())
-                .cast("decimal(38,6)")
-                .alias("qty"),
-            )
-        )
-        merged = (
-            mv.unionAll(partial)
-            .groupBy("n_name")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("rev").alias("rev"),
-                F.sum("qty").alias("qty"),
-            )
-            .filter(F.col("cnt") > 0)
-        )
-        nxt_name = f"agg_mv-g{int(cur.rsplit('g', 1)[1]) + 1:03d}"
-        staged = os.path.join(index_dir, f"{nxt_name}.staged-b{batch_id}")
-        merged.coalesce(1).write.mode("overwrite").parquet(staged)
-        staged_total, = (
-            ss.read.schema(_K19_MV_SCHEMA).parquet(staged)
+        cur = heads["agg_mv-"]
+        nxt = _next_generation(cur)
+        staged = os.path.join(index_dir, nxt + ".tmp")
+        head_total, = (
+            _read_gen(ss, index_dir, cur, _K19_MV_SCHEMA)
             .agg(F.sum("cnt"))
             .collect()[0]
         )
+        batch_signed, = batch_df.agg(F.sum("sign")).collect()[0]
+        _agg_mv_fold(batch_df, index_dir, cur).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(staged)
+        staged_mv = ss.read.schema(_K19_MV_SCHEMA).parquet(staged)
+        staged_total, = staged_mv.agg(F.sum("cnt")).collect()[0]
         staged_total = staged_total or 0
-        expected = head_total + (batch_signed or 0)
+        expected = (head_total or 0) + (batch_signed or 0)
         ok = staged_total == expected
-        _record(
+        audits = []
+        if os.path.exists(audit_path):
+            with open(audit_path) as fh:
+                audits = json.load(fh)
+        trigger = len(audits)
+        audits.append(
             {
-                "batch_id": batch_id,
+                "trigger": trigger,
+                "generation": nxt,
                 "expected_total": expected,
                 "staged_total": staged_total,
                 "verdict": "publish" if ok else "quarantine",
             }
         )
+        with open(audit_path + ".tmp", "w") as fh:
+            json.dump(audits, fh)
+        os.replace(audit_path + ".tmp", audit_path)
         if ok:
-            publish_generation(
-                index_dir, staged, nxt_name, superseded=[cur]
-            )
-        else:
-            os.replace(staged, staged.replace(".staged-", ".quarantine-"))
+            return {"agg_mv-": staged_mv}
+        os.replace(staged, os.path.join(index_dir, f"{nxt}.quarantine-t{trigger}"))
+        return {}
 
-    schema = spark.read.parquet(os.path.join(index_dir, "cdc")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(index_dir, "cdc"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation", os.path.join(index_dir, "_stream_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q, timeout)
+    return step
 
 
 @query(
@@ -1625,8 +1530,9 @@ def k22_stream_wap(spark, sf_dir):
     inside k19's continuous-MV runtime; Iceberg WAP applied per
     micro-batch, the shape a production ingest pipeline actually runs):
     each trigger's merged MV lands STAGED, the conservation audit runs
-    against the staged bytes, and only a passing batch is promoted by
-    :func:`publish_generation`'s O(1) rename — so when a POISONED batch
+    against the staged bytes, and only a passing batch is promoted —
+    by the :func:`run_ivm_stream` commit's O(1) rename of exactly those
+    bytes (see :func:`_wap_step`) — so when a POISONED batch
     arrives mid-stream (FK-violating keys from the wrong environment,
     interleaved at position 2 of 5), it quarantines, the head keeps
     serving the last good generation, and the remaining good batches
@@ -1646,31 +1552,17 @@ def k22_stream_wap(spark, sf_dir):
     of k19's maintenance — constant in the fact volume — and buys the
     property restore (p22) only approximates after the fact: bad data
     is never readable, at any point, by any reader."""
-    import json
-    import os
-
-    from dask_pipes_spark.session import ensure_index
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_k22_wap_stream_{tag}")
 
     def _stage(d: str) -> None:
         _stage_k22_state(spark, sf_dir, d)
-        _run_wap_stream(spark, d)
+        run_ivm_stream(spark, d, _wap_step(spark, d), target_files=1)
 
     # fingerprint the whole fixture dir: the staged state derives from
     # lineitem AND the dimension chain (orders/customer/nation)
     idx = ensure_index(base, sf_dir, version="k22-v1", build=_stage)
-    man = json.load(open(os.path.join(idx, "VACUUM.json")))
-    mv = spark.read.schema(_K19_MV_SCHEMA).parquet(
-        os.path.join(idx, man["by"])
-    )
-    return mv.select(
-        "n_name",
-        F.col("cnt").alias("n_items"),
-        F.col("rev").cast("double").alias("sum_revenue"),
-        F.col("qty").cast("double").alias("sum_qty"),
-    )
+    return _serve_agg_mv(spark, idx)
 
 
 # --- k23: streaming IVF+PQ maintenance with pruned serving (r10, re-based r11) -
@@ -1690,8 +1582,6 @@ def _stage_k23_state(spark, sf_dir: str, d: str) -> None:
     (``%9==5``, op='I') and tombstones (``%11==3``, op='D'). Slicing by
     ``vec_id % 4`` keeps key sets disjoint so the fold is commutative
     across any batching."""
-    import os
-
     from dask_pipes_spark.operators.llm_ext import (
         _ivf_corpus_and_centroids,
         ivf_assign,
@@ -1700,10 +1590,6 @@ def _stage_k23_state(spark, sf_dir: str, d: str) -> None:
         _pq_assign,
         _pq_corpus,
         _pq_train,
-    )
-    from dask_pipes_spark.session import (
-        checkpoint_index_generations,
-        collect_local,
     )
 
     vecs_old, cent = _ivf_corpus_and_centroids(
@@ -1742,30 +1628,21 @@ def _stage_k23_state(spark, sf_dir: str, d: str) -> None:
     _stage_cdc_slices(cdc, d, F.col("vec_id"))
 
 
-def _run_pq_ivm_stream(
-    spark, index_dir: str, max_files_per_trigger: int = 1, timeout: int = 300
-) -> None:
-    """Drain the embedding CDC through the streaming runtime, maintaining
-    BOTH IVFADC tables by generations: each micro-batch anti-joins its
-    tombstones against the CURRENT pair, coarse-assigns its insert
-    vectors map-side (literal-codebook expression) and PQ-encodes their
-    subvectors against the FIXED codebooks (l67's algebra — both
-    quantizers read per batch from the persisted artifacts, never
-    retrained), then lands the merged pair under ONE manifest
-    transaction (:func:`checkpoint_index_generations` — a reader can
-    never observe assignments moved without codes)."""
-    import json
-    import os
-
+def _pq_step(spark, index_dir: str):
+    """k23's :func:`run_ivm_stream` step — l67's algebra on BOTH IVFADC
+    tables per window: tombstones anti-join out of the CURRENT pair,
+    insert vectors are coarse-assigned map-side (literal-codebook
+    expression) and their subvectors PQ-encoded against the FIXED
+    codebooks — both quantizers read from the persisted artifacts, never
+    retrained. The pair lands under one manifest link, so a reader can
+    never observe assignments moved without codes."""
     from dask_pipes_spark.operators.llm_ext import ivf_assign
     from dask_pipes_spark.operators.vectors import (
         _RIVF_CENT_SCHEMA,
+        _RIVF_CENTS_SCHEMA,
+        _RIVF_CODES_SCHEMA,
         _pq_assign,
         _pq_subspaces,
-    )
-    from dask_pipes_spark.session import (
-        head_bys,
-        checkpoint_index_generations,
     )
 
     cent_rows = (
@@ -1774,61 +1651,27 @@ def _run_pq_ivm_stream(
         .collect()
     )
 
-    def _apply(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(batch_df, heads):
         ss = batch_df.sparkSession
-        bys = head_bys(index_dir)
-        cur_a = [b for b in bys if b.startswith("assignments-")][-1]
-        cur_c = [b for b in bys if b.startswith("codes-")][-1]
-        cents = ss.read.schema("s int, cid int, cv array<double>").parquet(
-            os.path.join(index_dir, "codebooks")
+        cents = _read_gen(ss, index_dir, "codebooks", _RIVF_CENTS_SCHEMA)
+        assignments = _read_gen(
+            ss, index_dir, heads["assignments-"], _K23_ASSIGN_SCHEMA
         )
-        assignments = ss.read.schema(_K23_ASSIGN_SCHEMA).parquet(
-            os.path.join(index_dir, cur_a)
-        )
-        codes = ss.read.schema("vec_id bigint, s int, code int").parquet(
-            os.path.join(index_dir, cur_c)
-        )
-        d_del = batch_df.filter(F.col("op") == "D").select("vec_id")
-        d_ins = batch_df.filter(F.col("op") == "I").select(
-            "vec_id", "e", "nrm"
-        )
-        a_m = assignments.join(
-            F.broadcast(d_del), "vec_id", "left_anti"
-        ).unionAll(
-            ivf_assign(d_ins, cent_rows, nprobe=1).select("vec_id", "bucket")
-        )
+        codes = _read_gen(ss, index_dir, heads["codes-"], _RIVF_CODES_SCHEMA)
+        d_del, d_ins = _cdc_split(batch_df)
         sub_ins = _pq_subspaces(d_ins).select("vec_id", "s", "sv")
-        c_m = codes.join(
-            F.broadcast(d_del), "vec_id", "left_anti"
-        ).unionAll(_pq_assign(sub_ins, cents))
-        na = int(cur_a.rsplit("g", 1)[1]) + 1
-        nc = int(cur_c.rsplit("g", 1)[1]) + 1
-        checkpoint_index_generations(
-            index_dir,
-            [
-                (a_m, [cur_a], f"assignments-g{na:03d}"),
-                (c_m, [cur_c], f"codes-g{nc:03d}"),
-            ],
-            target_files=8,
-        )
+        return {
+            "assignments-": _drop_deleted(assignments, d_del).unionAll(
+                ivf_assign(d_ins, cent_rows, nprobe=1).select(
+                    "vec_id", "bucket"
+                )
+            ),
+            "codes-": _drop_deleted(codes, d_del).unionAll(
+                _pq_assign(sub_ins, cents)
+            ),
+        }
 
-    schema = spark.read.parquet(os.path.join(index_dir, "cdc")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(os.path.join(index_dir, "cdc"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation", os.path.join(index_dir, "_stream_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q, timeout)
+    return step
 
 
 from dask_pipes_spark.operators.vectors import (  # noqa: E402
@@ -1869,26 +1712,24 @@ def k23_stream_pq_ivm(spark, sf_dir):
     table and 4 B/subspace codes only. The full-scan ADC spec survives
     as l55/l63/l67/l72 — the correctness baseline, exactly like l3 for
     brute-force cosine."""
-    import json
-    import os
-
     from dask_pipes_spark.operators.llm_ext import (
         _ivf_corpus_and_centroids,
         ivf_assign,
     )
     from dask_pipes_spark.operators.vectors import (
         _RIVF_CENT_SCHEMA,
+        _RIVF_CENTS_SCHEMA,
+        _RIVF_CODES_SCHEMA,
         _pq_pruned_probe_topk,
         _pq_subspaces,
     )
-    from dask_pipes_spark.session import ensure_index, head_bys
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_k23_pq_stream_{tag}")
 
     def _stage(d: str) -> None:
         _stage_k23_state(spark, sf_dir, d)
-        _run_pq_ivm_stream(spark, d, max_files_per_trigger=1)
+        run_ivm_stream(spark, d, _pq_step(spark, d))
 
     idx = ensure_index(
         base,
@@ -1896,23 +1737,11 @@ def k23_stream_pq_ivm(spark, sf_dir):
         version="k23-v2",
         build=_stage,
     )
-    bys = head_bys(idx)
-    head_a = [b for b in bys if b.startswith("assignments-")][-1]
-    head_c = [b for b in bys if b.startswith("codes-")][-1]
-    cent_rows = (
-        spark.read.schema(_RIVF_CENT_SCHEMA)
-        .parquet(os.path.join(idx, "centroids"))
-        .collect()
-    )
-    cents = spark.read.schema("s int, cid int, cv array<double>").parquet(
-        os.path.join(idx, "codebooks")
-    )
-    assignments = spark.read.schema(_K23_ASSIGN_SCHEMA).parquet(
-        os.path.join(idx, head_a)
-    )
-    codes = spark.read.schema("vec_id bigint, s int, code int").parquet(
-        os.path.join(idx, head_c)
-    )
+    heads = head_generations(idx)
+    cent_rows = _read_gen(spark, idx, "centroids", _RIVF_CENT_SCHEMA).collect()
+    cents = _read_gen(spark, idx, "codebooks", _RIVF_CENTS_SCHEMA)
+    assignments = _read_gen(spark, idx, heads["assignments-"], _K23_ASSIGN_SCHEMA)
+    codes = _read_gen(spark, idx, heads["codes-"], _RIVF_CODES_SCHEMA)
     # queries: every 100th FINAL-corpus vector — embeddings read for the
     # query slice only (the l63 discipline)
     qvecs, _ = _ivf_corpus_and_centroids(
@@ -1938,8 +1767,6 @@ def _stage_k24_state(spark, sf_dir: str, d: str) -> None:
     live chains in one VACUUM history, the multi-table shape l78
     established), and the embedding CDC as k20's 4-file stream of raw
     vector inserts (``%9==5``) and tombstones (``%11==3``)."""
-    import os
-
     from dask_pipes_spark.operators.llm_ext import (
         _ivf_corpus_and_centroids,
         ivf_assign,
@@ -1947,10 +1774,6 @@ def _stage_k24_state(spark, sf_dir: str, d: str) -> None:
     from dask_pipes_spark.operators.vectors import (
         _RIVF_ASSIGN_SCHEMA,
         _residual_train,
-    )
-    from dask_pipes_spark.session import (
-        checkpoint_index_generation,
-        collect_local,
     )
 
     vecs_old, cent = _ivf_corpus_and_centroids(
@@ -1990,33 +1813,19 @@ def _stage_k24_state(spark, sf_dir: str, d: str) -> None:
     _stage_cdc_slices(cdc, d, F.col("vec_id"))
 
 
-def _run_residual_ivm_stream(
-    spark, index_dir: str, max_files_per_trigger: int = 1, timeout: int = 300
-) -> None:
-    """Drain the embedding CDC through the streaming runtime, maintaining
-    BOTH residual-IVFADC tables by generations: per micro-batch, l77's
-    merge (map-side coarse assignment of inserts, residual encode
+def _residual_step(spark, index_dir: str):
+    """k24's :func:`run_ivm_stream` step — l77's two-table merge per
+    window (map-side coarse assignment of inserts, residual encode
     against the pinned centroid, map-side PQ code assignment, broadcast
-    anti-join deletes on each table) runs against the CURRENT pair of
-    heads — resolved per table from the VACUUM history by name prefix —
-    and the window lands BOTH next generations under ONE manifest link
-    via :func:`checkpoint_index_generations` (round 11 — the atomic
-    multi-table commit replacing the r10 two-sequential-links shape
-    whose crash window needed a documented recovery ordering: now there
-    is no observable state where assignments moved and codes didn't)."""
-    import json
-    import os
-
+    anti-join deletes on each table) against the CURRENT pair of heads;
+    the runner lands BOTH next generations under ONE manifest link (no
+    observable state where assignments moved and codes didn't)."""
     from dask_pipes_spark.operators.vectors import (
         _RIVF_ASSIGN_SCHEMA,
         _RIVF_CENT_SCHEMA,
         _RIVF_CENTS_SCHEMA,
         _RIVF_CODES_SCHEMA,
         _residual_delta_merge,
-    )
-    from dask_pipes_spark.session import (
-        head_bys,
-        checkpoint_index_generations,
     )
 
     cent_rows = (
@@ -2025,58 +1834,21 @@ def _run_residual_ivm_stream(
         .collect()
     )
 
-    def _apply(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(batch_df, heads):
         ss = batch_df.sparkSession
-        bys = head_bys(index_dir)
-        cur_a = [b for b in bys if b.startswith("assignments-")][-1]
-        cur_c = [b for b in bys if b.startswith("codes-")][-1]
-        cent = ss.read.schema(_RIVF_CENT_SCHEMA).parquet(
-            os.path.join(index_dir, "centroids")
+        cent = _read_gen(ss, index_dir, "centroids", _RIVF_CENT_SCHEMA)
+        cents = _read_gen(ss, index_dir, "codebooks", _RIVF_CENTS_SCHEMA)
+        assignments = _read_gen(
+            ss, index_dir, heads["assignments-"], _RIVF_ASSIGN_SCHEMA
         )
-        cents = ss.read.schema(_RIVF_CENTS_SCHEMA).parquet(
-            os.path.join(index_dir, "codebooks")
-        )
-        assignments = ss.read.schema(_RIVF_ASSIGN_SCHEMA).parquet(
-            os.path.join(index_dir, cur_a)
-        )
-        codes = ss.read.schema(_RIVF_CODES_SCHEMA).parquet(
-            os.path.join(index_dir, cur_c)
-        )
-        d_del = batch_df.filter(F.col("op") == "D").select("vec_id")
-        d_ins = batch_df.filter(F.col("op") == "I").select(
-            "vec_id", "e", "nrm"
-        )
+        codes = _read_gen(ss, index_dir, heads["codes-"], _RIVF_CODES_SCHEMA)
+        d_del, d_ins = _cdc_split(batch_df)
         a_m, c_m = _residual_delta_merge(
             assignments, codes, d_ins, d_del, cent, cent_rows, cents
         )
-        na = int(cur_a.rsplit("g", 1)[1]) + 1
-        nc = int(cur_c.rsplit("g", 1)[1]) + 1
-        checkpoint_index_generations(
-            index_dir,
-            [
-                (a_m, [cur_a], f"assignments-g{na:03d}"),
-                (c_m, [cur_c], f"codes-g{nc:03d}"),
-            ],
-            target_files=8,
-        )
+        return {"assignments-": a_m, "codes-": c_m}
 
-    schema = spark.read.parquet(os.path.join(index_dir, "cdc")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(os.path.join(index_dir, "cdc"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation", os.path.join(index_dir, "_stream_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q, timeout)
+    return step
 
 
 @query("k24_stream_residual_ivm", oracle=_L77_ORACLE)
@@ -2105,9 +1877,6 @@ def k24_stream_residual_ivm(spark, sf_dir):
     broadcast anti-joins + two generation rewrites per window, for BOTH
     tables, with crash recovery = last durable generation pair + replay
     offset."""
-    import json
-    import os
-
     from dask_pipes_spark.operators.vectors import (
         _RIVF_ASSIGN_SCHEMA,
         _RIVF_CENT_SCHEMA,
@@ -2115,14 +1884,13 @@ def k24_stream_residual_ivm(spark, sf_dir):
         _RIVF_CODES_SCHEMA,
         _residual_probe,
     )
-    from dask_pipes_spark.session import ensure_index
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_k24_rivf_stream_{tag}")
 
     def _stage(d: str) -> None:
         _stage_k24_state(spark, sf_dir, d)
-        _run_residual_ivm_stream(spark, d, max_files_per_trigger=1)
+        run_ivm_stream(spark, d, _residual_step(spark, d))
 
     idx = ensure_index(
         base,
@@ -2130,24 +1898,12 @@ def k24_stream_residual_ivm(spark, sf_dir):
         version="k24-v2",
         build=_stage,
     )
-    from dask_pipes_spark.session import head_bys
-
-    bys = head_bys(idx)
-    head_a = [b for b in bys if b.startswith("assignments-")][-1]
-    head_c = [b for b in bys if b.startswith("codes-")][-1]
-    cent = spark.read.schema(_RIVF_CENT_SCHEMA).parquet(
-        os.path.join(idx, "centroids")
-    )
+    heads = head_generations(idx)
+    cent = _read_gen(spark, idx, "centroids", _RIVF_CENT_SCHEMA)
     cent_rows = cent.collect()
-    indexed = spark.read.schema(_RIVF_ASSIGN_SCHEMA).parquet(
-        os.path.join(idx, head_a)
-    )
-    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
-        os.path.join(idx, "codebooks")
-    )
-    codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
-        os.path.join(idx, head_c)
-    )
+    indexed = _read_gen(spark, idx, heads["assignments-"], _RIVF_ASSIGN_SCHEMA)
+    cents = _read_gen(spark, idx, "codebooks", _RIVF_CENTS_SCHEMA)
+    codes = _read_gen(spark, idx, heads["codes-"], _RIVF_CODES_SCHEMA)
     return _residual_probe(indexed, cent, cent_rows, cents, codes)
 
 
@@ -2172,20 +1928,13 @@ def k25_stream_gc(spark, sf_dir):
     the storage bill flat without a second scheduler entry; the age
     guard is what makes the same call safe when OTHER maintainers share
     the index (k25 is single-maintainer, so it uses zero)."""
-    import json
-    import os
-
-    from dask_pipes_spark.session import ensure_index
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_k25_gc_stream_{tag}")
 
     def _stage(d: str) -> None:
         _stage_k19_state(spark, sf_dir, d)
         # crash debris from a "previous run", planted deterministically
-        mv = spark.read.schema(_K19_MV_SCHEMA).parquet(
-            os.path.join(d, "agg_mv-g001")
-        )
+        mv = _read_gen(spark, d, "agg_mv-g001", _K19_MV_SCHEMA)
         mv.coalesce(1).write.parquet(os.path.join(d, "agg_mv-g001.tmp"))
         mv.coalesce(1).write.parquet(
             os.path.join(d, "agg_mv-g001.staged-crashed")
@@ -2193,21 +1942,13 @@ def k25_stream_gc(spark, sf_dir):
         mv.limit(1).coalesce(1).write.parquet(
             os.path.join(d, "agg_mv-g000.quarantine-bad")
         )
-        _run_agg_mv_stream(
-            spark, d, max_files_per_trigger=1, gc_each_window=True
+        run_ivm_stream(
+            spark, d, _agg_mv_step(spark, d), target_files=1,
+            gc_each_window=True,
         )
 
     idx = ensure_index(base, sf_dir, version="k25-v1", build=_stage)
-    man = json.load(open(os.path.join(idx, "VACUUM.json")))
-    mv = spark.read.schema(_K19_MV_SCHEMA).parquet(
-        os.path.join(idx, man["by"])
-    )
-    return mv.select(
-        "n_name",
-        F.col("cnt").alias("n_items"),
-        F.col("rev").cast("double").alias("sum_revenue"),
-        F.col("qty").cast("double").alias("sum_qty"),
-    )
+    return _serve_agg_mv(spark, idx)
 
 
 @query("k26_stream_compaction", oracle=_K_ORACLES["k19_stream_agg_ivm"])
@@ -2238,32 +1979,18 @@ def k26_stream_compaction(spark, sf_dir):
     compaction a maintainer that commits every few seconds for a year
     never pays it — per-commit metadata cost is FLAT forever, matching
     Delta's every-10-commits log checkpoint cadence, here every window."""
-    import json
-    import os
-
-    from dask_pipes_spark.session import ensure_index
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_k26_compact_stream_{tag}")
 
     def _stage(d: str) -> None:
         _stage_k19_state(spark, sf_dir, d)
-        _run_agg_mv_stream(
-            spark, d, max_files_per_trigger=1,
+        run_ivm_stream(
+            spark, d, _agg_mv_step(spark, d), target_files=1,
             gc_each_window=True, compact_keep_tail=1,
         )
 
     idx = ensure_index(base, sf_dir, version="k26-v1", build=_stage)
-    man = json.load(open(os.path.join(idx, "VACUUM.json")))
-    mv = spark.read.schema(_K19_MV_SCHEMA).parquet(
-        os.path.join(idx, man["by"])
-    )
-    return mv.select(
-        "n_name",
-        F.col("cnt").alias("n_items"),
-        F.col("rev").cast("double").alias("sum_revenue"),
-        F.col("qty").cast("double").alias("sum_qty"),
-    )
+    return _serve_agg_mv(spark, idx)
 
 
 def _stage_k27_state(spark, sf_dir: str, d: str) -> None:
@@ -2278,8 +2005,6 @@ def _stage_k27_state(spark, sf_dir: str, d: str) -> None:
     (inserts ``%9==5`` with raw vectors, tombstones ``%11==3``).
     Slicing by ``vec_id % 4`` keeps key sets disjoint so the fold is
     commutative across any batching."""
-    import os
-
     from dask_pipes_spark.operators.vectors import (
         _coarse_kmeans_assign,
         _coarse_kmeans_train,
@@ -2288,7 +2013,6 @@ def _stage_k27_state(spark, sf_dir: str, d: str) -> None:
         _pq_train,
         _sqrt_k,
     )
-    from dask_pipes_spark.session import checkpoint_index_generations
 
     v, sub = _pq_corpus(spark, sf_dir)
     train = v.filter(F.col("vec_id") % 9 != 5)
@@ -2317,89 +2041,44 @@ def _stage_k27_state(spark, sf_dir: str, d: str) -> None:
     _stage_cdc_slices(cdc, d, F.col("vec_id"))
 
 
-def _run_kivfpq_ivm_stream(
-    spark, index_dir: str, max_files_per_trigger: int = 1, timeout: int = 300
-) -> None:
-    """Drain the embedding CDC through the streaming runtime against the
-    CORPUS-SIZED k-means quantizers: each micro-batch resolves all four
-    table heads via :func:`head_bys` (compaction-proof), anti-joins its
-    tombstones, coarse-assigns its insert vectors against the persisted
-    K=⌈√N⌉ codebook (broadcast crossJoin — map-side at any K that fits
-    a broadcast, which √N keeps true to 10¹¹ vectors) and PQ-encodes
-    their subvectors against the FIXED PQ codebooks, then lands the
-    merged (assignments, codes) pair under ONE manifest transaction.
-    The quantizer generations stay heads — retraining is l85's 4-table
-    transaction on the slow cadence, never the stream's job."""
-    import json
-    import os
-
+def _kivfpq_step(spark, index_dir: str):
+    """k27's :func:`run_ivm_stream` step against the CORPUS-SIZED k-means
+    quantizers: tombstones anti-join out of the CURRENT pair, insert
+    vectors are coarse-assigned against the persisted K=⌈√N⌉ codebook
+    head (broadcast crossJoin — map-side at any K that fits a broadcast,
+    which √N keeps true to 10¹¹ vectors) and PQ-encoded against the
+    FIXED PQ codebook head. The quantizer generations stay heads —
+    retraining is l85's 4-table transaction on the slow cadence, never
+    the stream's job."""
     from dask_pipes_spark.operators.vectors import (
         _CK_CENTS_SCHEMA,
+        _RIVF_CENTS_SCHEMA,
+        _RIVF_CODES_SCHEMA,
         _coarse_kmeans_assign,
         _pq_assign,
         _pq_subspaces,
     )
-    from dask_pipes_spark.session import (
-        checkpoint_index_generations,
-        head_bys,
-    )
 
-    def _apply(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(batch_df, heads):
         ss = batch_df.sparkSession
-        bys = head_bys(index_dir)
-        head = {
-            p: [b for b in bys if b.startswith(p)][-1]
-            for p in ("centroids-", "codebooks-", "assignments-", "codes-")
-        }
-        ccents = ss.read.schema(_CK_CENTS_SCHEMA).parquet(
-            os.path.join(index_dir, head["centroids-"])
+        ccents = _read_gen(ss, index_dir, heads["centroids-"], _CK_CENTS_SCHEMA)
+        cents = _read_gen(ss, index_dir, heads["codebooks-"], _RIVF_CENTS_SCHEMA)
+        assignments = _read_gen(
+            ss, index_dir, heads["assignments-"], _K23_ASSIGN_SCHEMA
         )
-        cents = ss.read.schema("s int, cid int, cv array<double>").parquet(
-            os.path.join(index_dir, head["codebooks-"])
-        )
-        assignments = ss.read.schema(_K23_ASSIGN_SCHEMA).parquet(
-            os.path.join(index_dir, head["assignments-"])
-        )
-        codes = ss.read.schema("vec_id bigint, s int, code int").parquet(
-            os.path.join(index_dir, head["codes-"])
-        )
-        d_del = batch_df.filter(F.col("op") == "D").select("vec_id")
-        d_ins = batch_df.filter(F.col("op") == "I").select("vec_id", "e")
-        a_m = assignments.join(
-            F.broadcast(d_del), "vec_id", "left_anti"
-        ).unionAll(_coarse_kmeans_assign(d_ins, ccents))
+        codes = _read_gen(ss, index_dir, heads["codes-"], _RIVF_CODES_SCHEMA)
+        d_del, d_ins = _cdc_split(batch_df, ("vec_id", "e"))
         sub_ins = _pq_subspaces(d_ins).select("vec_id", "s", "sv")
-        c_m = codes.join(
-            F.broadcast(d_del), "vec_id", "left_anti"
-        ).unionAll(_pq_assign(sub_ins, cents))
-        na = int(head["assignments-"].rsplit("g", 1)[1]) + 1
-        nc = int(head["codes-"].rsplit("g", 1)[1]) + 1
-        checkpoint_index_generations(
-            index_dir,
-            [
-                (a_m, [head["assignments-"]], f"assignments-g{na:03d}"),
-                (c_m, [head["codes-"]], f"codes-g{nc:03d}"),
-            ],
-            target_files=8,
-        )
+        return {
+            "assignments-": _drop_deleted(assignments, d_del).unionAll(
+                _coarse_kmeans_assign(d_ins, ccents)
+            ),
+            "codes-": _drop_deleted(codes, d_del).unionAll(
+                _pq_assign(sub_ins, cents)
+            ),
+        }
 
-    schema = spark.read.parquet(os.path.join(index_dir, "cdc")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(os.path.join(index_dir, "cdc"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation", os.path.join(index_dir, "_stream_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q, timeout)
+    return step
 
 
 from dask_pipes_spark.operators.vectors import _L84_ORACLE  # noqa: E402
@@ -2416,7 +2095,7 @@ def k27_stream_kivfpq_ivm(spark, sf_dir):
     persisted quantizers — broadcast anti-join deletes, map-side coarse
     assignment against the √N-cell codebook, map-side PQ encode — with
     every window landing the pair under one atomic manifest
-    transaction, heads resolved compaction-proof via ``head_bys``.
+    transaction, heads resolved compaction-proof via ``head_generations``.
 
     Serving is l84's pruned composition from persisted state; the
     oracle is l84's composed from-scratch twin VERBATIM — the streamed
@@ -2429,17 +2108,14 @@ def k27_stream_kivfpq_ivm(spark, sf_dir):
     anti-joins + the paired generation rewrite; serving cost is the
     measured flat-per-query √N economics (SCALING.md round-12 table:
     11 ms/query at sf10 vs 399 ms for the fixed-K path)."""
-    import os
-
     from dask_pipes_spark.operators.vectors import _serve_kivfpq
-    from dask_pipes_spark.session import ensure_index
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_k27_kivfpq_stream_{tag}")
 
     def _stage(d: str) -> None:
         _stage_k27_state(spark, sf_dir, d)
-        _run_kivfpq_ivm_stream(spark, d, max_files_per_trigger=1)
+        run_ivm_stream(spark, d, _kivfpq_step(spark, d))
 
     idx = ensure_index(
         base,

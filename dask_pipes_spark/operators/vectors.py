@@ -1696,7 +1696,6 @@ def l81_ivfpq_pruned_checkpoint(spark, sf_dir):
     reads only those plus the two broadcast-size quantizers. One commit
     point for the pair is what lets a reader resolve a CONSISTENT
     (assignments, codes) snapshot with no cross-table fence."""
-    import json
     import os
 
     from dask_pipes_spark.operators.llm_ext import (
@@ -1704,9 +1703,9 @@ def l81_ivfpq_pruned_checkpoint(spark, sf_dir):
         ivf_assign,
     )
     from dask_pipes_spark.session import (
-        head_bys,
         checkpoint_index_generations,
         ensure_index,
+        head_generations,
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
@@ -1764,9 +1763,8 @@ def l81_ivfpq_pruned_checkpoint(spark, sf_dir):
         version="ivfpq-pruned-v1",
         build=_stage,
     )
-    bys = head_bys(idx)
-    head_a = [b for b in bys if b.startswith("assignments-")][-1]
-    head_c = [b for b in bys if b.startswith("codes-")][-1]
+    heads = head_generations(idx)
+    head_a, head_c = heads["assignments-"], heads["codes-"]
     cent_rows = (
         spark.read.schema(_RIVF_CENT_SCHEMA)
         .parquet(os.path.join(idx, "centroids"))
@@ -2260,7 +2258,7 @@ def _stage_l84_lifecycle(spark, sf_dir: str, d: str) -> None:
 
 def _serve_kivfpq(spark, sf_dir: str, idx: str, qpred=None):
     """Shared l84/l85 serving path: resolve all FOUR table heads by
-    prefix from :func:`head_bys` (checkpoint.heads + tail links — the
+    prefix from :func:`head_generations` (checkpoint.heads + tail links — the
     round-12 contract, since quantizers commit orders of magnitude less
     often than the pair and their links are the first to fold), then run
     the pruned IVFADC probe entirely from persisted state: query vectors
@@ -2268,13 +2266,9 @@ def _serve_kivfpq(spark, sf_dir: str, idx: str, qpred=None):
     buckets via the persisted inverted file; ADC scores only those."""
     import os
 
-    from dask_pipes_spark.session import head_bys
+    from dask_pipes_spark.session import head_generations
 
-    bys = head_bys(idx)
-    head = {
-        p: [b for b in bys if b.startswith(p)][-1]
-        for p in ("centroids-", "codebooks-", "assignments-", "codes-")
-    }
+    head = head_generations(idx)
     ccents = spark.read.schema(_CK_CENTS_SCHEMA).parquet(
         os.path.join(idx, head["centroids-"])
     )
@@ -2335,7 +2329,7 @@ def l84_kmeans_ivfpq_serving(spark, sf_dir):
       FIXED quantizers (map-side assignment/encode, broadcast anti-join
       deletes) and the pair commits atomically — l77/l81's algebra,
       unchanged, because only the codebook CONTENT differs;
-    - **serve**: heads resolved via :func:`head_bys` (compaction-proof);
+    - **serve**: heads resolved via :func:`head_generations` (compaction-proof);
       the probe touches the query vectors, two broadcast-size
       quantizers, and ~N·nprobe/K candidate rows — per-query work ∝ √N
       when K tracks the corpus, the sub-linear serving economics the
@@ -2570,14 +2564,10 @@ def l86_retrain_staleness(spark, sf_dir):
     needs no side-channel bookkeeping."""
     import os
 
-    from dask_pipes_spark.session import head_bys
+    from dask_pipes_spark.session import head_generations
 
     idx = _l84_index(spark, sf_dir)
-    bys = head_bys(idx)
-    head = {
-        p: [b for b in bys if b.startswith(p)][-1]
-        for p in ("centroids-", "assignments-")
-    }
+    head = head_generations(idx)
     ccents = spark.read.schema(_CK_CENTS_SCHEMA).parquet(
         os.path.join(idx, head["centroids-"])
     )
@@ -2667,7 +2657,6 @@ def l82_pair_time_travel(spark, sf_dir):
     retention window; the single-link resolution is what an Iceberg
     multi-table transaction's snapshot gives you, here for index
     state."""
-    import json
     import os
 
     from dask_pipes_spark.operators.llm_ext import (
@@ -2676,6 +2665,7 @@ def l82_pair_time_travel(spark, sf_dir):
     )
     from dask_pipes_spark.session import (
         _link_bys,
+        _load_manifest,
         checkpoint_index_generations,
         ensure_index,
     )
@@ -2738,7 +2728,7 @@ def l82_pair_time_travel(spark, sf_dir):
         version="pair-travel-v1",
         build=_stage,
     )
-    man = json.load(open(os.path.join(idx, "VACUUM.json")))
+    man = _load_manifest(idx)
     pair_links = [h for h in man["history"] if len(_link_bys(h)) == 2]
     asof = pair_links[-2]  # the previous pair — ONE link names both tables
     head_a, head_c = _link_bys(asof)

@@ -222,65 +222,33 @@ def checkpoint_index_generation(
     target_files: int = 1,
     retain: int = 0,
 ) -> str:
-    """Write-back half of the ANN index lifecycle (round 8): persist a
+    """Write-back half of the index lifecycle (round 8): persist a
     delta-maintained index table as a fresh GENERATION and vacuum the
-    state it supersedes — the k17/k18 compact→swap→manifest→vacuum
-    protocol applied to index state instead of Avro landing files.
+    state it supersedes. This is a one-move
+    :func:`checkpoint_index_generations` transaction, so the single-table
+    commit shares the multi-table protocol: durable ``<gen>.tmp`` first,
+    rename + manifest link under one commit lock, vacuum last, resume
+    from every kill point, and the second-lock re-check that turns a
+    same-args racing twin into a no-op instead of a failed rename.
 
     Without this, every probe over a delta-maintained index re-pays the
     anti-join + union merge (l65/l67) and the delta feeds accumulate
-    unboundedly. The ordering discipline is the one k18 pins: (1) the
-    compacted generation is durable in a scratch directory FIRST,
-    (2) ``os.replace`` renames it into the index atomically — each
-    checkpoint gets a FRESH generation name, so the target never exists
-    and a reader listing the index mid-checkpoint sees old state or new,
-    never a torn mix (a same-name RETRY after a crash first renames the
-    stale target aside, so the only non-atomic window is on a path that
-    was already known-torn), (3) the vacuum manifest APPENDS this
-    supersession link to its ``history`` (the full chain survives every
-    checkpoint; ``superseded``/``by`` mirror the latest link), (4) only
-    THEN are the superseded tables deleted. A crash between (2) and (4)
-    leaves both copies plus the manifest — recoverable, never lossy.
-    ``coalesce`` (not repartition) collapses to ``target_files`` — the
-    write-back is an IO rewrite; rows never move between executors by key.
-
-    Retention (round 9, the r8 verdict's item 5): ``retain`` keeps the N
-    most recent SUPERSEDED generations on disk for time-travel/rollback —
-    the Delta/Iceberg retention-window default. A "generation" is any
-    name that appears as a prior history link's ``by``; staged feeds and
-    original tables are never retained (a feed kept past its vacuum
-    could be replayed — the exact double-apply the protocol exists to
-    prevent). Each checkpoint re-evaluates the window: retained
-    generations that fall out of it are swept, and the manifest's
-    ``retained`` list names the readable history — a reader pinned to a
-    retained generation keeps working while newer ones land (test-
-    pinned). ``retain=0`` (default) deletes superseded state immediately,
-    the pre-round-9 behavior.
+    unboundedly. ``coalesce`` (not repartition) collapses to
+    ``target_files`` — the write-back is an IO rewrite; rows never move
+    between executors by key. ``retain`` is the time-travel window (see
+    :func:`checkpoint_index_generations`).
 
     100 TB: this is the nightly index compaction — cost O(index) IO once,
     against the per-probe merge tax and unbounded delta growth it
-    retires; on object storage step (2) becomes the table format's atomic
-    metadata swap (Iceberg snapshot / Delta log commit). Returns the
-    final generation path."""
-    import json
-    import shutil
-
-    tmp = os.path.join(index_dir, generation + ".tmp")
-    final = os.path.join(index_dir, generation)
-    resumed = _resume_generation(index_dir, generation, superseded, retain)
-    if resumed is not None:
-        return resumed
-    if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
-        # no durable prior compaction: write one. A tmp WITH _SUCCESS is the
-        # compact-done/swap-not-done torn state — the compaction is complete
-        # by Spark's commit marker and this same-args retry reuses it
-        # instead of re-paying the write (round 10, resumability).
-        shutil.rmtree(tmp, ignore_errors=True)  # torn partial write
-        maintained.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-    with _commit_lock(index_dir):  # metadata transition is one critical section
-        os.replace(tmp, final)
-        _append_vacuum_link(index_dir, superseded, generation, retain)
-    return final
+    retires; on object storage the rename becomes the table format's
+    atomic metadata swap (Iceberg snapshot / Delta log commit). Returns
+    the final generation path."""
+    return checkpoint_index_generations(
+        index_dir,
+        [(maintained, superseded, generation)],
+        retain=retain,
+        target_files=target_files,
+    )[0]
 
 
 def checkpoint_index_generations(
@@ -298,14 +266,15 @@ def checkpoint_index_generations(
     and another's didn't. This replaces the two sequential
     :func:`checkpoint_index_generation` calls k24/l78 used, whose crash
     window between the calls was recoverable only by a documented
-    ordering convention (assignments first, then codes).
+    ordering convention (assignments first, then codes). It is the only
+    implementation of the generation commit: the single-table
+    :func:`checkpoint_index_generation` is a one-move call of it.
 
-    Protocol (the single-table discipline, vectorized):
+    Protocol:
 
     1. each move's compaction is made durable in ``<gen>.tmp`` FIRST
        (Spark ``_SUCCESS`` marker = durable; a same-args retry reuses a
-       durable tmp instead of recomputing — same resumability contract
-       as the single-table path);
+       durable tmp instead of recomputing);
     2. under ONE :class:`_commit_lock` critical section, every tmp is
        renamed into place (``os.replace`` per table — atomic each; a
        kill between renames leaves finals the manifest does not name,
@@ -315,6 +284,18 @@ def checkpoint_index_generations(
        before it, readers see the old head pair; after it, the new pair;
     4. vacuum of all superseded state (the retention window applies to
        the union, supersession-ordered as usual).
+
+    Retention (round 9, the r8 verdict's item 5): ``retain`` keeps the N
+    most recent SUPERSEDED generations on disk for time-travel/rollback —
+    the Delta/Iceberg retention-window default. A "generation" is any
+    name that appears as a prior history link's ``by``; staged feeds and
+    original tables are never retained (a feed kept past its vacuum
+    could be replayed — the exact double-apply the protocol exists to
+    prevent). Each commit re-evaluates the window: retained generations
+    that fall out of it are swept, and the manifest's ``retained`` list
+    names the readable history — a reader pinned to a retained
+    generation keeps working while newer ones land (test-pinned).
+    ``retain=0`` (default) deletes superseded state immediately.
 
     Resume: if any of the generations already appears in the manifest
     (they commit together, so any implies all), the transaction is
@@ -334,17 +315,19 @@ def checkpoint_index_generations(
         raise ValueError(f"duplicate generation names in one commit: {gens}")
     all_sup = sorted({n for _, sup, _ in moves for n in sup})
     finals = [os.path.join(index_dir, g) for g in gens]
-    with _commit_lock(index_dir):
+
+    def _sweep_if_committed() -> bool:
+        # one link commits all moves, so any committed gen implies all
         manifest = _load_manifest(index_dir)
-        committed = set(_ckpt_heads(manifest)) | {
-            b for h in manifest.get("history", []) for b in _link_bys(h)
-        }
-        if committed & set(gens):  # one link commits all: any implies all
-            _sweep_unreferenced(
-                index_dir,
-                manifest.get("history", []),
-                manifest.get("retained", []),
-            )
+        if set(_manifest_bys(manifest)).isdisjoint(gens):
+            return False
+        _sweep_unreferenced(
+            index_dir, manifest.get("history", []), manifest.get("retained", [])
+        )
+        return True
+
+    with _commit_lock(index_dir):
+        if _sweep_if_committed():
             return finals
     # data plane outside the lock: make every move's compaction durable.
     # The moves are independent single-writer jobs on distinct tmp dirs, so
@@ -379,19 +362,9 @@ def checkpoint_index_generations(
         # check above released the lock before the data-plane writes, so a
         # concurrent same-args retry may have committed in between — both
         # would otherwise pass the first check and append the link twice
-        # (the `if not exists(final)` rename guard silences the crash the
-        # equivalent single-table race raises, so the duplicate would land
-        # silently). Any gen committed implies the whole transaction is.
-        manifest = _load_manifest(index_dir)
-        committed = set(_ckpt_heads(manifest)) | {
-            b for h in manifest.get("history", []) for b in _link_bys(h)
-        }
-        if committed & set(gens):
-            _sweep_unreferenced(
-                index_dir,
-                manifest.get("history", []),
-                manifest.get("retained", []),
-            )
+        # (the `if not exists(final)` rename guard lets the duplicate land
+        # silently)
+        if _sweep_if_committed():
             return finals
         for final in finals:
             if not os.path.exists(final):
@@ -427,6 +400,19 @@ def _load_manifest(index_dir: str) -> dict:
         return {}
 
 
+def _write_manifest(index_dir: str, manifest: dict) -> None:
+    """Commit ``manifest`` as ``VACUUM.json`` via write-temp + rename
+    (round 9, advice item): a truncate-then-write crashed mid-write would
+    leave a corrupt manifest, which :func:`_load_manifest` reads as ``{}``
+    — silently resetting the history. Callers hold the commit lock."""
+    import json
+
+    path = os.path.join(index_dir, "VACUUM.json")
+    with open(path + ".tmp", "w") as fh:
+        json.dump(manifest, fh)
+    os.replace(path + ".tmp", path)
+
+
 def _ckpt_heads(manifest: dict) -> list[str]:
     """Live generations recorded by a manifest compaction (round 11):
     folded history links vanish from ``history``, but any generation they
@@ -438,22 +424,38 @@ def _ckpt_heads(manifest: dict) -> list[str]:
     return list(ck.get("heads", []))
 
 
-def head_bys(index_dir: str) -> list[str]:
-    """Every generation the manifest has ever committed that is still
+def _manifest_bys(manifest: dict) -> list[str]:
+    """Every generation ``manifest`` has ever committed that is still
     derivable, in commit order — ``checkpoint.heads`` (live heads whose
     links :func:`compact_manifest` folded) followed by the tail links'
-    ``bys``. This is THE list serving readers must resolve heads from
-    (round 12, advice item): reading ``manifest['history']`` alone makes
-    ``[b for b in bys if b.startswith(p)][-1]`` raise IndexError — or
-    resolve a stale head — the moment compaction folds the newest link of
-    a table that commits less often than its siblings (tables do not move
-    in lockstep). Order is preserved across compaction (folded heads keep
-    their relative order, the tail follows), so newest-by-prefix stays
-    ``[-1]``."""
-    manifest = _load_manifest(index_dir)
+    ``bys``. Order is preserved across compaction (folded heads keep their
+    relative order, the tail follows), so the newest name per table is the
+    last one."""
     return _ckpt_heads(manifest) + [
         b for h in manifest.get("history", []) for b in _link_bys(h)
     ]
+
+
+def head_bys(index_dir: str) -> list[str]:
+    """:func:`_manifest_bys` of ``index_dir``'s manifest. Heads must be
+    resolved from this list, never from ``manifest['history']`` alone
+    (round 12, advice item): the history misses — or resolves stale — the
+    head of a table whose newest link compaction folded (tables do not
+    move in lockstep)."""
+    return _manifest_bys(_load_manifest(index_dir))
+
+
+def head_generations(index_dir: str) -> dict[str, str]:
+    """THE head resolver: the newest committed generation of every table,
+    keyed by its prefix — the name up to its ``g<NNN>`` suffix, e.g.
+    ``{"assignments-": "assignments-g004", "codes-": "codes-g004"}``.
+    Compaction-proof (it reads :func:`head_bys`); a later commit of a
+    prefix wins, so a resumed or restored name is the head again. Every
+    reader and maintainer in the package resolves heads here."""
+    heads: dict[str, str] = {}
+    for b in head_bys(index_dir):
+        heads[b.rsplit("g", 1)[0]] = b
+    return heads
 
 
 def _append_vacuum_link(
@@ -470,10 +472,8 @@ def _append_vacuum_link(
     (round 11): all names commit under ONE history link (``bys``) — the
     atomic multi-table transaction :func:`checkpoint_index_generations`
     rides."""
-    import json
     import shutil
 
-    manifest_path = os.path.join(index_dir, "VACUUM.json")
     manifest = _load_manifest(index_dir)
     history: list = manifest.get("history", [])
     gens = [generation] if isinstance(generation, str) else list(generation)
@@ -513,9 +513,7 @@ def _append_vacuum_link(
     # generation (a multi-table index like l78 checkpoints one `by` per
     # table) is never garbage. Compacted-away live generations
     # (checkpoint heads) count as prior generations too.
-    prior_gens = _ckpt_heads(manifest) + [
-        b for h in history[:-1] for b in _link_bys(h)
-    ]
+    prior_gens = _manifest_bys({**manifest, "history": history[:-1]})
     # retention window ordered by WHEN a generation was superseded, not by
     # when it was published (round 10): identical on a linear chain, but a
     # branch history interleaves publishes (a staged branch generation is
@@ -548,16 +546,10 @@ def _append_vacuum_link(
     # exactly the retention window (test-pinned)
     ref_protected = keep | set(_read_branches(index_dir).values())
     ever_superseded = {n for h in history for n in h["superseded"]}
-    # write-temp + os.replace (round 9, advice item): a truncate-then-write
-    # open('w') crashed mid-write leaves a corrupt manifest, and the next
-    # checkpoint's unreadable-manifest fallback silently resets history to
-    # [] — losing the full-chain guarantee step (3) exists to provide
     out = {**link, "history": history, "retained": sorted(keep)}
     if manifest.get("checkpoint"):  # round 11: compaction record survives
         out["checkpoint"] = manifest["checkpoint"]
-    with open(manifest_path + ".tmp", "w") as fh:
-        json.dump(out, fh)
-    os.replace(manifest_path + ".tmp", manifest_path)
+    _write_manifest(index_dir, out)
     for name in superseded:
         if name not in ref_protected:
             shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
@@ -570,23 +562,6 @@ def _append_vacuum_link(
             shutil.rmtree(os.path.join(index_dir, gen), ignore_errors=True)
 
 
-def _read_history(index_dir: str) -> tuple[list, list]:
-    """Read (history, retained) from ``VACUUM.json`` — empty on absence or
-    corruption (the manifest is written via temp+rename, so corruption
-    means no manifest was ever committed)."""
-    import json
-
-    manifest_path = os.path.join(index_dir, "VACUUM.json")
-    if not os.path.exists(manifest_path):
-        return [], []
-    try:
-        with open(manifest_path) as fh:
-            m = json.load(fh)
-        return m.get("history", []), m.get("retained", [])
-    except (OSError, ValueError):
-        return [], []
-
-
 def _sweep_unreferenced(index_dir: str, history: list, retained: list) -> list[str]:
     """Delete generations the manifest says are superseded and outside the
     retention window but which still exist on disk — the torn state a kill
@@ -597,9 +572,7 @@ def _sweep_unreferenced(index_dir: str, history: list, retained: list) -> list[s
     prove those are garbage from the manifest alone)."""
     import shutil
 
-    bys = _ckpt_heads(_load_manifest(index_dir)) + [
-        b for h in history for b in _link_bys(h)
-    ]
+    bys = _manifest_bys({**_load_manifest(index_dir), "history": history})
     ever_sup = {n for h in history for n in h["superseded"]}
     heads = {b for b in bys if b not in ever_sup}
     keep = heads | set(retained) | set(_read_branches(index_dir).values())
@@ -747,14 +720,7 @@ def delete_branch(index_dir: str, branch: str, retain: int = 0) -> str | None:
                 # live head may exist ONLY there — scanning tail links alone
                 # would skip the supersession link and leak the retired
                 # branch head as a forever-live unsweepable head
-                live = [
-                    b for b in _ckpt_heads(manifest) if _live_anchor(b)
-                ] + [
-                    b
-                    for h in history
-                    for b in _link_bys(h)
-                    if _live_anchor(b)
-                ]
+                live = [b for b in _manifest_bys(manifest) if _live_anchor(b)]
                 anchor = live[-1] if live else None
             if anchor is not None:
                 _append_vacuum_link(index_dir, [head], anchor, retain)
@@ -814,9 +780,7 @@ def gc_index_dir(
         manifest = _load_manifest(index_dir)
         history = manifest.get("history", [])
         retained = manifest.get("retained", [])
-        bys = _ckpt_heads(manifest) + [
-            b for h in history for b in _link_bys(h)
-        ]
+        bys = _manifest_bys(manifest)
         ever_sup = {n for h in history for n in h["superseded"]}
         branch_heads = set(_read_branches(index_dir).values())
         heads = {b for b in bys if b not in ever_sup} | branch_heads
@@ -875,8 +839,9 @@ def _resume_generation(
     index_dir: str, generation: str, superseded: list[str], retain: int
 ) -> str | None:
     """Same-args-retry resume (round 10): detect how far a killed prior
-    :func:`checkpoint_index_generation` / :func:`publish_generation` run
-    got and complete ONLY the remaining steps. Returns the final path if
+    :func:`publish_generation` run got and complete ONLY the remaining
+    steps (the checkpoint path resumes inside
+    :func:`checkpoint_index_generations`). Returns the final path if
     the generation was fully or partially committed (now completed), else
     ``None`` (fresh run — the caller proceeds from the top).
 
@@ -891,8 +856,6 @@ def _resume_generation(
       a complete build (``_SUCCESS``-committed), so the data is whole —
       append the manifest link + vacuum and return.
 
-    The third torn state (compact done / swap not done — ``<gen>.tmp``
-    with ``_SUCCESS``) is handled by the caller reusing the durable tmp.
     Contract: generation names are write-once — a retry carries the SAME
     logical content (the protocol every key follows: fresh name per
     checkpoint, retry only after a crash)."""
@@ -901,10 +864,7 @@ def _resume_generation(
         manifest = _load_manifest(index_dir)
         history = manifest.get("history", [])
         retained = manifest.get("retained", [])
-        committed = set(_ckpt_heads(manifest)) | {
-            b for h in history for b in _link_bys(h)
-        }
-        if generation in committed:
+        if generation in _manifest_bys(manifest):
             _sweep_unreferenced(index_dir, history, retained)
             return final
         if os.path.exists(final):
@@ -934,13 +894,14 @@ def expire_snapshots(
     100 TB: retention-by-count answers "how many rollback points";
     retention-by-age answers the compliance/storage-budget question
     ("keep 7 days") — real tables run both, so this engine does too."""
-    import json
     import shutil
     import time
 
     report: dict = {"expired": [], "kept": []}
     with _commit_lock(index_dir):
-        history, retained = _read_history(index_dir)
+        manifest = _load_manifest(index_dir)
+        history = manifest.get("history", [])
+        retained = manifest.get("retained", [])
         if not retained:
             return report
         branch_heads = set(_read_branches(index_dir).values())
@@ -985,13 +946,7 @@ def expire_snapshots(
             # admission rule exists to prevent. With the rewrite first, a
             # crash leaves only on-disk orphans (superseded + no longer
             # retained), which gc_index_dir already sweeps.
-            manifest_path = os.path.join(index_dir, "VACUUM.json")
-            with open(manifest_path) as fh:
-                m = json.load(fh)
-            m["retained"] = sorted(still)
-            with open(manifest_path + ".tmp", "w") as fh:
-                json.dump(m, fh)
-            os.replace(manifest_path + ".tmp", manifest_path)
+            _write_manifest(index_dir, {**manifest, "retained": sorted(still)})
             for name in report["expired"]:
                 shutil.rmtree(
                     os.path.join(index_dir, name), ignore_errors=True
@@ -1039,8 +994,6 @@ def compact_manifest(index_dir: str, keep_tail: int = 8) -> dict:
     100 TB: without this the metadata plane is the one part of the
     system whose cost grows with AGE rather than data size; with it, a
     k19-style maintainer commits in O(1) forever."""
-    import json
-
     keep_tail = max(1, keep_tail)
     report = {"folded": 0, "total_folded": 0, "tail": 0, "heads": []}
     with _commit_lock(index_dir):
@@ -1091,10 +1044,7 @@ def compact_manifest(index_dir: str, keep_tail: int = 8) -> dict:
             "ts": _time.time(),
         }
         manifest["history"] = history[len(fold):]
-        manifest_path = os.path.join(index_dir, "VACUUM.json")
-        with open(manifest_path + ".tmp", "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(manifest_path + ".tmp", manifest_path)
+        _write_manifest(index_dir, manifest)
         report.update(
             folded=len(fold),
             total_folded=manifest["checkpoint"]["folded"],
@@ -1227,7 +1177,7 @@ def publish_generation(
                     _write_branches(index_dir, branches)
         return resumed
     with _commit_lock(index_dir):
-        history, _retained = _read_history(index_dir)
+        history = _load_manifest(index_dir).get("history", [])
         if expected_head is not None:
             head = history[-1]["by"] if history else None
             if head != expected_head:

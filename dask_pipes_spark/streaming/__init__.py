@@ -21,19 +21,30 @@ tests/test_streaming.py:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from dask_pipes_spark.session import load, scratch_path
 
 
-def stage_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 1) -> str:
+def stage_events_dir(
+    spark: SparkSession,
+    sf_dir: str,
+    n_files: int = 1,
+    swap: tuple[int, int] | None = None,
+) -> str:
     """Rewrite the events fixture as ``n_files`` parquet files in scratch,
     ts already converted to TIMESTAMP_NTZ(µs), range-partitioned by ts so
-    file k holds the k-th time slice (deterministic multi-batch replay)."""
+    file k holds the k-th time slice (deterministic multi-batch replay).
+
+    ``swap=(a, b)`` exchanges two time slices in the replay order (mtime
+    order ``f0, f2, f1, f3`` for ``(1, 2)`` over 4 files): the newer slice
+    advances the watermark first, so the older slice's rows arrive late —
+    the staging that makes late-arrival behavior (state re-opens, late
+    emission, watermark stalls) observable. Used by k14's progress audit."""
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    out = scratch_path(f"dps_events_stream_{tag}_{n_files}")
+    ooo = f"_ooo{swap[0]}{swap[1]}" if swap else ""
+    out = scratch_path(f"dps_events_stream_{tag}_{n_files}{ooo}")
     done = os.path.join(out, "_SUCCESS")
     if not os.path.exists(done):
         events = load(spark, sf_dir, "events")
@@ -43,11 +54,17 @@ def stage_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 1) -> str:
             events = events.coalesce(1)
         events.write.mode("overwrite").parquet(out)
         # file order == time order for maxFilesPerTrigger replay (the source
-        # lists by modification time): stamp files in lexicographic order.
+        # lists by modification time): stamp files in lexicographic order,
+        # except for the swapped pair.
         parts = sorted(f for f in os.listdir(out) if f.endswith(".parquet"))
+        order = list(range(len(parts)))
+        if swap and max(swap) < len(order):
+            a, b = swap
+            order[a], order[b] = order[b], order[a]
         base = 1_700_000_000
-        for i, name in enumerate(parts):
-            os.utime(os.path.join(out, name), (base + i, base + i))
+        for mtime_rank, slice_idx in enumerate(order):
+            p = os.path.join(out, parts[slice_idx])
+            os.utime(p, (base + mtime_rank, base + mtime_rank))
     return out
 
 
@@ -133,32 +150,6 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str, timeout: int = 300
     drain(q, timeout)
     spark = df.sparkSession
     return spark.table(name)
-
-
-def stage_events_dir_out_of_order(
-    spark: SparkSession, sf_dir: str, n_files: int = 4, swap: tuple[int, int] = (1, 2)
-) -> str:
-    """Like :func:`stage_events_dir`, but two time slices arrive SWAPPED in
-    the replay order (mtime order ``f0, f2, f1, f3`` for the default swap):
-    the newer slice advances the watermark first, so the older slice's rows
-    arrive late — the staging that makes late-arrival behavior (state re-opens, late
-    emission, watermark stalls) observable. Used by k14's progress audit."""
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    out = scratch_path(f"dps_events_stream_ooo_{tag}_{n_files}_{swap[0]}{swap[1]}")
-    done = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(done):
-        events = load(spark, sf_dir, "events")
-        events.repartitionByRange(n_files, "ts").write.mode("overwrite").parquet(out)
-        parts = sorted(f for f in os.listdir(out) if f.endswith(".parquet"))
-        order = list(range(len(parts)))
-        a, b = swap
-        if a < len(order) and b < len(order):
-            order[a], order[b] = order[b], order[a]
-        base = 1_700_000_000
-        for mtime_rank, slice_idx in enumerate(order):
-            p = os.path.join(out, parts[slice_idx])
-            os.utime(p, (base + mtime_rank, base + mtime_rank))
-    return out
 
 
 def run_with_progress(

@@ -1796,10 +1796,12 @@ def test_pair_commit_rechecks_under_second_lock(spark, tmp_path):
     passed the first committed-check, then lost the data-plane race to a
     concurrent twin that committed the whole transaction, must NOT append
     a second history link — the rename guard (`if not exists(final)`)
-    silences the crash the single-table path raises, so without the
-    re-check under the second lock the duplicate link lands silently.
+    lets a second rename through, so without the re-check under the
+    second lock the duplicate link lands silently.
     The interleave is forced deterministically: the first move's
-    `coalesce` hook runs the competing commit to completion."""
+    `coalesce` hook runs the competing commit to completion — after the
+    sibling move's durable `c-g001.tmp` has landed, so the twin reuses
+    that tmp instead of rewriting it under the sibling's writer."""
     import json
     import os
 
@@ -1825,6 +1827,7 @@ def test_pair_commit_rechecks_under_second_lock(spark, tmp_path):
             self._df = df
 
         def coalesce(self, n):
+            _wait_for(os.path.join(base, "c-g001.tmp", "_SUCCESS"))
             checkpoint_index_generations(
                 base, [(a1, [], "a-g001"), (c1, [], "c-g001")]
             )
@@ -1840,6 +1843,58 @@ def test_pair_commit_rechecks_under_second_lock(spark, tmp_path):
         f"and append no duplicate link: {man['history']}"
     )
     # the winner's data serves; the loser's stale tmp is GC debris at most
+    assert spark.read.parquet(os.path.join(base, "a-g001")).count() == 20
+
+
+def _wait_for(path: str, timeout: float = 120.0) -> None:
+    """Block until ``path`` exists; raise after ``timeout`` seconds."""
+    import os
+    import time
+
+    deadline = time.monotonic() + timeout
+    while not os.path.exists(path):
+        if time.monotonic() > deadline:
+            raise TimeoutError(f"{path} did not appear within {timeout}s")
+        time.sleep(0.05)
+
+
+def test_single_commit_rechecks_under_second_lock(spark, tmp_path):
+    """The single-table twin of the double-commit race: a same-args
+    `checkpoint_index_generation` that passed its first committed-check,
+    then lost the data-plane race to a twin that committed the same
+    generation, must append no second link. As a one-move call of
+    `checkpoint_index_generations` it re-checks under the second lock;
+    its former standalone path raised `OSError` (directory not empty)
+    renaming the loser's tmp onto the winner's final."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from dask_pipes_spark.session import (
+        _link_bys,
+        checkpoint_index_generation,
+    )
+
+    base = str(tmp_path / "idx")
+    os.makedirs(base)
+    a1 = spark.range(20).select("id", (F.col("id") * 2).alias("v"))
+
+    class Racer:
+        """Delegates to a real DataFrame; the competing commit of the same
+        generation runs to completion inside `coalesce`."""
+
+        def __init__(self, df):
+            self._df = df
+
+        def coalesce(self, n):
+            checkpoint_index_generation(base, a1, [], "a-g001")
+            return self._df.coalesce(n)
+
+    checkpoint_index_generation(base, Racer(a1), [], "a-g001")
+    man = json.load(open(os.path.join(base, "VACUUM.json")))
+    links = [h for h in man["history"] if "a-g001" in _link_bys(h)]
+    assert len(links) == 1, man["history"]
     assert spark.read.parquet(os.path.join(base, "a-g001")).count() == 20
 
 

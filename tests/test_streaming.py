@@ -384,9 +384,10 @@ def test_k19_batching_invariance(spark):
 
     from dask_pipes_spark.operators.streaming_ops import (
         _K19_MV_SCHEMA,
-        _run_agg_mv_stream,
+        _agg_mv_step,
         _stage_k19_state,
         k19_stream_agg_ivm,
+        run_ivm_stream,
     )
     from dask_pipes_spark.session import scratch_path
 
@@ -398,7 +399,9 @@ def test_k19_batching_invariance(spark):
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
     _stage_k19_state(spark, SF_SMOKE, d)
-    _run_agg_mv_stream(spark, d, max_files_per_trigger=2)
+    run_ivm_stream(
+        spark, d, _agg_mv_step(spark, d), max_files_per_trigger=2, target_files=1
+    )
     man = json.load(open(os.path.join(d, "VACUUM.json")))
     chain = [h["by"] for h in man["history"]]
     assert len(chain) == 3, "4 CDC files at mfpt=2 -> 2 maintenance windows"
@@ -478,9 +481,10 @@ def test_k20_batching_invariance(spark):
     from dask_pipes_spark.operators.llm_ext import _ivf_probe_topk
     from dask_pipes_spark.operators.streaming_ops import (
         _K20_ASSIGN_SCHEMA,
-        _run_ann_ivm_stream,
+        _ivf_step,
         _stage_k20_state,
         k20_stream_ann_ivm,
+        run_ivm_stream,
     )
     from dask_pipes_spark.session import scratch_path
 
@@ -491,7 +495,7 @@ def test_k20_batching_invariance(spark):
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
     _stage_k20_state(spark, SF_SMOKE, d)
-    _run_ann_ivm_stream(spark, d, max_files_per_trigger=2)
+    run_ivm_stream(spark, d, _ivf_step(spark, d), max_files_per_trigger=2)
     man = json.load(open(os.path.join(d, "VACUUM.json")))
     assert len(man["history"]) == 3, "4 files at mfpt=2 -> 2 windows"
     indexed = spark.read.schema(_K20_ASSIGN_SCHEMA).parquet(
@@ -569,9 +573,10 @@ def test_k21_batching_invariance(spark):
     from dask_pipes_spark.operators.llm_ext import _lsh_probe_topk
     from dask_pipes_spark.operators.streaming_ops import (
         _K21_BUCKET_SCHEMA,
-        _run_lsh_ivm_stream,
+        _lsh_step,
         _stage_k21_state,
         k21_stream_lsh_ivm,
+        run_ivm_stream,
     )
     from dask_pipes_spark.session import scratch_path
 
@@ -582,7 +587,7 @@ def test_k21_batching_invariance(spark):
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
     _stage_k21_state(spark, SF_SMOKE, d)
-    _run_lsh_ivm_stream(spark, d, max_files_per_trigger=2)
+    run_ivm_stream(spark, d, _lsh_step(spark, d), max_files_per_trigger=2)
     man = json.load(open(os.path.join(d, "VACUUM.json")))
     assert len(man["history"]) == 3, "4 files at mfpt=2 -> 2 windows"
     indexed = spark.read.schema(_K21_BUCKET_SCHEMA).parquet(
@@ -785,9 +790,10 @@ def test_k23_batching_invariance(spark):
 
     from dask_pipes_spark.operators.streaming_ops import (
         _K23_ASSIGN_SCHEMA,
-        _run_pq_ivm_stream,
+        _pq_step,
         _stage_k23_state,
         k23_stream_pq_ivm,
+        run_ivm_stream,
     )
     from dask_pipes_spark.operators.llm_ext import (
         _ivf_corpus_and_centroids,
@@ -806,7 +812,7 @@ def test_k23_batching_invariance(spark):
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
     _stage_k23_state(spark, SF_SMOKE, d)
-    _run_pq_ivm_stream(spark, d, max_files_per_trigger=2)
+    run_ivm_stream(spark, d, _pq_step(spark, d), max_files_per_trigger=2)
     man = json.load(open(os.path.join(d, "VACUUM.json")))
     assert len(man["history"]) == 3, "init pair + 2 windows at mfpt=2"
     bys = [b for h in man["history"] for b in _link_bys(h)]
@@ -927,9 +933,10 @@ def test_k24_batching_invariance(spark):
     import shutil
 
     from dask_pipes_spark.operators.streaming_ops import (
-        _run_residual_ivm_stream,
+        _residual_step,
         _stage_k24_state,
         k24_stream_residual_ivm,
+        run_ivm_stream,
     )
     from dask_pipes_spark.operators.vectors import (
         _RIVF_ASSIGN_SCHEMA,
@@ -947,7 +954,7 @@ def test_k24_batching_invariance(spark):
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
     _stage_k24_state(spark, SF_SMOKE, d)
-    _run_residual_ivm_stream(spark, d, max_files_per_trigger=2)
+    run_ivm_stream(spark, d, _residual_step(spark, d), max_files_per_trigger=2)
     man = json.load(open(os.path.join(d, "VACUUM.json")))
     assert len(man["history"]) == 4, (
         "2 initial links + 2 windows x 1 atomic pair link"
@@ -1061,9 +1068,10 @@ def test_k27_stream_equals_l84_batch_lifecycle(spark):
     derived K), same final pair — so the served probes are identical;
     and batching invariance: 2-files-per-trigger == 1-file-per-trigger."""
     from dask_pipes_spark.operators.streaming_ops import (
-        _run_kivfpq_ivm_stream,
+        _kivfpq_step,
         _stage_k27_state,
         k27_stream_kivfpq_ivm,
+        run_ivm_stream,
     )
     from dask_pipes_spark.operators.vectors import (
         _serve_kivfpq,
@@ -1087,7 +1095,9 @@ def test_k27_stream_equals_l84_batch_lifecycle(spark):
 
     def _stage2(d: str) -> None:
         _stage_k27_state(spark, SF_SMOKE, d)
-        _run_kivfpq_ivm_stream(spark, d, max_files_per_trigger=2)
+        run_ivm_stream(
+            spark, d, _kivfpq_step(spark, d), max_files_per_trigger=2
+        )
 
     idx2 = ensure_index(
         base2,
