@@ -278,7 +278,7 @@ def _run_dedup_chain_from_sigs(spark, sigs):
         lsh_star_edges,
     )
 
-    cand = lsh_star_edges(sigs, _checkpoint=False)
+    cand = lsh_star_edges(sigs)
     comp = connected_components(cand, "doc_a", "doc_b")
     sizes = (
         comp.groupBy("label")

@@ -919,6 +919,12 @@ def a18_avro_split_scan(spark, sf_dir):
     )
 
 
+#: compact_avro's per-output-file volume: its decode-parallel repartition
+#: engages only while the source's on-disk (compressed) bytes fit
+#: ``target_files`` files of this size.
+COMPACT_FILE_BYTES = 512 * 1024 * 1024
+
+
 def compact_avro(
     spark: SparkSession,
     src_dir: str,
@@ -957,8 +963,10 @@ def compact_avro(
     ``target_files=1`` would otherwise funnel every row through one
     shuffle partition. The gate is driver-side file-listing arithmetic
     (no scan): the decode-parallel shuffle engages only when the source
-    fits the requested file count at the 512 MB/file layout guideline
-    (guide §6); oversized-per-file requests keep the zero-shuffle
+    fits the requested file count at ``COMPACT_FILE_BYTES`` (512 MB) per
+    file, the layout guideline (guide §6). The source side counts the
+    compressed bytes on disk (the ``.avro`` files' sizes), not decoded
+    row bytes. Oversized-per-file requests keep the zero-shuffle
     ``coalesce`` shape, where mis-sizing costs lost parallelism rather
     than a payload funnel. Production sizing stays
     ``target_files = ceil(bytes / 512 MB)``, under which the gate is
@@ -980,7 +988,7 @@ def compact_avro(
         if e.is_file() and e.name.endswith(".avro")
     )
     decode_bound = target_files < spark.sparkContext.defaultParallelism
-    fits_layout = src_bytes <= target_files * 512 * 1024 * 1024
+    fits_layout = src_bytes <= target_files * COMPACT_FILE_BYTES
     if decode_bound and fits_layout:
         df = df.repartition(target_files)  # decode-bound: keep block fan-out
     else:

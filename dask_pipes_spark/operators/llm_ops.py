@@ -28,7 +28,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from dask_pipes_spark.registry import davg, dsum, query, sql_davg, sql_dsum
@@ -110,7 +111,9 @@ def minhash_signatures(docs: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
     The i-th permutation is simulated by an independent seeded hash
     (Broder's min-wise hashing); the signature is the element-wise min per
     document, computed as ``num_perm`` MIN aggregates in a single groupBy
-    pass — no per-permutation shuffle.
+    pass — no per-permutation shuffle. The aggregate is built as one SQL
+    expression string: one parse instead of ~10 py4j ``Column`` calls per
+    permutation, which dominated the driver-side plan build.
     """
     shingled = docs.select(
         "doc_id",
@@ -128,16 +131,8 @@ def minhash_signatures(docs: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
         mh_base(F.col("shingle"), 1).alias("mh1"),
         mh_base(F.col("shingle"), 13).alias("mh2"),
     )
-    mins = [
-        F.min((F.col("mh1") + F.lit(i) * F.col("mh2")) % F.lit(MH_PRIME)).alias(
-            f"h{i}"
-        )
-        for i in range(num_perm)
-    ]
-    sigs = based.groupBy("doc_id").agg(*mins)
-    return sigs.select(
-        "doc_id", F.array(*[f"h{i}" for i in range(num_perm)]).alias("sig")
-    )
+    mins = ", ".join(f"min((mh1 + {i} * mh2) % {MH_PRIME})" for i in range(num_perm))
+    return based.groupBy("doc_id").agg(F.expr(f"array({mins})").alias("sig"))
 
 
 def lsh_bandrows(
@@ -262,7 +257,6 @@ def lsh_star_edges(
     sigs: DataFrame,
     num_perm: int = NUM_PERM,
     bands: int = BANDS,
-    _checkpoint: bool = True,
 ) -> DataFrame:
     """(doc_a, doc_b) edges with the SAME connected components as
     :func:`lsh_candidate_pairs` at a fraction of its cost — the
@@ -302,9 +296,11 @@ def lsh_star_edges(
     2×0.5 M through sym (≈80 MB total, −38%); measured interleaved:
     7.09 → 5.67 s (−20%) on the planted-skew graph, a wash inside noise
     at the non-skewed bench scale (4.20 vs 4.38 s, extra exchange ≈
-    dispatch floor). Decision pinned by the planted-skew test."""
-    if _checkpoint:
-        sigs = pin_scratch(sigs, "dps_lsh_sigs")
+    dispatch floor). Decision pinned by the planted-skew test.
+
+    ``sigs`` is not pinned: the band window is its one consumer, and
+    connected_components' checkpoint of the symmetrized edges runs the
+    signature aggregate exactly once."""
     banded = lsh_bandrows(sigs, num_perm, bands)
     w = Window.partitionBy("band_id", "bkey")
     rep = banded.withColumn("rep", F.min("doc_id").over(w))
@@ -445,10 +441,10 @@ def _chain_signatures(spark, sf_dir: str):
     """The dedup chain's materialization boundary (round 10): when
     ``$SPARK_GRAFT_DEDUP_INDEX`` is set, signatures come from the
     persisted generation (:func:`persisted_signature_table` — durable,
-    cross-process, no construction-time Spark job) and the checkpoint is
-    skipped; otherwise the in-memory recompute with the eager
-    localCheckpoint boundary (the no-index fallback). Returns
-    ``(sigs, checkpoint_flag)``."""
+    cross-process, no construction-time Spark job); otherwise the
+    in-memory recompute (the no-index fallback). Returns ``(sigs,
+    checkpoint_flag)``: the flag tells a multi-consumer caller
+    (:func:`lsh_candidates`) whether to pin the frame."""
     import os
 
     if os.environ.get("SPARK_GRAFT_DEDUP_INDEX"):
@@ -852,128 +848,99 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     real near-dedup pipeline needs between "candidate pairs" and "purge
     list" (Lee et al. 2022 group duplicates exactly this way).
 
-    Iterative Spark: each round every node adopts the smallest label among
-    itself and its neighbors; converges in O(graph diameter) rounds (near-dup
-    clusters are tiny cliques → 2-3 rounds). ``localCheckpoint`` truncates
+    Iterative Spark: each hop every node adopts the smallest label among
+    itself and its neighbors; converges in O(graph diameter) hops (near-dup
+    clusters are tiny cliques → 2-3 hops). ``localCheckpoint`` truncates
     the lineage so the plan does not grow with iterations (the standard
     Spark iterative-algorithm discipline; Pregel-style frameworks do the
     same). Deterministic: labels are min() aggregates, no RNG.
 
-    Round-5 plan shape (measured ~2× on the sf0.1 chain): the checkpointed
-    RDD blocks PRESERVE their hash partitioning, so the edge list is
-    pre-partitioned on the join key ONCE and the label frame keeps the same
-    node-keyed layout round over round — the per-round join and the
-    label-update join are both zero-exchange, leaving exactly ONE shuffle
-    per hop (the neighbor-min groupBy, whose key necessarily differs from
-    the input layout). The convergence test rides the update join as a
-    ``changed`` flag column inside the SAME checkpointed frame, so testing
-    it is a filter-count over in-memory blocks — no extra join job per
-    round. At 100 TB the per-hop cost is one shuffle of (node, label)
-    pairs; swap localCheckpoint for reliable checkpoint() there (executor
-    loss, see lsh_candidates notes).
+    Plan:
+    - ``sym`` holds both directions of every edge, checkpointed once
+      with no exchange of its own. Its checkpoint job runs the whole
+      upstream (for l18: shingles, MinHash, LSH bands).
+    - Labels start one hop in: ``least(s, min(d))`` per ``s`` over
+      ``sym``, which also fixes the node set (the edge endpoints).
+    - A hop is ``sym ⋈ labels`` on s, emitting s's label both to d and
+      back to s itself, → ``groupBy(node).min(label)``. The row back to s
+      acts as a self-loop, so every node keeps its own label with no left
+      join back to the old labels, and the node set never changes.
+    - Each round runs two hops, then one checkpoint job (the first round
+      also computes the initial labels). The second hop also keeps
+      ``prev``, the node's label before that hop (the min over its
+      self-loop rows alone). Labels only decrease, so no node with
+      ``label < prev`` means the last hop changed nothing: that is the
+      fixpoint. The count rides the checkpoint job through ``observe``
+      (:func:`_observed`).
 
-    Round-12 loop structure (guide §2.4 — remove shuffles/barriers the
-    algorithm does not need; measured 2685→~1100 ms on the sf0.1 star-edge
-    chain, this window):
-    - the symmetrized edge build pays ONE exchange, not two: repartition
-      on the join key FIRST, then ``dropDuplicates`` — hash layout on
-      ``s`` already satisfies the (s, d) aggregation's clustering, so the
-      dedup adds no exchange (it exists only to shrink the per-hop join
-      input; min-label propagation is idempotent under duplicate edges);
-    - label init FOLDS the first propagation hop into the node-derivation
-      aggregate (``min(d)`` rides the same groupBy that dedups the node
-      set), so the loop starts one hop ahead with zero extra jobs;
-    - each iteration executes TWO propagation hops before its checkpoint
-      barrier: same shuffle count per hop, HALF the barrier jobs and
-      driver round-trips — the dominant per-round cost at any scale
-      where the tail of a stage leaves cores idle.
+    The checkpointed blocks do NOT keep their hash partitioning under
+    AQE (on in every session, see ``configure_session``): the checkpoint
+    records the adaptive plan's ``UnknownPartitioning(0)`` as the
+    ``LogicalRDD``'s partitioning on PySpark 4.1.2 (SCALING.md). Each hop
+    therefore re-exchanges ``sym`` and the labels (or broadcasts the
+    smaller side); pre-partitioning ``sym`` buys nothing. ``sym`` is not
+    deduplicated either: the star edges arrive distinct, and repeated
+    rows only cost join probes, since each hop's partial min collapses
+    them before its exchange. At 100 TB swap localCheckpoint for reliable
+    checkpoint() (executor loss).
 
-    Round-13 barrier cuts (the r12 verdict's item 3):
-    - the convergence count rides the checkpoint job itself via
-      ``observe`` (verified to fire on ``localCheckpoint`` on this Spark
-      build), so each iteration is ONE job instead of checkpoint + a
-      separate count;
-    - convergence is detected on the LAST hop of the pair (``label``
-      after hop 2k+1 vs after hop 2k), not across the whole pair: one
-      full hop with no change already implies the fixpoint (monotone
-      min-propagation), so a graph whose labels settle on an even hop
-      skips the former pure-confirmation iteration entirely. The
-      returned labels are the unique fixpoint either way — stopping
-      rules only decide how much post-fixpoint work runs.
+    ``max_iter`` counts DOUBLE-HOP rounds (up to ``2 * max_iter`` hops).
+    Exhausting it without convergence returns the current labels and logs
+    a warning — callers on adversarial graphs (diameter > 2·max_iter)
+    should raise it.
 
-    ``max_iter`` counts DOUBLE-HOP rounds (up to ``2 * max_iter`` hops;
-    the r12 advice note). Exhausting it without convergence returns the
-    current labels and logs a warning — callers on adversarial graphs
-    (diameter > 2·max_iter) should raise it.
-
-    Returns (node, component) with component = min node id reachable.
+    Returns (node, label) over the edge endpoints, label = min node id
+    reachable.
     """
-    nparts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # symmetrize by exploding both directions from ONE pass over the edge
-    # frame — a union of two selects executes the (possibly expensive)
-    # upstream lineage twice per materialization (for p4 that was the
-    # all-pairs cosine join, run twice inside this checkpoint job)
+    # both directions from ONE pass over the edge frame — a union of two
+    # selects executes the (possibly expensive) upstream lineage twice
+    # (for p4 the all-pairs cosine join)
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .select(
+        edges.select(
             F.explode(
                 F.array(
-                    F.struct(F.col("a").alias("s"), F.col("b").alias("d")),
-                    F.struct(F.col("b").alias("s"), F.col("a").alias("d")),
+                    F.struct(F.col(src).alias("s"), F.col(dst).alias("d")),
+                    F.struct(F.col(dst).alias("s"), F.col(src).alias("d")),
                 )
             ).alias("p")
         )
         .select("p.s", "p.d")
-        .repartition(nparts, "s")  # partitioning survives the checkpoint
-        .dropDuplicates()  # clusters on the s-layout: no extra exchange
         .localCheckpoint()
     )
-    # node set + first propagation hop in ONE aggregate: label0 =
-    # min(node, min neighbor) — exactly what hop 1 over self-labels yields
-    labels = (
-        sym.groupBy(F.col("s").alias("node"))
-        .agg(F.min("d").alias("nmin"))
-        .select("node", F.least(F.col("node"), F.col("nmin")).alias("label"))
-        .localCheckpoint()
+    # hop 1 over self-labels: min(node, neighbors); also fixes the node set
+    labels = sym.groupBy(F.col("s").alias("node")).agg(
+        F.least(F.col("s"), F.min("d")).alias("label")
     )
 
     def _hop(lbl: DataFrame) -> DataFrame:
-        # name-based joins: sym appears twice per double-hop plan, so no
+        # each joined edge row sends s's label to d and back to s itself
+        # (``own``), so every node keeps its label with no join back; the
+        # partial min collapses the repeated own rows before the exchange
+        own = F.array(
+            F.struct(F.col("d").alias("node"), F.lit(False).alias("own")),
+            F.struct(F.col("s").alias("node"), F.lit(True).alias("own")),
+        )
+        # name-based join: sym appears twice per round's plan, so no
         # cross-frame Column references (DeduplicateRelations-safe)
-        neighbor_min = (
-            sym.withColumnRenamed("s", "node")  # rename keeps the s-layout
-            .join(lbl.select("node", "label"), "node")  # zero-exchange
-            .groupBy(F.col("d").alias("node"))
-            .agg(F.min("label").alias("nmin"))
+        return (
+            sym.join(lbl.select(F.col("node").alias("s"), "label"), "s")
+            .select(F.explode(own).alias("t"), "label")
+            .groupBy(F.col("t.node").alias("node"))
+            .agg(
+                F.min("label").alias("label"),
+                F.min(F.when(F.col("t.own"), F.col("label"))).alias("prev"),
+            )
         )
-        passthru = [c for c in lbl.columns if c != "label"]
-        return lbl.join(neighbor_min, "node", "left").select(
-            *passthru,
-            F.least(F.col("label"), F.coalesce("nmin", F.col("label"))).alias(
-                "label"
-            ),
-        )
-
-    from pyspark.sql import Observation
 
     converged = False
     for _ in range(max_iter):
-        mid = _hop(labels.select("node", "label"))
-        stepped = _hop(
-            mid.select("node", F.col("label").alias("label_mid"), "label")
-        )
         obs = Observation()
         labels = (
-            stepped.select(
-                "node",
-                "label",
-                (F.col("label") < F.col("label_mid")).alias("changed"),
-            )
-            .observe(obs, F.sum(F.col("changed").cast("long")).alias("n"))
+            _hop(_hop(labels))
+            .observe(obs, F.count_if(F.col("label") < F.col("prev")).alias("n"))
             .localCheckpoint()  # truncate lineage — plan stays O(1)/round
-            .drop("changed")
         )
-        if not (obs.get["n"] or 0):  # last hop changed nothing → fixpoint
+        if not _observed(obs, labels):  # last hop changed nothing → fixpoint
             converged = True
             break
     if not converged:
@@ -985,7 +952,31 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
             "graphs of diameter > %d",
             max_iter, 2 * max_iter, 2 * max_iter,
         )
-    return labels
+    return labels.select("node", "label")
+
+
+#: How long :func:`_observed` waits for an observation before it counts
+#: the checkpointed frame itself.
+_OBSERVE_WAIT_S = 30.0
+
+
+def _observed(obs: Observation, labels: DataFrame) -> int:
+    """connected_components' changed-node count for one round.
+
+    The observation normally fires with the checkpoint job that already
+    ran. ``Observation.get`` blocks on the JVM ``getRow()`` with no
+    timeout, so wait on the JVM observation's future for at most
+    ``_OBSERVE_WAIT_S`` instead; if it has not fired, count over the
+    checkpointed frame (in-memory blocks, one more job)."""
+    jvm = labels.sparkSession.sparkContext._jvm
+    wait = jvm.scala.concurrent.duration.FiniteDuration(
+        int(_OBSERVE_WAIT_S * 1000), jvm.java.util.concurrent.TimeUnit.MILLISECONDS
+    )
+    try:
+        jvm.scala.concurrent.Await.ready(obs._jo.future(), wait)
+    except Py4JJavaError:  # TimeoutException: the observation never fired
+        return labels.filter(F.col("label") < F.col("prev")).count()
+    return obs.get["n"]
 
 
 _L18_ORACLE = (
@@ -1029,23 +1020,35 @@ def l18_dup_components(spark, sf_dir):
     # the per-bucket rep→member star set has the SAME transitive closure
     # as the capped pair set (see lsh_star_edges) — skips the self-join,
     # the dropDuplicates exchange AND the two signature join-backs;
-    # boundary = persisted generation when $SPARK_GRAFT_DEDUP_INDEX, else
-    # checkpoint
-    sigs, ck = _chain_signatures(spark, sf_dir)
-    pairs = lsh_star_edges(sigs, _checkpoint=ck).select(
+    # signatures come from the persisted generation when
+    # $SPARK_GRAFT_DEDUP_INDEX is set, else from connected_components'
+    # edge checkpoint, which runs the MinHash aggregate once
+    sigs, _ = _chain_signatures(spark, sf_dir)
+    return _dup_clusters(spark, sf_dir, sigs)
+
+
+def _dup_clusters(spark, sf_dir: str, sigs: DataFrame) -> DataFrame:
+    """l18/l80's tail: star edges → components → per-cluster stats."""
+    pairs = lsh_star_edges(sigs).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     comp = connected_components(pairs)
     docs = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node"), "lang", "source"
     )
+
+    def n_distinct(c: str) -> F.Column:
+        # COUNT(DISTINCT) twins (NULLs skipped too): two countDistinct plan
+        # an Expand with a second exchange, the sets ride the one groupBy
+        return F.size(F.collect_set(c)).cast("bigint")
+
     return (
         comp.join(docs, "node")
         .groupBy(F.col("label").alias("cluster_rep"))
         .agg(
             F.count(F.lit(1)).alias("cluster_size"),
-            F.countDistinct("source").alias("n_sources"),
-            F.countDistinct("lang").alias("n_langs"),
+            n_distinct("source").alias("n_sources"),
+            n_distinct("lang").alias("n_langs"),
             # Comma-joined string, not a raw array: the harness canonicalizer
             # cannot hash ndarray cells (d10 discipline).
             F.array_join(
@@ -1106,35 +1109,13 @@ def l80_dedup_chain_persisted(spark, sf_dir):
     (round 10 — the materialization-boundary default the r9 verdict
     asked for): candidate pairs, components, and cluster stats all read
     the ``signatures-g001`` generation via
-    :func:`persisted_signature_table`; no text is ever re-shingled, no
-    localCheckpoint job runs at plan-construction time
-    (``_checkpoint=False`` — the parquet generation IS the boundary),
-    and the full plan stays visible to the EXPLAIN audit (none of the
-    "post-checkpoint plan only" caveats the in-memory chain carries).
+    :func:`persisted_signature_table`; no text is ever re-shingled (the
+    parquet generation IS the signature boundary), so connected
+    components' edge checkpoint re-reads 512 B/doc of columnar bytes.
     Same oracle as l18: the persisted-boundary chain must equal the
     from-scratch recompute pair-for-pair and cluster-for-cluster."""
-    sigs = persisted_signature_table(spark, sf_dir)
     # star edges (round 12): identical components, no self-join — see l18
-    pairs = lsh_star_edges(sigs, _checkpoint=False).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    comp = connected_components(pairs)
-    docs = load(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("node"), "lang", "source"
-    )
-    return (
-        comp.join(docs, "node")
-        .groupBy(F.col("label").alias("cluster_rep"))
-        .agg(
-            F.count(F.lit(1)).alias("cluster_size"),
-            F.countDistinct("source").alias("n_sources"),
-            F.countDistinct("lang").alias("n_langs"),
-            F.array_join(
-                F.sort_array(F.collect_list("node")).cast("array<string>"), ","
-            ).alias("members"),
-        )
-        .filter(F.col("cluster_size") >= 2)
-    )
+    return _dup_clusters(spark, sf_dir, persisted_signature_table(spark, sf_dir))
 
 
 _PLANT_OFFSET = 1 << 40  # planted-dup id offset: 2**40 sits above any real doc_id

@@ -24,6 +24,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from dask_pipes_spark.operators.llm_ext import _IVF_ASSIGN_SCHEMA, _LSH_BUCKET_SCHEMA
+from dask_pipes_spark.operators.vectors import _L81_ASSIGN_SCHEMA
 from dask_pipes_spark.registry import dsum, query, sql_dsum
 from dask_pipes_spark.session import (
     checkpoint_index_generation,
@@ -1166,9 +1168,6 @@ def k19_stream_agg_ivm(spark, sf_dir):
 
 # --- k20: streaming ANN index maintenance (round 9) ---------------------------
 
-_K20_ASSIGN_SCHEMA = "vec_id bigint, e array<double>, nrm double, bucket int"
-
-
 def _stage_k20_state(spark, sf_dir: str, d: str) -> None:
     """Stage the continuous ANN-ingest world: the coarse codebook trained
     on yesterday's corpus (``%9!=5``), its assignments as generation
@@ -1228,7 +1227,7 @@ def _ivf_step(spark, index_dir: str):
     def step(batch_df, heads):
         assigned = _read_gen(
             batch_df.sparkSession, index_dir, heads["assignments-"],
-            _K20_ASSIGN_SCHEMA,
+            _IVF_ASSIGN_SCHEMA,
         )
         d_del, d_ins = _cdc_split(batch_df)
         return {
@@ -1288,7 +1287,7 @@ def k20_stream_ann_ivm(spark, sf_dir):
         spark, idx, "centroids", "bucket int, ce array<double>, cnrm double"
     ).collect()
     indexed = _read_gen(
-        spark, idx, head_generations(idx)["assignments-"], _K20_ASSIGN_SCHEMA
+        spark, idx, head_generations(idx)["assignments-"], _IVF_ASSIGN_SCHEMA
     )
     return _ivf_probe_topk(
         indexed.select("vec_id", "e", "nrm"), indexed, cent_rows
@@ -1296,9 +1295,6 @@ def k20_stream_ann_ivm(spark, sf_dir):
 
 
 # --- k21: streaming LSH index maintenance (round 9) ----------------------------
-
-_K21_BUCKET_SCHEMA = "vec_id bigint, e array<double>, nrm double, bucket bigint"
-
 
 def _stage_k21_state(spark, sf_dir: str, d: str) -> None:
     """Stage the continuous LSH-ingest world (the k20 staging on the
@@ -1352,7 +1348,7 @@ def _lsh_step(spark, index_dir: str):
     def step(batch_df, heads):
         buckets = _read_gen(
             batch_df.sparkSession, index_dir, heads["buckets-"],
-            _K21_BUCKET_SCHEMA,
+            _LSH_BUCKET_SCHEMA,
         )
         d_del, d_ins = _cdc_split(batch_df)
         return {
@@ -1412,7 +1408,7 @@ def k21_stream_lsh_ivm(spark, sf_dir):
         build=_stage,
     )
     return _lsh_probe_topk(
-        _read_gen(spark, idx, head_generations(idx)["buckets-"], _K21_BUCKET_SCHEMA)
+        _read_gen(spark, idx, head_generations(idx)["buckets-"], _LSH_BUCKET_SCHEMA)
     )
 
 
@@ -1567,9 +1563,6 @@ def k22_stream_wap(spark, sf_dir):
 
 # --- k23: streaming IVF+PQ maintenance with pruned serving (r10, re-based r11) -
 
-_K23_ASSIGN_SCHEMA = "vec_id bigint, bucket int"
-
-
 def _stage_k23_state(spark, sf_dir: str, d: str) -> None:
     """Stage the continuous IVFADC (by_residual=False) ingest world
     (round 11 — the k20 staging on the composed l68 path): the coarse
@@ -1655,7 +1648,7 @@ def _pq_step(spark, index_dir: str):
         ss = batch_df.sparkSession
         cents = _read_gen(ss, index_dir, "codebooks", _RIVF_CENTS_SCHEMA)
         assignments = _read_gen(
-            ss, index_dir, heads["assignments-"], _K23_ASSIGN_SCHEMA
+            ss, index_dir, heads["assignments-"], _L81_ASSIGN_SCHEMA
         )
         codes = _read_gen(ss, index_dir, heads["codes-"], _RIVF_CODES_SCHEMA)
         d_del, d_ins = _cdc_split(batch_df)
@@ -1740,7 +1733,7 @@ def k23_stream_pq_ivm(spark, sf_dir):
     heads = head_generations(idx)
     cent_rows = _read_gen(spark, idx, "centroids", _RIVF_CENT_SCHEMA).collect()
     cents = _read_gen(spark, idx, "codebooks", _RIVF_CENTS_SCHEMA)
-    assignments = _read_gen(spark, idx, heads["assignments-"], _K23_ASSIGN_SCHEMA)
+    assignments = _read_gen(spark, idx, heads["assignments-"], _L81_ASSIGN_SCHEMA)
     codes = _read_gen(spark, idx, heads["codes-"], _RIVF_CODES_SCHEMA)
     # queries: every 100th FINAL-corpus vector — embeddings read for the
     # query slice only (the l63 discipline)
@@ -2064,7 +2057,7 @@ def _kivfpq_step(spark, index_dir: str):
         ccents = _read_gen(ss, index_dir, heads["centroids-"], _CK_CENTS_SCHEMA)
         cents = _read_gen(ss, index_dir, heads["codebooks-"], _RIVF_CENTS_SCHEMA)
         assignments = _read_gen(
-            ss, index_dir, heads["assignments-"], _K23_ASSIGN_SCHEMA
+            ss, index_dir, heads["assignments-"], _L81_ASSIGN_SCHEMA
         )
         codes = _read_gen(ss, index_dir, heads["codes-"], _RIVF_CODES_SCHEMA)
         d_del, d_ins = _cdc_split(batch_df, ("vec_id", "e"))

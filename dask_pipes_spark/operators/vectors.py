@@ -725,10 +725,10 @@ def l63_pq_index_persist(spark, sf_dir):
     )
     # schema-explicit read-back (a3 idiom): empty builds leave nothing to
     # infer
-    cents = spark.read.schema("s int, cid int, cv array<double>").parquet(
+    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
         os.path.join(idx, "codebooks")
     )
-    codes = spark.read.schema("vec_id bigint, s int, code int").parquet(
+    codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
         os.path.join(idx, "codes")
     )
     _, sub = _pq_corpus(spark, sf_dir)
@@ -1384,10 +1384,10 @@ def l73_residual_index_persist(spark, sf_dir):
     indexed = spark.read.schema(
         "vec_id bigint, e array<double>, nrm double, bucket int"
     ).parquet(os.path.join(idx, "assignments"))
-    cents = spark.read.schema("s int, cid int, cv array<double>").parquet(
+    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
         os.path.join(idx, "codebooks")
     )
-    codes = spark.read.schema("vec_id bigint, s int, code int").parquet(
+    codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
         os.path.join(idx, "codes")
     )
     return _residual_probe(indexed, cent, cent_rows, cents, codes)
@@ -2784,10 +2784,10 @@ def _read_pq_delta_state(spark, d: str):
     (cents, codes_old, delta_ins, delta_del)."""
     import os
 
-    cents = spark.read.schema("s int, cid int, cv array<double>").parquet(
+    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
         os.path.join(d, "codebooks")
     )
-    codes_old = spark.read.schema("vec_id bigint, s int, code int").parquet(
+    codes_old = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
         os.path.join(d, "codes")
     )
     d_ins = spark.read.schema(
@@ -2898,10 +2898,10 @@ def l72_pq_index_checkpoint(spark, sf_dir):
         version="pq-ckpt-v1",
         build=_stage,
     )
-    cents = spark.read.schema("s int, cid int, cv array<double>").parquet(
+    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
         os.path.join(idx, "codebooks")
     )
-    codes = spark.read.schema("vec_id bigint, s int, code int").parquet(
+    codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
         os.path.join(idx, "codes-g002")
     )
     _, sub = _pq_corpus(spark, sf_dir)

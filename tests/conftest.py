@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -25,3 +26,20 @@ def registry():
     from dask_pipes_spark.registry import ORACLES, QUERIES
 
     return QUERIES, ORACLES
+
+
+#: Job-group ids for :func:`jobs_run`: unique per call, so a group never
+#: also counts jobs an earlier call left in the status tracker.
+_JOB_GROUPS = itertools.count()
+
+
+def jobs_run(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs, counted in its own job group."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

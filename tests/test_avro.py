@@ -423,3 +423,46 @@ def test_compaction_both_collapse_regimes_preserve_rows(spark):
         if e.is_file() and e.name.endswith(".avro")
     )
     assert src_bytes <= 1 * 512 * 1024 * 1024  # fixture source fits: gate open
+
+
+def test_compaction_volume_gate_closed_coalesces(spark, monkeypatch):
+    """compact_avro's volume gate on its closed branch: a source above
+    ``target_files x COMPACT_FILE_BYTES`` on disk takes the zero-shuffle
+    coalesce (the written plan adds no exchange to the split reader's
+    own block-index exchange), and the open gate takes the repartition;
+    both keep the rowset."""
+    from dask_pipes_spark.operators.avro_io import (
+        compact_avro,
+        read_avro_split,
+        write_avro,
+    )
+
+    src = load(spark, SF_SMOKE, "customer").select("c_custkey", "c_name")
+    want = sorted(tuple(r) for r in src.collect())
+    land = scratch_path("t_compact_gate")
+    os.makedirs(land, exist_ok=True)
+    for g in range(3):
+        write_avro(
+            src.filter(F.col("c_custkey") % 3 == g).coalesce(1),
+            land, prefix=f"g{g}", clean=False,
+        )
+    assert spark.sparkContext.defaultParallelism > 1  # target 1 is decode-bound
+    written = []
+
+    def exchanges(df) -> int:
+        return df._jdf.queryExecution().executedPlan().toString().count("Exchange ")
+
+    def spy(df, *args, **kwargs):
+        written.append(exchanges(df))
+        return write_avro(df, *args, **kwargs)
+
+    read_exchanges = exchanges(read_avro_split(spark, land))
+
+    monkeypatch.setattr(avro_io, "write_avro", spy)
+    for file_bytes, exchange in ((avro_io.COMPACT_FILE_BYTES, True), (1, False)):
+        monkeypatch.setattr(avro_io, "COMPACT_FILE_BYTES", file_bytes)
+        dst = scratch_path(f"t_compact_gate_out_{file_bytes}")
+        compact_avro(spark, land, dst, block_rows=40, target_files=1)
+        assert written[-1] == read_exchanges + exchange
+        got = sorted(tuple(r) for r in read_avro_split(spark, dst).collect())
+        assert got == want, f"rowset diverged at COMPACT_FILE_BYTES={file_bytes}"

@@ -1,9 +1,10 @@
 """Group L behavioral tests: MinHash-LSH recall on planted near-duplicates,
 exact-dedup correctness, brute-force cosine sanity (SURVEY §7.4)."""
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_run
 
 
 def test_minhash_finds_planted_near_dups(spark):
@@ -162,7 +163,7 @@ def test_star_edges_components_match_capped_pairs(spark):
     # fixture corpus: real signatures
     sigs = minhash_signatures(load(spark, SF_SMOKE, "documents"))
     pairs = lsh_candidate_pairs(sigs, _checkpoint=False)
-    stars = lsh_star_edges(sigs, _checkpoint=False)
+    stars = lsh_star_edges(sigs)
     comp_pairs = _components_of(
         connected_components(pairs, "doc_a", "doc_b")
     )
@@ -191,7 +192,7 @@ def test_star_edges_components_match_capped_pairs(spark):
     )
     planted = spark.createDataFrame(rows, schema)
     p_pairs = lsh_candidate_pairs(planted, _checkpoint=False)
-    p_stars = lsh_star_edges(planted, _checkpoint=False)
+    p_stars = lsh_star_edges(planted)
     cp = _components_of(connected_components(p_pairs, "doc_a", "doc_b"))
     cs = _components_of(connected_components(p_stars, "doc_a", "doc_b"))
     assert cp == cs
@@ -233,3 +234,60 @@ def test_connected_components_long_path_converges(spark):
     )
     got = {r.node: r.label for r in connected_components(df).collect()}
     assert got == {n: 100 for n in nodes}
+
+
+#: Spark jobs of one warm ``l18_dup_components`` build + collect on
+#: SF_SMOKE: 5 for connected_components' edge checkpoint (fan-out scan,
+#: MinHash aggregate, band window, star dedup, checkpoint), 6 for its one
+#: round (initial labels, two hops with one broadcast each, checkpoint) and
+#: 3 for the cluster stats.
+L18_SMOKE_JOBS = 14
+
+
+def test_l18_dup_components_job_count(spark, registry):
+    """The dedup chain runs no job that produces nothing: no schema
+    inference on a warm load, no signature pin, no label join-back."""
+    queries, _ = registry
+    queries["l18_dup_components"](spark, SF_SMOKE).collect()  # warm
+    n = jobs_run(
+        spark, lambda: queries["l18_dup_components"](spark, SF_SMOKE).collect()
+    )
+    assert n == L18_SMOKE_JOBS
+
+
+class _SilentObservation(Observation):
+    """An observation that is never attached, so it never fires."""
+
+    def _on(self, df, *exprs):
+        self._jvm = df._sc._jvm
+        self._jo = self._jvm.org.apache.spark.sql.Observation()
+        return df
+
+
+def test_connected_components_survives_unfired_observation(spark, monkeypatch):
+    """The convergence read must not block forever when the observation
+    never fires: after a bounded wait connected_components counts the
+    checkpointed round itself and still returns exact labels. CC runs in
+    a worker thread so a hang fails this test instead of the suite."""
+    import threading
+
+    from dask_pipes_spark.operators import llm_ops
+
+    monkeypatch.setattr(llm_ops, "Observation", _SilentObservation)
+    monkeypatch.setattr(llm_ops, "_OBSERVE_WAIT_S", 0.2)
+    edges = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (10, 11), (12, 11)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    out: dict = {}
+
+    def run():
+        out["labels"] = {
+            r.node: r.label for r in llm_ops.connected_components(df).collect()
+        }
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(timeout=180)
+    assert not worker.is_alive(), "connected_components blocked on its observation"
+    want = {n: 1 for n in range(1, 7)}
+    want.update({10: 10, 11: 10, 12: 10})
+    assert out["labels"] == want

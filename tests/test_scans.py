@@ -4,7 +4,7 @@
 from pyspark.sql import functions as F
 
 from dask_pipes_spark.session import load
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_run
 
 
 def _plan(df) -> str:
@@ -326,3 +326,34 @@ def test_a19_probe_hash_matches_build_hash(spark):
     ).collect()
     for r in rows:
         assert list(r.pos) == _a19_positions_py(r.key)
+
+
+def test_load_skips_schema_inference_of_unchanged_file(spark, tmp_path):
+    """A repeat load() of an unchanged parquet file runs no Spark job (its
+    inferred schema is remembered), and a rewrite with another schema is
+    picked up, also when the new file has the same byte size and the old
+    mtime is restored (as ``cp -p`` or ``rsync -t`` leave it)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path, other = tmp_path / "t.parquet", tmp_path / "other"
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    assert load(spark, str(tmp_path), "t").columns == ["a"]
+    assert jobs_run(spark, lambda: load(spark, str(tmp_path), "t")) == 0
+
+    before = os.stat(path)
+    pq.write_table(pa.table({"b": [1, 2, 3]}), other)
+    os.replace(other, path)
+    os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns))
+    after = os.stat(path)
+    assert (after.st_size, after.st_mtime_ns) == (before.st_size, before.st_mtime_ns)
+    df = load(spark, str(tmp_path), "t")
+    assert df.columns == ["b"]
+    assert sorted(r.b for r in df.collect()) == [1, 2, 3]
+
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    df = load(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y")]

@@ -478,9 +478,8 @@ def test_k20_batching_invariance(spark):
     import os
     import shutil
 
-    from dask_pipes_spark.operators.llm_ext import _ivf_probe_topk
+    from dask_pipes_spark.operators.llm_ext import _IVF_ASSIGN_SCHEMA, _ivf_probe_topk
     from dask_pipes_spark.operators.streaming_ops import (
-        _K20_ASSIGN_SCHEMA,
         _ivf_step,
         _stage_k20_state,
         k20_stream_ann_ivm,
@@ -498,7 +497,7 @@ def test_k20_batching_invariance(spark):
     run_ivm_stream(spark, d, _ivf_step(spark, d), max_files_per_trigger=2)
     man = json.load(open(os.path.join(d, "VACUUM.json")))
     assert len(man["history"]) == 3, "4 files at mfpt=2 -> 2 windows"
-    indexed = spark.read.schema(_K20_ASSIGN_SCHEMA).parquet(
+    indexed = spark.read.schema(_IVF_ASSIGN_SCHEMA).parquet(
         os.path.join(d, man["by"])
     )
     cent_rows = (
@@ -570,9 +569,8 @@ def test_k21_batching_invariance(spark):
     import os
     import shutil
 
-    from dask_pipes_spark.operators.llm_ext import _lsh_probe_topk
+    from dask_pipes_spark.operators.llm_ext import _LSH_BUCKET_SCHEMA, _lsh_probe_topk
     from dask_pipes_spark.operators.streaming_ops import (
-        _K21_BUCKET_SCHEMA,
         _lsh_step,
         _stage_k21_state,
         k21_stream_lsh_ivm,
@@ -590,7 +588,7 @@ def test_k21_batching_invariance(spark):
     run_ivm_stream(spark, d, _lsh_step(spark, d), max_files_per_trigger=2)
     man = json.load(open(os.path.join(d, "VACUUM.json")))
     assert len(man["history"]) == 3, "4 files at mfpt=2 -> 2 windows"
-    indexed = spark.read.schema(_K21_BUCKET_SCHEMA).parquet(
+    indexed = spark.read.schema(_LSH_BUCKET_SCHEMA).parquet(
         os.path.join(d, man["by"])
     )
     got = sorted(tuple(r) for r in _lsh_probe_topk(indexed).collect())
@@ -789,7 +787,6 @@ def test_k23_batching_invariance(spark):
     import shutil
 
     from dask_pipes_spark.operators.streaming_ops import (
-        _K23_ASSIGN_SCHEMA,
         _pq_step,
         _stage_k23_state,
         k23_stream_pq_ivm,
@@ -800,6 +797,7 @@ def test_k23_batching_invariance(spark):
         ivf_assign,
     )
     from dask_pipes_spark.operators.vectors import (
+        _L81_ASSIGN_SCHEMA,
         _RIVF_CENT_SCHEMA,
         _pq_pruned_probe_topk,
         _pq_subspaces,
@@ -824,7 +822,7 @@ def test_k23_batching_invariance(spark):
     cents = spark.read.schema("s int, cid int, cv array<double>").parquet(
         os.path.join(d, "codebooks")
     )
-    assignments = spark.read.schema(_K23_ASSIGN_SCHEMA).parquet(
+    assignments = spark.read.schema(_L81_ASSIGN_SCHEMA).parquet(
         os.path.join(d, [b for b in bys if b.startswith("assignments-")][-1])
     )
     codes = spark.read.schema("vec_id bigint, s int, code int").parquet(

@@ -166,10 +166,8 @@ def main() -> None:
 
     bind_views("q_dedup_chain")
     sigs = persisted_signature_table(spark, bench.SF_DIR)
-    # the chain's edge frame: star edges since round 12 (falls back to the
-    # capped pair generator when capturing plans of pre-r12 checkouts)
-    edge_fn = getattr(llm_ops, "lsh_star_edges", None) or llm_ops.lsh_candidate_pairs
-    cand = edge_fn(sigs, _checkpoint=False)
+    # the chain's edge frame: star edges since round 12
+    cand = llm_ops.lsh_star_edges(sigs)
     dump("q_dedup_chain_pairgen", cand)
     comp = connected_components(cand, "doc_a", "doc_b")
     sizes = (comp.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
