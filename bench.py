@@ -457,6 +457,16 @@ def _data_scale(sf_dir: str) -> int:
     return max(1, round(rows / 600_000))
 
 
+def _rowset(rows) -> list[tuple[str, ...]]:
+    """A rowset as sorted string tuples, floats rounded to 4 dp: the
+    tolerance of every cross-check in :func:`main` (tools/check_parity.py
+    compares exactly)."""
+    return sorted(
+        tuple(f"{v:.4f}" if isinstance(v, float) else str(v) for v in r)
+        for r in rows
+    )
+
+
 def main() -> None:
     spark = get_session("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -749,9 +759,9 @@ def main() -> None:
         b = spark.sql(SQL[name]).toPandas()
         if name == "q_sort":  # top-100 has extendedprice ties → compare key col only
             a, b = a[["l_extendedprice"]], b[["l_extendedprice"]]
-        ra = sorted(tuple(f"{v:.4f}" if isinstance(v, float) else str(v) for v in r) for r in a.itertuples(index=False))
-        rb = sorted(tuple(f"{v:.4f}" if isinstance(v, float) else str(v) for v in r) for r in b.itertuples(index=False))
-        assert ra == rb, f"front-end mismatch on {name}"
+        assert _rowset(a.itertuples(index=False)) == _rowset(
+            b.itertuples(index=False)
+        ), f"front-end mismatch on {name}"
 
     # MV-route cross-check: the timed q_join3_topn path (zero-exchange SMJ
     # against the maintained join MV) must produce the same rowset as the
@@ -760,9 +770,9 @@ def main() -> None:
     mv_bound = {**tables, "join3_mv": join3_mv}
     a = q_join3_topn_mv(spark, mv_bound).toPandas()
     b = spark.sql(SQL["q_join3_topn"]).toPandas()
-    ra = sorted(tuple(f"{v:.4f}" if isinstance(v, float) else str(v) for v in r) for r in a.itertuples(index=False))
-    rb = sorted(tuple(f"{v:.4f}" if isinstance(v, float) else str(v) for v in r) for r in b.itertuples(index=False))
-    assert ra == rb, "join3 MV route mismatch vs raw 3-join SQL"
+    assert _rowset(a.itertuples(index=False)) == _rowset(
+        b.itertuples(index=False)
+    ), "join3 MV route mismatch vs raw 3-join SQL"
 
     # text-stats MV-route cross-check: the maintained per-lang rollup must
     # reproduce the raw group-by SQL's rowset exactly (4-dp formatting,
@@ -771,9 +781,9 @@ def main() -> None:
     ts_bound = {**tables, "text_stats_mv": text_stats_mv}
     a = q_text_stats_mv(spark, ts_bound).toPandas()
     b = spark.sql(SQL["q_text_stats"]).toPandas()
-    ra = sorted(tuple(f"{v:.4f}" if isinstance(v, float) else str(v) for v in r) for r in a.itertuples(index=False))
-    rb = sorted(tuple(f"{v:.4f}" if isinstance(v, float) else str(v) for v in r) for r in b.itertuples(index=False))
-    assert ra == rb, "text-stats MV route mismatch vs raw group-by SQL"
+    assert _rowset(a.itertuples(index=False)) == _rowset(
+        b.itertuples(index=False)
+    ), "text-stats MV route mismatch vs raw group-by SQL"
 
     # q_ann_probe cross-checks (round 8): (a) the steady-state probe's
     # rowset must equal the l62 DuckDB oracle — the full rebuild+probe CTE,
@@ -791,13 +801,10 @@ def main() -> None:
         f"read_parquet('{SF_DIR}/embeddings.parquet')"
     )
     probe_rows = ann_probe_df.collect()
-    _fmt = lambda t: tuple(  # noqa: E731
-        f"{v:.4f}" if isinstance(v, float) else str(v) for v in t
-    )
     oracle_rows = _acon.execute(ORACLES["l62_ann_index_persist"]).fetchall()
-    assert sorted(_fmt(tuple(r)) for r in probe_rows) == sorted(
-        _fmt(t) for t in oracle_rows
-    ), "ann probe mismatch vs l62 oracle"
+    assert _rowset(probe_rows) == _rowset(oracle_rows), (
+        "ann probe mismatch vs l62 oracle"
+    )
     # recall@5 vs the brute-force exact answer is computed from the
     # calibration section's timed runs (the rowset is identical every
     # run — no separate fetch; at sf1 one brute execution is ~2 min)

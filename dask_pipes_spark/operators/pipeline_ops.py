@@ -9,6 +9,7 @@ fit/transform contract is verified end-to-end, not just smoke-tested.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import functions as F
@@ -23,13 +24,24 @@ from dask_pipes_spark.pipeline import (
 )
 from dask_pipes_spark.registry import query
 from dask_pipes_spark.session import (
+    CommitConflictError,
     _read_branches,
+    _write_json,
+    checkpoint_index_generation,
+    compact_manifest,
+    dataset_fingerprint,
+    delete_branch,
     ensure_index,
+    expire_snapshots,
     fanout,
+    gc_index_dir,
     head_generations,
     load,
     load_tables,
+    merge_branch,
+    publish_generation,
     scratch_path,
+    set_branch,
 )
 
 
@@ -1150,106 +1162,16 @@ def p17_join_mv_maintain(spark, sf_dir):
     )
 
 
-# Shared state for the aggregate-IVM keys (p18 maintenance == p20
-# checkpoint — both must start from the same staged bytes and apply the
-# same signed-partial algebra).
-def _agg_mv_rev():
-    # built lazily: Column construction needs an active SparkContext
-    return (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,6)"
-    )
+# --- the aggregate-MV kit -----------------------------------------------------
+# One implementation of the per-nation revenue aggregate MV that the batch
+# keys p18-p31 and the streaming keys k19/k22/k25/k26 maintain: the oracle,
+# the generation schema, the signed partial, the merge and the serving read.
+# p18 maintenance == p20 checkpoint == the k19 drain: all start from the same
+# staged world and apply the same signed-partial algebra.
 
-
-def _agg_mv_qty():
-    return F.col("l_quantity").cast("decimal(28,6)")
-_AGG_MV_FEED_COLS = [
-    "l_orderkey", "l_extendedprice", "l_discount", "l_quantity",
-]
-_AGG_MV_FEED_SCHEMA = (
-    "l_orderkey bigint, l_extendedprice double, l_discount double, "
-    "l_quantity double"
-)
-
-
-def _stage_agg_mv_state(spark, sf_dir: str, d: str) -> None:
-    """Stage 'yesterday's' aggregate-MV world: the o_orderkey→n_name
-    bridge, nation-grain partials over lineitem-without-the-``%10==7``
-    slice, the insert feed (that slice) and before-image tombstones
-    (``%100==4``)."""
-    lineitem = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    customer = load(spark, sf_dir, "customer")
-    nation = load(spark, sf_dir, "nation")
-    bridge = (
-        orders.join(
-            F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey")
-        )
-        .join(
-            F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey")
-        )
-        .select("o_orderkey", "n_name")
-    )
-    bridge.write.mode("overwrite").parquet(os.path.join(d, "bridge"))
-    li_old = lineitem.filter(F.col("l_orderkey") % 10 != 7)
-    (
-        li_old.join(bridge, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(_agg_mv_rev()).alias("rev"),
-            F.sum(_agg_mv_qty()).alias("qty"),
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(d, "agg_mv"))
-    )
-    lineitem.filter(F.col("l_orderkey") % 10 == 7).select(
-        *_AGG_MV_FEED_COLS
-    ).write.mode("overwrite").parquet(os.path.join(d, "delta_ins"))
-    li_old.filter(F.col("l_orderkey") % 100 == 4).select(
-        *_AGG_MV_FEED_COLS
-    ).write.mode("overwrite").parquet(os.path.join(d, "delta_del"))
-
-
-def _read_agg_mv_state(spark, d: str):
-    """Load the staged state back (persisted tables only):
-    (mv_partials, bridge, delta_ins, delta_del)."""
-    mv = spark.read.schema(
-        "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
-    ).parquet(os.path.join(d, "agg_mv"))
-    bridge = spark.read.schema("o_orderkey bigint, n_name string").parquet(
-        os.path.join(d, "bridge")
-    )
-    d_ins = spark.read.schema(_AGG_MV_FEED_SCHEMA).parquet(
-        os.path.join(d, "delta_ins")
-    )
-    d_del = spark.read.schema(_AGG_MV_FEED_SCHEMA).parquet(
-        os.path.join(d, "delta_del")
-    )
-    return mv, bridge, d_ins, d_del
-
-
-def _agg_mv_delta_partial(feed, bridge, sign: int):
-    """Signed per-nation partial from a CDC lineitem feed: broadcast the
-    delta batch (delta-sized by contract), stream the bridge map-side."""
-    return (
-        F.broadcast(feed)
-        .join(bridge, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("n_name")
-        .agg(
-            (F.lit(sign) * F.count(F.lit(1))).alias("cnt"),
-            (F.lit(sign) * F.sum(_agg_mv_rev()))
-            .cast("decimal(38,6)")
-            .alias("rev"),
-            (F.lit(sign) * F.sum(_agg_mv_qty()))
-            .cast("decimal(38,6)")
-            .alias("qty"),
-        )
-    )
-
-
-@query(
-    "p18_agg_mv_maintain",
-    oracle="""
+#: From-scratch twin of the maintained MV: the aggregate over the base
+#: tables with the ``%100==4`` tombstones applied (inserts are base rows).
+_AGG_MV_ORACLE = """
     SELECT n_name,
            CAST(COUNT(*) AS BIGINT) AS n_items,
            CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
@@ -1261,8 +1183,216 @@ def _agg_mv_delta_partial(feed, bridge, sign: int):
     JOIN nation n ON c.c_nationkey = n.n_nationkey
     WHERE l.l_orderkey % 100 <> 4
     GROUP BY n_name
-    """,
+    """
+#: Every MV generation (and the staged ``agg_mv`` partials) has this layout.
+_AGG_MV_SCHEMA = "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
+_AGG_MV_BRIDGE_SCHEMA = "o_orderkey bigint, n_name string"
+
+
+def _agg_mv_rev():
+    # built lazily: Column construction needs an active SparkContext
+    return (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
+        "decimal(28,6)"
+    )
+
+
+def _agg_mv_qty():
+    return F.col("l_quantity").cast("decimal(28,6)")
+
+
+_AGG_MV_FEED_COLS = [
+    "l_orderkey", "l_extendedprice", "l_discount", "l_quantity",
+]
+_AGG_MV_FEED_SCHEMA = (
+    "l_orderkey bigint, l_extendedprice double, l_discount double, "
+    "l_quantity double"
 )
+
+
+def _agg_mv_bridge(spark, sf_dir: str):
+    """The o_orderkey→n_name bridge: orders ⋈ customer ⋈ nation."""
+    return (
+        load(spark, sf_dir, "orders")
+        .join(
+            F.broadcast(load(spark, sf_dir, "customer")),
+            F.col("o_custkey") == F.col("c_custkey"),
+        )
+        .join(
+            F.broadcast(load(spark, sf_dir, "nation")),
+            F.col("c_nationkey") == F.col("n_nationkey"),
+        )
+        .select("o_orderkey", "n_name")
+    )
+
+
+def _agg_mv_initial(lineitem, bridge):
+    """Nation-grain partials of a lineitem slice through the bridge: the
+    fact scan that builds (or backfills) an MV, never a maintenance step."""
+    return (
+        lineitem.join(bridge, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("n_name")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum(_agg_mv_rev()).cast("decimal(38,6)").alias("rev"),
+            F.sum(_agg_mv_qty()).cast("decimal(38,6)").alias("qty"),
+        )
+    )
+
+
+def _stage_agg_mv_state(spark, sf_dir: str, d: str) -> None:
+    """Stage 'yesterday's' aggregate-MV world: the o_orderkey→n_name
+    bridge, nation-grain partials over lineitem-without-the-``%10==7``
+    slice, the insert feed (that slice) and before-image tombstones
+    (``%100==4``)."""
+    lineitem = load(spark, sf_dir, "lineitem")
+    bridge = _agg_mv_bridge(spark, sf_dir)
+    bridge.write.mode("overwrite").parquet(os.path.join(d, "bridge"))
+    li_old = lineitem.filter(F.col("l_orderkey") % 10 != 7)
+    _agg_mv_initial(li_old, bridge).write.mode("overwrite").parquet(
+        os.path.join(d, "agg_mv")
+    )
+    lineitem.filter(F.col("l_orderkey") % 10 == 7).select(
+        *_AGG_MV_FEED_COLS
+    ).write.mode("overwrite").parquet(os.path.join(d, "delta_ins"))
+    li_old.filter(F.col("l_orderkey") % 100 == 4).select(
+        *_AGG_MV_FEED_COLS
+    ).write.mode("overwrite").parquet(os.path.join(d, "delta_del"))
+
+
+def _read_agg_mv(spark, d: str, gen: str):
+    """Scan one MV generation (or the staged ``agg_mv`` partials)."""
+    return spark.read.schema(_AGG_MV_SCHEMA).parquet(os.path.join(d, gen))
+
+
+def _read_agg_mv_feeds(spark, d: str):
+    """Load the staged bridge and CDC feeds back (persisted tables only):
+    (bridge, delta_ins, delta_del)."""
+    bridge = spark.read.schema(_AGG_MV_BRIDGE_SCHEMA).parquet(
+        os.path.join(d, "bridge")
+    )
+    d_ins = spark.read.schema(_AGG_MV_FEED_SCHEMA).parquet(
+        os.path.join(d, "delta_ins")
+    )
+    d_del = spark.read.schema(_AGG_MV_FEED_SCHEMA).parquet(
+        os.path.join(d, "delta_del")
+    )
+    return bridge, d_ins, d_del
+
+
+def _agg_mv_partial(feed, bridge, sign):
+    """Signed per-nation partial of a CDC lineitem feed: broadcast the
+    delta batch (delta-sized by contract), stream the bridge map-side.
+    ``sign`` is +1/−1 for a one-sign feed, or a Column (the CDC rows'
+    ``sign``) when one batch interleaves inserts and retractions."""
+    s = F.lit(sign) if isinstance(sign, int) else sign
+    return (
+        F.broadcast(feed)
+        .join(bridge, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("n_name")
+        .agg(
+            F.sum(s).alias("cnt"),
+            F.sum(s * _agg_mv_rev()).cast("decimal(38,6)").alias("rev"),
+            F.sum(s * _agg_mv_qty()).cast("decimal(38,6)").alias("qty"),
+        )
+    )
+
+
+def _agg_mv_merge(mv, *partials):
+    """Merge signed partials into an MV: one unionAll + groupBy. Counts and
+    decimal sums are exact and associative, so the result is bit-equal to
+    the from-scratch aggregate; groups whose count reaches zero retire."""
+    for partial in partials:
+        mv = mv.unionAll(partial)
+    return (
+        mv.groupBy("n_name")
+        .agg(
+            F.sum("cnt").alias("cnt"),
+            F.sum("rev").alias("rev"),
+            F.sum("qty").alias("qty"),
+        )
+        .filter(F.col("cnt") > 0)  # retired groups leave the MV
+    )
+
+
+def _agg_mv_project(mv):
+    """The served columns of the MV's mergeable partials."""
+    return mv.select(
+        "n_name",
+        F.col("cnt").alias("n_items"),
+        F.col("rev").cast("double").alias("sum_revenue"),
+        F.col("qty").cast("double").alias("sum_qty"),
+    )
+
+
+def _serve_agg_mv(spark, idx: str, gen: str | None = None):
+    """The aggregate MV's serving read: one scan of generation ``gen``,
+    by default the manifest's head."""
+    return _agg_mv_project(
+        _read_agg_mv(spark, idx, gen or head_generations(idx)["agg_mv-"])
+    )
+
+
+def _commit_agg_mv_birth(spark, sf_dir: str, d: str):
+    """Stage yesterday's world and commit its partials as the birth
+    generation ``agg_mv-g001``; returns (bridge, delta_ins, delta_del)."""
+    _stage_agg_mv_state(spark, sf_dir, d)
+    checkpoint_index_generation(
+        d, _read_agg_mv(spark, d, "agg_mv"),
+        superseded=["agg_mv"], generation="agg_mv-g001",
+    )
+    return _read_agg_mv_feeds(spark, d)
+
+
+def _commit_agg_mv_cdc(
+    spark, d: str, feeds, head: str, generation: str, retain: int = 0
+) -> None:
+    """One CDC window: merge the staged feeds (inserts minus tombstones)
+    into generation ``head`` and checkpoint ``generation``, vacuuming
+    ``head`` and both feeds."""
+    br, d_ins, d_del = feeds
+    checkpoint_index_generation(
+        d,
+        _agg_mv_merge(
+            _read_agg_mv(spark, d, head),
+            _agg_mv_partial(d_ins, br, 1),
+            _agg_mv_partial(d_del, br, -1),
+        ),
+        superseded=[head, "delta_ins", "delta_del"],
+        generation=generation, retain=retain,
+    )
+
+
+def _stage_agg_mv_windows(
+    spark, sf_dir: str, d: str, residue: int, feed: str
+) -> None:
+    """Two maintenance windows under ``retain=1`` (p21/p22/p23): window 1
+    applies the staged CDC and checkpoints ``agg_mv-g002``; window 2
+    retracts the ``l_orderkey % 100 == residue`` slice — staged FIRST as
+    the before-image feed ``feed``, while its rows are still live — from
+    g002 and checkpoints ``agg_mv-g003``, keeping g002 readable."""
+    _stage_agg_mv_state(spark, sf_dir, d)
+    load(spark, sf_dir, "lineitem").filter(
+        F.col("l_orderkey") % 100 == residue
+    ).select(*_AGG_MV_FEED_COLS).write.mode("overwrite").parquet(
+        os.path.join(d, feed)
+    )
+    feeds = _read_agg_mv_feeds(spark, d)
+    _commit_agg_mv_cdc(spark, d, feeds, "agg_mv", "agg_mv-g002", retain=1)
+    retract = spark.read.schema(_AGG_MV_FEED_SCHEMA).parquet(
+        os.path.join(d, feed)
+    )
+    checkpoint_index_generation(
+        d,
+        _agg_mv_merge(
+            _read_agg_mv(spark, d, "agg_mv-g002"),
+            _agg_mv_partial(retract, feeds[0], -1),
+        ),
+        superseded=["agg_mv-g002", feed],
+        generation="agg_mv-g003", retain=1,
+    )
+
+
+@query("p18_agg_mv_maintain", oracle=_AGG_MV_ORACLE)
 def p18_agg_mv_maintain(spark, sf_dir):
     """Fact-side aggregate IVM (round 8 — composing p17's CDC vocabulary
     with p5's partial-merge algebra at the grain the bench actually
@@ -1315,19 +1445,14 @@ def p18_agg_mv_maintain(spark, sf_dir):
         build=lambda d: _stage_agg_mv_state(spark, sf_dir, d),
     )
     # --- maintenance: MV partials + feeds + bridge only from here on ---
-    mv, bridge, d_ins, d_del = _read_agg_mv_state(spark, base)
-    merged = (
-        mv.unionAll(_agg_mv_delta_partial(d_ins, bridge, 1))
-        .unionAll(_agg_mv_delta_partial(d_del, bridge, -1))
-        .groupBy("n_name")
-        .agg(
-            F.sum("cnt").alias("n_items"),
-            F.sum("rev").cast("double").alias("sum_revenue"),
-            F.sum("qty").cast("double").alias("sum_qty"),
+    bridge, d_ins, d_del = _read_agg_mv_feeds(spark, base)
+    return _agg_mv_project(
+        _agg_mv_merge(
+            _read_agg_mv(spark, base, "agg_mv"),
+            _agg_mv_partial(d_ins, bridge, 1),
+            _agg_mv_partial(d_del, bridge, -1),
         )
-        .filter(F.col("n_items") > 0)  # retired groups leave the MV
     )
-    return merged
 
 
 @query(
@@ -1390,11 +1515,6 @@ def p19_mv_chain_maintain(spark, sf_dir):
     answer must reflect each applied exactly once."""
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_p19_mvchain_{tag}")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,6)"
-    )
-    qty = F.col("l_quantity").cast("decimal(28,6)")
-    feed_cols = ["l_orderkey", "l_extendedprice", "l_discount", "l_quantity"]
     nation = load(spark, sf_dir, "nation")
     customer = load(spark, sf_dir, "customer")
 
@@ -1417,17 +1537,17 @@ def p19_mv_chain_maintain(spark, sf_dir):
             .groupBy("c_custkey", "n_name")
             .agg(
                 F.count(F.lit(1)).alias("cnt"),
-                F.sum(rev).alias("rev"),
-                F.sum(qty).alias("qty"),
+                F.sum(_agg_mv_rev()).alias("rev"),
+                F.sum(_agg_mv_qty()).alias("qty"),
             )
             .write.mode("overwrite")
             .parquet(os.path.join(d, "partials"))
         )
         lineitem.filter(F.col("l_orderkey") % 10 == 7).select(
-            *feed_cols
+            *_AGG_MV_FEED_COLS
         ).write.mode("overwrite").parquet(os.path.join(d, "delta_ins"))
         li_old.filter(F.col("l_orderkey") % 100 == 4).select(
-            *feed_cols
+            *_AGG_MV_FEED_COLS
         ).write.mode("overwrite").parquet(os.path.join(d, "delta_del"))
         customer.filter(F.col("c_custkey") % 50 == 0).select(
             "c_custkey",
@@ -1445,14 +1565,10 @@ def p19_mv_chain_maintain(spark, sf_dir):
     bridge = spark.read.schema(
         "o_orderkey bigint, o_custkey bigint"
     ).parquet(os.path.join(base, "bridge"))
-    feed_schema = (
-        "l_orderkey bigint, l_extendedprice double, l_discount double, "
-        "l_quantity double"
-    )
-    d_ins = spark.read.schema(feed_schema).parquet(
+    d_ins = spark.read.schema(_AGG_MV_FEED_SCHEMA).parquet(
         os.path.join(base, "delta_ins")
     )
-    d_del = spark.read.schema(feed_schema).parquet(
+    d_del = spark.read.schema(_AGG_MV_FEED_SCHEMA).parquet(
         os.path.join(base, "delta_del")
     )
     d_cust = spark.read.schema("c_custkey bigint, new_nationkey int").parquet(
@@ -1485,8 +1601,12 @@ def p19_mv_chain_maintain(spark, sf_dir):
             .groupBy(F.col("o_custkey").alias("c_custkey"))
             .agg(
                 (F.lit(sign) * F.count(F.lit(1))).alias("cnt"),
-                (F.lit(sign) * F.sum(rev)).cast("decimal(38,6)").alias("rev"),
-                (F.lit(sign) * F.sum(qty)).cast("decimal(38,6)").alias("qty"),
+                (F.lit(sign) * F.sum(_agg_mv_rev()))
+                .cast("decimal(38,6)")
+                .alias("rev"),
+                (F.lit(sign) * F.sum(_agg_mv_qty()))
+                .cast("decimal(38,6)")
+                .alias("qty"),
             )
         )
 
@@ -1509,33 +1629,10 @@ def p19_mv_chain_maintain(spark, sf_dir):
             F.sum("qty").alias("qty"),
         )
     )
-    return (
-        merged.groupBy("n_name")
-        .agg(
-            F.sum("cnt").alias("n_items"),
-            F.sum("rev").cast("double").alias("sum_revenue"),
-            F.sum("qty").cast("double").alias("sum_qty"),
-        )
-        .filter(F.col("n_items") > 0)
-    )
+    return _agg_mv_project(_agg_mv_merge(merged.drop("c_custkey")))
 
 
-@query(
-    "p20_agg_mv_checkpoint",
-    oracle="""
-    SELECT n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                         AS DECIMAL(28,6))) AS DOUBLE) AS sum_revenue,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation ON c.c_nationkey = n_nationkey
-    WHERE l.l_orderkey % 100 <> 4
-    GROUP BY n_name
-    """,
-)
+@query("p20_agg_mv_checkpoint", oracle=_AGG_MV_ORACLE)
 def p20_agg_mv_checkpoint(spark, sf_dir):
     """Aggregate-MV write-back (round 8 — the l70/l72 generation protocol
     applied to IVM state, closing p18's loop the way l70 closed l65's):
@@ -1562,8 +1659,6 @@ def p20_agg_mv_checkpoint(spark, sf_dir):
     100 TB: serving cost drops from O(|MV| + |accumulated deltas|) per
     query to O(|MV|) once per maintenance window; the vacuum bounds the
     feed directory exactly as k18 bounds the landing zone."""
-    from dask_pipes_spark.session import checkpoint_index_generation
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_p20_aggmv_ckpt_{tag}")
 
@@ -1573,56 +1668,18 @@ def p20_agg_mv_checkpoint(spark, sf_dir):
         #    stay MERGEABLE, 3. write-back: compact → swap → manifest →
         #    vacuum
         _stage_agg_mv_state(spark, sf_dir, d)
-        mv, br, d_ins, d_del = _read_agg_mv_state(spark, d)
-        merged = (
-            mv.unionAll(_agg_mv_delta_partial(d_ins, br, 1))
-            .unionAll(_agg_mv_delta_partial(d_del, br, -1))
-            .groupBy("n_name")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("rev").alias("rev"),
-                F.sum("qty").alias("qty"),
-            )
-            .filter(F.col("cnt") > 0)  # retired groups leave the MV
-        )
-        checkpoint_index_generation(
-            d,
-            merged,
-            superseded=["agg_mv", "delta_ins", "delta_del"],
-            generation="agg_mv-g002",
+        _commit_agg_mv_cdc(
+            spark, d, _read_agg_mv_feeds(spark, d), "agg_mv", "agg_mv-g002"
         )
 
     # fingerprint the whole fixture dir: the staged state derives from
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="aggmv-ckpt-v1", build=_stage)
     # --- serving: ONE scan of the compacted generation ---
-    mv2 = spark.read.schema(
-        "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
-    ).parquet(os.path.join(base, "agg_mv-g002"))
-    return mv2.select(
-        "n_name",
-        F.col("cnt").alias("n_items"),
-        F.col("rev").cast("double").alias("sum_revenue"),
-        F.col("qty").cast("double").alias("sum_qty"),
-    )
+    return _serve_agg_mv(spark, base)
 
 
-@query(
-    "p21_mv_time_travel",
-    oracle="""
-    SELECT n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                         AS DECIMAL(28,6))) AS DOUBLE) AS sum_revenue,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE l.l_orderkey % 100 <> 4
-    GROUP BY n_name
-    """,
-)
+@query("p21_mv_time_travel", oracle=_AGG_MV_ORACLE)
 def p21_mv_time_travel(spark, sf_dir):
     """Generation time travel (round 9 — the registry-level consumer of
     ``checkpoint_index_generation``'s new ``retain`` window; the
@@ -1646,94 +1703,23 @@ def p21_mv_time_travel(spark, sf_dir):
     Iceberg's snapshot rollback), and regulatory as-of queries read
     retained history without replaying feeds. Cost is bounded: N extra
     generations of the (partial-sized, not fact-sized) MV."""
-    from dask_pipes_spark.session import checkpoint_index_generation
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_p21_mv_travel_{tag}")
-
-    def _stage(d: str) -> None:
-        # window 1: p18's CDC merge -> g002 (staged state vacuumed)
-        _stage_agg_mv_state(spark, sf_dir, d)
-        # stage window 2's before-image tombstones FIRST (the %100==24
-        # slice survives window 1: 24 <> 4 mod 100, and 24 ends in 4 so
-        # it cannot be in the %10==7 insert slice)
-        load(spark, sf_dir, "lineitem").filter(
-            F.col("l_orderkey") % 100 == 24
-        ).select(*_AGG_MV_FEED_COLS).write.mode("overwrite").parquet(
-            os.path.join(d, "delta_del2")
-        )
-        mv, br, d_ins, d_del = _read_agg_mv_state(spark, d)
-        merged1 = (
-            mv.unionAll(_agg_mv_delta_partial(d_ins, br, 1))
-            .unionAll(_agg_mv_delta_partial(d_del, br, -1))
-            .groupBy("n_name")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("rev").alias("rev"),
-                F.sum("qty").alias("qty"),
-            )
-            .filter(F.col("cnt") > 0)
-        )
-        checkpoint_index_generation(
-            d, merged1,
-            superseded=["agg_mv", "delta_ins", "delta_del"],
-            generation="agg_mv-g002", retain=1,
-        )
-        # window 2: retract the %100==24 slice from g002 -> g003; retain=1
-        # keeps g002 readable (the time-travel target)
-        g2 = spark.read.schema(
-            "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
-        ).parquet(os.path.join(d, "agg_mv-g002"))
-        d_del2 = spark.read.schema(_AGG_MV_FEED_SCHEMA).parquet(
-            os.path.join(d, "delta_del2")
-        )
-        merged2 = (
-            g2.unionAll(_agg_mv_delta_partial(d_del2, br, -1))
-            .groupBy("n_name")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("rev").alias("rev"),
-                F.sum("qty").alias("qty"),
-            )
-            .filter(F.col("cnt") > 0)
-        )
-        checkpoint_index_generation(
-            d, merged2,
-            superseded=["agg_mv-g002", "delta_del2"],
-            generation="agg_mv-g003", retain=1,
-        )
-
     # fingerprint the whole fixture dir: the staged state derives from
-    # lineitem AND the dimension chain (orders/customer/nation)
-    ensure_index(base, sf_dir, version="mv-travel-v1", build=_stage)
-    # --- serving: time-travel read of the RETAINED generation ---
-    g2 = spark.read.schema(
-        "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
-    ).parquet(os.path.join(base, "agg_mv-g002"))
-    return g2.select(
-        "n_name",
-        F.col("cnt").alias("n_items"),
-        F.col("rev").cast("double").alias("sum_revenue"),
-        F.col("qty").cast("double").alias("sum_qty"),
+    # lineitem AND the dimension chain (orders/customer/nation). The
+    # %100==24 slice survives window 1: 24 <> 4 mod 100, and 24 ends in
+    # 4 so it cannot be in the %10==7 insert slice.
+    ensure_index(
+        base, sf_dir, version="mv-travel-v1",
+        build=lambda d: _stage_agg_mv_windows(
+            spark, sf_dir, d, 24, "delta_del2"
+        ),
     )
+    # --- serving: time-travel read of the RETAINED generation ---
+    return _serve_agg_mv(spark, base, "agg_mv-g002")
 
 
-@query(
-    "p22_mv_restore",
-    oracle="""
-    SELECT n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                         AS DECIMAL(28,6))) AS DOUBLE) AS sum_revenue,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE l.l_orderkey % 100 <> 4
-    GROUP BY n_name
-    """,
-)
+@query("p22_mv_restore", oracle=_AGG_MV_ORACLE)
 def p22_mv_restore(spark, sf_dir):
     """Generation RESTORE (round 9 — the write-path twin of p21's
     VERSION-AS-OF read; Delta Lake's ``RESTORE TABLE ... TO VERSION`` /
@@ -1768,63 +1754,18 @@ def p22_mv_restore(spark, sf_dir):
     one O(MV-size) re-commit — never a fact-table replay — and the
     forensic read of the bad generation is a plain retained-generation
     scan (p21)."""
-    from dask_pipes_spark.session import checkpoint_index_generation
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_p22_mv_restore_{tag}")
-    gen_schema = (
-        "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
-    )
-
-    def _merge_signed(mv, br, feed, sign):
-        return (
-            mv.unionAll(_agg_mv_delta_partial(feed, br, sign))
-            .groupBy("n_name")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("rev").alias("rev"),
-                F.sum("qty").alias("qty"),
-            )
-            .filter(F.col("cnt") > 0)
-        )
 
     def _stage(d: str) -> None:
-        # window 1: p18's CDC merge -> g002 (retained past window 2)
-        _stage_agg_mv_state(spark, sf_dir, d)
-        # stage the bad batch's before-image rows FIRST (base slice)
-        load(spark, sf_dir, "lineitem").filter(
-            F.col("l_orderkey") % 100 == 42
-        ).select(*_AGG_MV_FEED_COLS).write.mode("overwrite").parquet(
-            os.path.join(d, "delta_bad")
-        )
-        mv, br, d_ins, d_del = _read_agg_mv_state(spark, d)
-        merged1 = _merge_signed(
-            _merge_signed(mv, br, d_ins, 1), br, d_del, -1
-        )
-        checkpoint_index_generation(
-            d, merged1,
-            superseded=["agg_mv", "delta_ins", "delta_del"],
-            generation="agg_mv-g002", retain=1,
-        )
-        # window 2: the BAD batch — wrongly retracts %100==42 -> g003
-        g2 = spark.read.schema(gen_schema).parquet(
-            os.path.join(d, "agg_mv-g002")
-        )
-        d_bad = spark.read.schema(_AGG_MV_FEED_SCHEMA).parquet(
-            os.path.join(d, "delta_bad")
-        )
-        checkpoint_index_generation(
-            d, _merge_signed(g2, br, d_bad, -1),
-            superseded=["agg_mv-g002", "delta_bad"],
-            generation="agg_mv-g003", retain=1,
-        )
+        # window 1: p18's CDC merge -> g002 (retained past window 2);
+        # window 2: the BAD batch — wrongly retracts the live base slice
+        # %100==42 -> g003
+        _stage_agg_mv_windows(spark, sf_dir, d, 42, "delta_bad")
         # window 3: RESTORE — re-commit the retained g002's content as
         # the new head g004; the bad g003 stays in the retention window
-        restored = spark.read.schema(gen_schema).parquet(
-            os.path.join(d, "agg_mv-g002")
-        )
         checkpoint_index_generation(
-            d, restored,
+            d, _read_agg_mv(spark, d, "agg_mv-g002"),
             superseded=["agg_mv-g003"],
             generation="agg_mv-g004", retain=1,
         )
@@ -1833,14 +1774,7 @@ def p22_mv_restore(spark, sf_dir):
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="mv-restore-v1", build=_stage)
     # --- serving: resolve the head from the manifest, then ONE scan ---
-    head = head_generations(base)["agg_mv-"]
-    mv = spark.read.schema(gen_schema).parquet(os.path.join(base, head))
-    return mv.select(
-        "n_name",
-        F.col("cnt").alias("n_items"),
-        F.col("rev").cast("double").alias("sum_revenue"),
-        F.col("qty").cast("double").alias("sum_qty"),
-    )
+    return _serve_agg_mv(spark, base)
 
 
 @query(
@@ -1890,76 +1824,22 @@ def p23_mv_change_feed(spark, sf_dir):
     serves any (vN, vM) pair inside the retention window."""
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_p23_mv_cdf_{tag}")
-    gen_schema = (
-        "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
-    )
-
-    def _stage(d: str) -> None:
-        from dask_pipes_spark.session import checkpoint_index_generation
-
-        # p21's two-window build: g002 retained, g003 head
-        _stage_agg_mv_state(spark, sf_dir, d)
-        load(spark, sf_dir, "lineitem").filter(
-            F.col("l_orderkey") % 100 == 24
-        ).select(*_AGG_MV_FEED_COLS).write.mode("overwrite").parquet(
-            os.path.join(d, "delta_del2")
-        )
-        mv, br, d_ins, d_del = _read_agg_mv_state(spark, d)
-        merged1 = (
-            mv.unionAll(_agg_mv_delta_partial(d_ins, br, 1))
-            .unionAll(_agg_mv_delta_partial(d_del, br, -1))
-            .groupBy("n_name")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("rev").alias("rev"),
-                F.sum("qty").alias("qty"),
-            )
-            .filter(F.col("cnt") > 0)
-        )
-        checkpoint_index_generation(
-            d, merged1,
-            superseded=["agg_mv", "delta_ins", "delta_del"],
-            generation="agg_mv-g002", retain=1,
-        )
-        g2 = spark.read.schema(gen_schema).parquet(
-            os.path.join(d, "agg_mv-g002")
-        )
-        d_del2 = spark.read.schema(_AGG_MV_FEED_SCHEMA).parquet(
-            os.path.join(d, "delta_del2")
-        )
-        merged2 = (
-            g2.unionAll(_agg_mv_delta_partial(d_del2, br, -1))
-            .groupBy("n_name")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("rev").alias("rev"),
-                F.sum("qty").alias("qty"),
-            )
-            .filter(F.col("cnt") > 0)
-        )
-        checkpoint_index_generation(
-            d, merged2,
-            superseded=["agg_mv-g002", "delta_del2"],
-            generation="agg_mv-g003", retain=1,
-        )
-
     # fingerprint the whole fixture dir: the staged state derives from
     # lineitem AND the dimension chain (orders/customer/nation)
-    ensure_index(base, sf_dir, version="mv-cdf-v1", build=_stage)
+    ensure_index(
+        base, sf_dir, version="mv-cdf-v1",
+        build=lambda d: _stage_agg_mv_windows(
+            spark, sf_dir, d, 24, "delta_del2"
+        ),
+    )
     # --- serving: version diff over the two retained generations ---
-    g2 = spark.read.schema(gen_schema).parquet(
-        os.path.join(base, "agg_mv-g002")
-    )
-    g3 = spark.read.schema(gen_schema).parquet(
-        os.path.join(base, "agg_mv-g003")
-    )
-    old = g2.select(
+    old = _read_agg_mv(spark, base, "agg_mv-g002").select(
         "n_name",
         F.col("cnt").alias("cnt_old"),
         F.col("rev").alias("rev_old"),
         F.col("qty").alias("qty_old"),
     )
-    new = g3.select(
+    new = _read_agg_mv(spark, base, "agg_mv-g003").select(
         "n_name",
         F.col("cnt").alias("cnt_new"),
         F.col("rev").alias("rev_new"),
@@ -2035,10 +1915,6 @@ def p24_partition_incremental_refresh(spark, sf_dir):
     same metadata-plane budget as a13/a19), and on object storage the
     fingerprint is the partition's manifest-entry set (Iceberg) or the
     transaction log's partition high-watermark (Delta)."""
-    import json
-
-    from dask_pipes_spark.session import dataset_fingerprint
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_p24_pinc_{tag}")
     part_schema = (
@@ -2087,12 +1963,7 @@ def p24_partition_incremental_refresh(spark, sf_dir):
             p: dataset_fingerprint(os.path.join(d, "source", p))
             for p in parts
         }
-        with open(os.path.join(d, "FINGERPRINTS.json.tmp"), "w") as fh:
-            json.dump(fps, fh)
-        os.replace(
-            os.path.join(d, "FINGERPRINTS.json.tmp"),
-            os.path.join(d, "FINGERPRINTS.json"),
-        )
+        _write_json(os.path.join(d, "FINGERPRINTS.json"), fps)
         # day 2: the upstream rewrites the 'R' partition in place
         li.filter(held_out).drop("l_returnflag").coalesce(4).write.mode(
             "append"
@@ -2146,22 +2017,7 @@ def p24_partition_incremental_refresh(spark, sf_dir):
     )
 
 
-@query(
-    "p25_write_audit_publish",
-    oracle="""
-    SELECT n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                         AS DECIMAL(28,6))) AS DOUBLE) AS sum_revenue,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE l.l_orderkey % 100 <> 4
-    GROUP BY n_name
-    """,
-)
+@query("p25_write_audit_publish", oracle=_AGG_MV_ORACLE)
 def p25_write_audit_publish(spark, sf_dir):
     """Write-audit-publish (round 9 — Iceberg's WAP pattern / Delta's
     staged commit; the quality gate p22's RESTORE exists to back up):
@@ -2195,25 +2051,11 @@ def p25_write_audit_publish(spark, sf_dir):
     quarantine/publish map to Iceberg's WAP branch, and the conservation
     check generalizes to any signed-merge invariant (row counts, decimal
     control totals, FK coverage)."""
-    import json
-
-    from dask_pipes_spark.session import (
-        checkpoint_index_generation,
-        publish_generation,
-    )
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_p25_wap_{tag}")
-    gen_schema = (
-        "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
-    )
 
     def _stage(d: str) -> None:
-        _stage_agg_mv_state(spark, sf_dir, d)
-        mv, br, d_ins, d_del = _read_agg_mv_state(spark, d)
-        checkpoint_index_generation(
-            d, mv, superseded=["agg_mv"], generation="agg_mv-g001"
-        )
+        br, d_ins, d_del = _commit_agg_mv_birth(spark, sf_dir, d)
         n_ins = d_ins.count()
         n_del = d_del.count()
         audits: list[dict] = []
@@ -2224,26 +2066,17 @@ def p25_write_audit_publish(spark, sf_dir):
             # publishes, so the next attempt must not hardcode g001
             head_gen = head_generations(d)["agg_mv-"]
             nxt = f"agg_mv-g{int(head_gen.rsplit('g', 1)[1]) + 1:03d}"
-            g1 = spark.read.schema(gen_schema).parquet(
-                os.path.join(d, head_gen)
-            )
+            g1 = _read_agg_mv(spark, d, head_gen)
             head_total = (g1.agg(F.sum("cnt")).collect()[0][0]) or 0
-            merged = g1.unionAll(_agg_mv_delta_partial(d_ins, br, 1))
-            for _ in range(1 + extra_del_applies):
-                merged = merged.unionAll(_agg_mv_delta_partial(d_del, br, -1))
-            staged_df = (
-                merged.groupBy("n_name")
-                .agg(
-                    F.sum("cnt").alias("cnt"),
-                    F.sum("rev").alias("rev"),
-                    F.sum("qty").alias("qty"),
-                )
-                .filter(F.col("cnt") > 0)
+            staged_df = _agg_mv_merge(
+                g1,
+                _agg_mv_partial(d_ins, br, 1),
+                *[_agg_mv_partial(d_del, br, -1)] * (1 + extra_del_applies),
             )
             staged = os.path.join(d, f"{nxt}.staged-{name}")
             staged_df.coalesce(1).write.mode("overwrite").parquet(staged)
             # --- audit the STAGED bytes (off the serving path) ---
-            s = spark.read.schema(gen_schema).parquet(staged)
+            s = spark.read.schema(_AGG_MV_SCHEMA).parquet(staged)
             got_total, n_null = s.agg(
                 F.sum("cnt"), F.count_if(F.col("n_name").isNull())
             ).collect()[0]
@@ -2277,40 +2110,16 @@ def p25_write_audit_publish(spark, sf_dir):
         # publishes first; on any real data it quarantines)
         if not _attempt("double-delete", extra_del_applies=1):
             _attempt("correct", extra_del_applies=0)
-        with open(os.path.join(d, "AUDIT.json.tmp"), "w") as fh:
-            json.dump(audits, fh)
-        os.replace(os.path.join(d, "AUDIT.json.tmp"), os.path.join(d, "AUDIT.json"))
+        _write_json(os.path.join(d, "AUDIT.json"), audits)
 
     # fingerprint the whole fixture dir: the staged state derives from
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="wap-v1", build=_stage)
     # --- serving: head from the manifest (the bad batch never appears) ---
-    head = head_generations(base)["agg_mv-"]
-    mv = spark.read.schema(gen_schema).parquet(os.path.join(base, head))
-    return mv.select(
-        "n_name",
-        F.col("cnt").alias("n_items"),
-        F.col("rev").cast("double").alias("sum_revenue"),
-        F.col("qty").cast("double").alias("sum_qty"),
-    )
+    return _serve_agg_mv(spark, base)
 
 
-@query(
-    "p26_concurrent_commit_rebase",
-    oracle="""
-    SELECT n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                         AS DECIMAL(28,6))) AS DOUBLE) AS sum_revenue,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE l.l_orderkey % 100 <> 4
-    GROUP BY n_name
-    """,
-)
+@query("p26_concurrent_commit_rebase", oracle=_AGG_MV_ORACLE)
 def p26_concurrent_commit_rebase(spark, sf_dir):
     """Optimistic concurrency on the generation protocol (round 9 —
     Iceberg's commit CAS / Delta's conflict-checked transaction; the
@@ -2342,54 +2151,22 @@ def p26_concurrent_commit_rebase(spark, sf_dir):
     O(MV) recompute (never a fact rescan, the delta feeds are still
     staged), and on object storage the expectation maps to Iceberg's
     snapshot-id check inside the atomic metadata swap."""
-    import json
-
-    from dask_pipes_spark.session import (
-        CommitConflictError,
-        checkpoint_index_generation,
-        publish_generation,
-    )
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_p26_occ_{tag}")
-    gen_schema = (
-        "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
-    )
-
-    def _merge(head_df, feed, sign):
-        return (
-            head_df.unionAll(_agg_mv_delta_partial(feed, br_holder[0], sign))
-            .groupBy("n_name")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("rev").alias("rev"),
-                F.sum("qty").alias("qty"),
-            )
-            .filter(F.col("cnt") > 0)
-        )
-
-    br_holder = []
 
     def _stage(d: str) -> None:
-        _stage_agg_mv_state(spark, sf_dir, d)
-        mv, br, d_ins, d_del = _read_agg_mv_state(spark, d)
-        br_holder.append(br)
-        checkpoint_index_generation(
-            d, mv, superseded=["agg_mv"], generation="agg_mv-g001"
-        )
-        g1 = spark.read.schema(gen_schema).parquet(
-            os.path.join(d, "agg_mv-g001")
-        )
+        br, d_ins, d_del = _commit_agg_mv_birth(spark, sf_dir, d)
+        g1 = _read_agg_mv(spark, d, "agg_mv-g001")
         # both maintainers stage FROM g001 — B's bytes are durable
         # before A commits (the genuine race shape)
         staged_a = os.path.join(d, "agg_mv-g002.staged-A")
-        _merge(g1, d_ins, 1).coalesce(1).write.mode("overwrite").parquet(
-            staged_a
-        )
+        _agg_mv_merge(g1, _agg_mv_partial(d_ins, br, 1)).coalesce(
+            1
+        ).write.mode("overwrite").parquet(staged_a)
         staged_b = os.path.join(d, "agg_mv-g002.staged-B")
-        _merge(g1, d_del, -1).coalesce(1).write.mode("overwrite").parquet(
-            staged_b
-        )
+        _agg_mv_merge(g1, _agg_mv_partial(d_del, br, -1)).coalesce(
+            1
+        ).write.mode("overwrite").parquet(staged_b)
         # A commits first: CAS on g001 holds
         publish_generation(
             d, staged_a, "agg_mv-g002",
@@ -2406,54 +2183,25 @@ def p26_concurrent_commit_rebase(spark, sf_dir):
         except CommitConflictError as exc:
             conflicts.append(str(exc))
         # re-base: recompute B's delta against the NEW head, retry CAS
-        g2 = spark.read.schema(gen_schema).parquet(
-            os.path.join(d, "agg_mv-g002")
-        )
         staged_b2 = os.path.join(d, "agg_mv-g003.staged-B")
-        _merge(g2, d_del, -1).coalesce(1).write.mode("overwrite").parquet(
-            staged_b2
-        )
+        _agg_mv_merge(
+            _read_agg_mv(spark, d, "agg_mv-g002"),
+            _agg_mv_partial(d_del, br, -1),
+        ).coalesce(1).write.mode("overwrite").parquet(staged_b2)
         publish_generation(
             d, staged_b2, "agg_mv-g003",
             superseded=["agg_mv-g002.staged-B", "delta_del", "agg_mv-g002"],
             expected_head="agg_mv-g002",
         )
-        with open(os.path.join(d, "CONFLICTS.json.tmp"), "w") as fh:
-            json.dump(conflicts, fh)
-        os.replace(
-            os.path.join(d, "CONFLICTS.json.tmp"),
-            os.path.join(d, "CONFLICTS.json"),
-        )
+        _write_json(os.path.join(d, "CONFLICTS.json"), conflicts)
 
     # fingerprint the whole fixture dir: the staged state derives from
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="occ-v1", build=_stage)
-    head = head_generations(base)["agg_mv-"]
-    mv = spark.read.schema(gen_schema).parquet(os.path.join(base, head))
-    return mv.select(
-        "n_name",
-        F.col("cnt").alias("n_items"),
-        F.col("rev").cast("double").alias("sum_revenue"),
-        F.col("qty").cast("double").alias("sum_qty"),
-    )
+    return _serve_agg_mv(spark, base)
 
 
-@query(
-    "p27_mv_schema_evolution",
-    oracle="""
-    SELECT n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                         AS DECIMAL(28,6))) AS DOUBLE) AS sum_revenue,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE l.l_orderkey % 100 <> 4
-    GROUP BY n_name
-    """,
-)
+@query("p27_mv_schema_evolution", oracle=_AGG_MV_ORACLE)
 def p27_mv_schema_evolution(spark, sf_dir):
     """Schema evolution through the generation protocol (round 9 — the
     Iceberg/Delta schema-evolution story applied to a maintained MV;
@@ -2480,39 +2228,25 @@ def p27_mv_schema_evolution(spark, sf_dir):
     retained generations need no rewrite — the schema registry, not the
     data, carries the difference (Iceberg evolves schemas by metadata
     for exactly this reason)."""
-    import json
-
-    from dask_pipes_spark.session import checkpoint_index_generation
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_p27_mvevo_{tag}")
-    v1_schema = "n_name string, cnt bigint, rev decimal(38,6)"
-    v2_schema = (
-        "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
-    )
 
     def _stage(d: str) -> None:
         _stage_agg_mv_state(spark, sf_dir, d)
-        mv, br, d_ins, d_del = _read_agg_mv_state(spark, d)
+        feeds = _read_agg_mv_feeds(spark, d)
         schemas = {}
         # v1 birth: count + revenue only (qty dropped at the partials)
         checkpoint_index_generation(
-            d, mv.select("n_name", "cnt", "rev"),
+            d, _read_agg_mv(spark, d, "agg_mv").select("n_name", "cnt", "rev"),
             superseded=["agg_mv"], generation="agg_mv-g001",
         )
         schemas["agg_mv-g001"] = ["n_name", "cnt", "rev"]
         # migration window: backfill qty — the ONE deliberate fact scan
-        li_old = load(spark, sf_dir, "lineitem").filter(
-            F.col("l_orderkey") % 10 != 7
-        )
-        backfilled = (
-            li_old.join(br, F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy("n_name")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum(_agg_mv_rev()).cast("decimal(38,6)").alias("rev"),
-                F.sum(_agg_mv_qty()).cast("decimal(38,6)").alias("qty"),
-            )
+        backfilled = _agg_mv_initial(
+            load(spark, sf_dir, "lineitem").filter(
+                F.col("l_orderkey") % 10 != 7
+            ),
+            feeds[0],
         )
         checkpoint_index_generation(
             d, backfilled, superseded=["agg_mv-g001"],
@@ -2520,31 +2254,11 @@ def p27_mv_schema_evolution(spark, sf_dir):
         )
         schemas["agg_mv-g002"] = ["n_name", "cnt", "rev", "qty"]
         # CDC window on the EVOLVED schema: p18's signed algebra + qty
-        g2 = spark.read.schema(v2_schema).parquet(
-            os.path.join(d, "agg_mv-g002")
-        )
-        merged = (
-            g2.unionAll(_agg_mv_delta_partial(d_ins, br, 1))
-            .unionAll(_agg_mv_delta_partial(d_del, br, -1))
-            .groupBy("n_name")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("rev").alias("rev"),
-                F.sum("qty").alias("qty"),
-            )
-            .filter(F.col("cnt") > 0)
-        )
-        checkpoint_index_generation(
-            d, merged,
-            superseded=["agg_mv-g002", "delta_ins", "delta_del"],
-            generation="agg_mv-g003", retain=2,
+        _commit_agg_mv_cdc(
+            spark, d, feeds, "agg_mv-g002", "agg_mv-g003", retain=2
         )
         schemas["agg_mv-g003"] = ["n_name", "cnt", "rev", "qty"]
-        with open(os.path.join(d, "SCHEMA.json.tmp"), "w") as fh:
-            json.dump(schemas, fh)
-        os.replace(
-            os.path.join(d, "SCHEMA.json.tmp"), os.path.join(d, "SCHEMA.json")
-        )
+        _write_json(os.path.join(d, "SCHEMA.json"), schemas)
 
     # fingerprint the whole fixture dir: the staged state derives from
     # lineitem AND the dimension chain (orders/customer/nation)
@@ -2560,31 +2274,10 @@ def p27_mv_schema_evolution(spark, sf_dir):
             f"schema registry mismatch for head {head!r}: got {cols!r}, "
             "expected the v2 column list ['n_name', 'cnt', 'rev', 'qty']"
         )
-    mv = spark.read.schema(v2_schema).parquet(os.path.join(base, head))
-    return mv.select(
-        "n_name",
-        F.col("cnt").alias("n_items"),
-        F.col("rev").cast("double").alias("sum_revenue"),
-        F.col("qty").cast("double").alias("sum_qty"),
-    )
+    return _serve_agg_mv(spark, base, head)
 
 
-@query(
-    "p28_orphan_gc",
-    oracle="""
-    SELECT n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                         AS DECIMAL(28,6))) AS DOUBLE) AS sum_revenue,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE l.l_orderkey % 100 <> 4
-    GROUP BY n_name
-    """,
-)
+@query("p28_orphan_gc", oracle=_AGG_MV_ORACLE)
 def p28_orphan_gc(spark, sf_dir):
     """Orphan GC + crash recovery for the generation protocol (round 10 —
     the Delta VACUUM / Iceberg remove-orphan-files analog; the r9
@@ -2619,51 +2312,24 @@ def p28_orphan_gc(spark, sf_dir):
     ``older_than_sec`` (Iceberg's orphan age guard, default one day)
     keeps it safe to run WHILE maintenance is live — a young tmp dir
     might be an in-flight build, an old one provably is not."""
-    import json
-
-    from dask_pipes_spark.session import (
-        checkpoint_index_generation,
-        gc_index_dir,
-        publish_generation,
-    )
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_p28_gc_{tag}")
-    gen_schema = (
-        "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
-    )
 
     def _stage(d: str) -> None:
-        _stage_agg_mv_state(spark, sf_dir, d)
-        mv, br, d_ins, d_del = _read_agg_mv_state(spark, d)
-        checkpoint_index_generation(
-            d, mv, superseded=["agg_mv"], generation="agg_mv-g001"
-        )
-        g1 = spark.read.schema(gen_schema).parquet(
-            os.path.join(d, "agg_mv-g001")
-        )
-        merged = (
-            g1.unionAll(_agg_mv_delta_partial(d_ins, br, 1))
-            .unionAll(_agg_mv_delta_partial(d_del, br, -1))
-            .groupBy("n_name")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("rev").alias("rev"),
-                F.sum("qty").alias("qty"),
-            )
-            .filter(F.col("cnt") > 0)
-        )
+        br, d_ins, d_del = _commit_agg_mv_birth(spark, sf_dir, d)
         staged = os.path.join(d, "agg_mv-g002.staged-cdc")
-        merged.coalesce(1).write.mode("overwrite").parquet(staged)
+        _agg_mv_merge(
+            _read_agg_mv(spark, d, "agg_mv-g001"),
+            _agg_mv_partial(d_ins, br, 1),
+            _agg_mv_partial(d_del, br, -1),
+        ).coalesce(1).write.mode("overwrite").parquet(staged)
         publish_generation(
             d, staged, "agg_mv-g002",
             superseded=["agg_mv-g001", "delta_ins", "delta_del"],
             expected_head="agg_mv-g001",
         )
         # --- plant every kill-point's debris (deterministic torn layouts) ---
-        head = spark.read.schema(gen_schema).parquet(
-            os.path.join(d, "agg_mv-g002")
-        )
+        head = _read_agg_mv(spark, d, "agg_mv-g002")
         # killed between compaction and swap: durable tmp, no final dir
         head.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(d, "agg_mv-g003.tmp")
@@ -2680,40 +2346,16 @@ def p28_orphan_gc(spark, sf_dir):
             os.path.join(d, "agg_mv-g002.quarantine-bad")
         )
         report = gc_index_dir(d, older_than_sec=0)
-        with open(os.path.join(d, "GC.json.tmp"), "w") as fh:
-            json.dump(report, fh)
-        os.replace(os.path.join(d, "GC.json.tmp"), os.path.join(d, "GC.json"))
+        _write_json(os.path.join(d, "GC.json"), report)
 
     # fingerprint the whole fixture dir: the staged state derives from
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="gc-v1", build=_stage)
     # --- serving: head from the manifest — GC never moved it ---
-    head = head_generations(base)["agg_mv-"]
-    mv = spark.read.schema(gen_schema).parquet(os.path.join(base, head))
-    return mv.select(
-        "n_name",
-        F.col("cnt").alias("n_items"),
-        F.col("rev").cast("double").alias("sum_revenue"),
-        F.col("qty").cast("double").alias("sum_qty"),
-    )
+    return _serve_agg_mv(spark, base)
 
 
-@query(
-    "p29_branch_wap",
-    oracle="""
-    SELECT n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                         AS DECIMAL(28,6))) AS DOUBLE) AS sum_revenue,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE l.l_orderkey % 100 <> 4
-    GROUP BY n_name
-    """,
-)
+@query("p29_branch_wap", oracle=_AGG_MV_ORACLE)
 def p29_branch_wap(spark, sf_dir):
     """Named branches on the manifest (round 10 — Iceberg refs / the
     branch form of write-audit-publish, completing what p25/p26
@@ -2746,28 +2388,11 @@ def p29_branch_wap(spark, sf_dir):
     queries the BRANCH head through the identical read path serving
     uses (Iceberg's WAP-branch advantage over a side quarantine dir:
     one resolution code path, no layout fork)."""
-    import json
-
-    from dask_pipes_spark.session import (
-        checkpoint_index_generation,
-        delete_branch,
-        merge_branch,
-        publish_generation,
-        set_branch,
-    )
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_p29_branch_{tag}")
-    gen_schema = (
-        "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
-    )
 
     def _stage(d: str) -> None:
-        _stage_agg_mv_state(spark, sf_dir, d)
-        mv, br, d_ins, d_del = _read_agg_mv_state(spark, d)
-        checkpoint_index_generation(
-            d, mv, superseded=["agg_mv"], generation="agg_mv-g001"
-        )
+        br, d_ins, d_del = _commit_agg_mv_birth(spark, sf_dir, d)
         set_branch(d, "main", "agg_mv-g001")
         n_ins = d_ins.count()
         n_del = d_del.count()
@@ -2775,37 +2400,22 @@ def p29_branch_wap(spark, sf_dir):
 
         def _attempt(gen: str, extra_del_applies: int) -> bool:
             # merge is always computed FROM main's ref (the serving line)
-            head_gen = json.load(
-                open(os.path.join(d, "BRANCHES.json"))
-            )["main"]
-            g1 = spark.read.schema(gen_schema).parquet(
-                os.path.join(d, head_gen)
-            )
+            head_gen = _read_branches(d)["main"]
+            g1 = _read_agg_mv(spark, d, head_gen)
             head_total = (g1.agg(F.sum("cnt")).collect()[0][0]) or 0
-            merged = g1.unionAll(_agg_mv_delta_partial(d_ins, br, 1))
-            for _ in range(1 + extra_del_applies):
-                merged = merged.unionAll(_agg_mv_delta_partial(d_del, br, -1))
             staged = os.path.join(d, f"{gen}.staged")
-            (
-                merged.groupBy("n_name")
-                .agg(
-                    F.sum("cnt").alias("cnt"),
-                    F.sum("rev").alias("rev"),
-                    F.sum("qty").alias("qty"),
-                )
-                .filter(F.col("cnt") > 0)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(staged)
-            )
+            _agg_mv_merge(
+                g1,
+                _agg_mv_partial(d_ins, br, 1),
+                *[_agg_mv_partial(d_del, br, -1)] * (1 + extra_del_applies),
+            ).coalesce(1).write.mode("overwrite").parquet(staged)
             # publish to the AUDIT branch: durable + linked + ref-
             # protected, but main has not moved — never servable yet
             publish_generation(
                 d, staged, gen, superseded=[], branch="audit"
             )
             # audit the BRANCH head through the serving read path
-            s = spark.read.schema(gen_schema).parquet(os.path.join(d, gen))
-            got_total, n_null = s.agg(
+            got_total, n_null = _read_agg_mv(spark, d, gen).agg(
                 F.sum("cnt"), F.count_if(F.col("n_name").isNull())
             ).collect()[0]
             got_total = got_total or 0
@@ -2830,40 +2440,16 @@ def p29_branch_wap(spark, sf_dir):
         # vacuously and merges first — same resolution discipline as p25
         if not _attempt("agg_mv-g002a", extra_del_applies=1):
             _attempt("agg_mv-g002b", extra_del_applies=0)
-        with open(os.path.join(d, "AUDIT.json.tmp"), "w") as fh:
-            json.dump(audits, fh)
-        os.replace(os.path.join(d, "AUDIT.json.tmp"), os.path.join(d, "AUDIT.json"))
+        _write_json(os.path.join(d, "AUDIT.json"), audits)
 
     # fingerprint the whole fixture dir: the staged state derives from
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="branch-wap-v1", build=_stage)
     # --- serving: resolve main's ref — the only head readers ever see ---
-    head = _read_branches(base)["main"]
-    mv = spark.read.schema(gen_schema).parquet(os.path.join(base, head))
-    return mv.select(
-        "n_name",
-        F.col("cnt").alias("n_items"),
-        F.col("rev").cast("double").alias("sum_revenue"),
-        F.col("qty").cast("double").alias("sum_qty"),
-    )
+    return _serve_agg_mv(spark, base, _read_branches(base)["main"])
 
 
-@query(
-    "p30_expire_snapshots",
-    oracle="""
-    SELECT n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                         AS DECIMAL(28,6))) AS DOUBLE) AS sum_revenue,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE l.l_orderkey % 100 <> 4
-    GROUP BY n_name
-    """,
-)
+@query("p30_expire_snapshots", oracle=_AGG_MV_ORACLE)
 def p30_expire_snapshots(spark, sf_dir):
     """Age-based snapshot expiry (round 10 — Iceberg's
     ``expire_snapshots(older_than, retain_last)``; the missing third leg
@@ -2891,89 +2477,31 @@ def p30_expire_snapshots(spark, sf_dir):
     100 TB: expiry is O(retained) metadata + unlink — the nightly
     janitor pass; age answers a different question than count, and the
     timestamped manifest is what makes either auditable."""
-    import json
-
-    from dask_pipes_spark.session import (
-        checkpoint_index_generation,
-        expire_snapshots,
-    )
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_p30_expire_{tag}")
-    gen_schema = (
-        "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
-    )
 
     def _stage(d: str) -> None:
-        _stage_agg_mv_state(spark, sf_dir, d)
-        mv, br, d_ins, d_del = _read_agg_mv_state(spark, d)
-        checkpoint_index_generation(
-            d, mv, superseded=["agg_mv"], generation="agg_mv-g001"
-        )
-        g1 = spark.read.schema(gen_schema).parquet(
-            os.path.join(d, "agg_mv-g001")
-        )
-        merged = (
-            g1.unionAll(_agg_mv_delta_partial(d_ins, br, 1))
-            .unionAll(_agg_mv_delta_partial(d_del, br, -1))
-            .groupBy("n_name")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("rev").alias("rev"),
-                F.sum("qty").alias("qty"),
-            )
-            .filter(F.col("cnt") > 0)
-        )
-        checkpoint_index_generation(
-            d, merged,
-            superseded=["agg_mv-g001", "delta_ins", "delta_del"],
-            generation="agg_mv-g002", retain=2,
+        _commit_agg_mv_cdc(
+            spark, d, _commit_agg_mv_birth(spark, sf_dir, d),
+            "agg_mv-g001", "agg_mv-g002", retain=2,
         )
         # OPTIMIZE window: recompact g002 as g003 — logically identical,
         # a new snapshot (the reason old ones accumulate)
-        g2 = spark.read.schema(gen_schema).parquet(
-            os.path.join(d, "agg_mv-g002")
-        )
         checkpoint_index_generation(
-            d, g2, superseded=["agg_mv-g002"],
+            d, _read_agg_mv(spark, d, "agg_mv-g002"),
+            superseded=["agg_mv-g002"],
             generation="agg_mv-g003", retain=2,
         )
         report = expire_snapshots(d, older_than_sec=0, keep_last=1)
-        with open(os.path.join(d, "EXPIRE.json.tmp"), "w") as fh:
-            json.dump(report, fh)
-        os.replace(
-            os.path.join(d, "EXPIRE.json.tmp"), os.path.join(d, "EXPIRE.json")
-        )
+        _write_json(os.path.join(d, "EXPIRE.json"), report)
 
     # fingerprint the whole fixture dir: the staged state derives from
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="expire-v1", build=_stage)
-    head = head_generations(base)["agg_mv-"]
-    mv = spark.read.schema(gen_schema).parquet(os.path.join(base, head))
-    return mv.select(
-        "n_name",
-        F.col("cnt").alias("n_items"),
-        F.col("rev").cast("double").alias("sum_revenue"),
-        F.col("qty").cast("double").alias("sum_qty"),
-    )
+    return _serve_agg_mv(spark, base)
 
 
-@query(
-    "p31_manifest_compaction",
-    oracle="""
-    SELECT n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                         AS DECIMAL(28,6))) AS DOUBLE) AS sum_revenue,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE l.l_orderkey % 100 <> 4
-    GROUP BY n_name
-    """,
-)
+@query("p31_manifest_compaction", oracle=_AGG_MV_ORACLE)
 def p31_manifest_compaction(spark, sf_dir):
     """Manifest log compaction riding the maintenance loop (round 11 —
     the r10 verdict's TOP item; Delta's every-10-commits log checkpoint /
@@ -3007,72 +2535,27 @@ def p31_manifest_compaction(spark, sf_dir):
     whose cost grows with AGE rather than data size; with it a k19-style
     continuous maintainer commits in O(1) forever — the same argument
     every production table format ships."""
-    import json
-
-    from dask_pipes_spark.session import (
-        checkpoint_index_generation,
-        compact_manifest,
-    )
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_p31_compact_{tag}")
-    gen_schema = (
-        "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
-    )
 
     def _stage(d: str) -> None:
-        _stage_agg_mv_state(spark, sf_dir, d)
-        mv, br, d_ins, d_del = _read_agg_mv_state(spark, d)
-        checkpoint_index_generation(
-            d, mv, superseded=["agg_mv"], generation="agg_mv-g001"
-        )
-        g1 = spark.read.schema(gen_schema).parquet(
-            os.path.join(d, "agg_mv-g001")
-        )
-        merged = (
-            g1.unionAll(_agg_mv_delta_partial(d_ins, br, 1))
-            .unionAll(_agg_mv_delta_partial(d_del, br, -1))
-            .groupBy("n_name")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("rev").alias("rev"),
-                F.sum("qty").alias("qty"),
-            )
-            .filter(F.col("cnt") > 0)
-        )
-        checkpoint_index_generation(
-            d, merged,
-            superseded=["agg_mv-g001", "delta_ins", "delta_del"],
-            generation="agg_mv-g002", retain=2,
+        _commit_agg_mv_cdc(
+            spark, d, _commit_agg_mv_birth(spark, sf_dir, d),
+            "agg_mv-g001", "agg_mv-g002", retain=2,
         )
         # ten OPTIMIZE windows: recompact the head, retain=2, compact the
         # log in-loop — the continuous-maintainer cadence
         report = {}
         for i in range(3, 13):
             prev = f"agg_mv-g{i - 1:03d}"
-            head_df = spark.read.schema(gen_schema).parquet(
-                os.path.join(d, prev)
-            )
             checkpoint_index_generation(
-                d, head_df, superseded=[prev],
+                d, _read_agg_mv(spark, d, prev), superseded=[prev],
                 generation=f"agg_mv-g{i:03d}", retain=2,
             )
             report = compact_manifest(d, keep_tail=4)
-        with open(os.path.join(d, "COMPACT.json.tmp"), "w") as fh:
-            json.dump(report, fh)
-        os.replace(
-            os.path.join(d, "COMPACT.json.tmp"),
-            os.path.join(d, "COMPACT.json"),
-        )
+        _write_json(os.path.join(d, "COMPACT.json"), report)
 
     # fingerprint the whole fixture dir: the staged state derives from
     # lineitem AND the dimension chain (orders/customer/nation)
     ensure_index(base, sf_dir, version="compact-v1", build=_stage)
-    head = head_generations(base)["agg_mv-"]
-    mv = spark.read.schema(gen_schema).parquet(os.path.join(base, head))
-    return mv.select(
-        "n_name",
-        F.col("cnt").alias("n_items"),
-        F.col("rev").cast("double").alias("sum_revenue"),
-        F.col("qty").cast("double").alias("sum_qty"),
-    )
+    return _serve_agg_mv(spark, base)

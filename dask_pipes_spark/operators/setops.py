@@ -827,10 +827,9 @@ def g17_dv_compaction(spark, sf_dir):
     compaction IO tracks the churn, not the table; on object storage
     steps (2)-(4) are one Iceberg rewrite-files commit, and the schedule
     is the same delta-fraction trigger as the index write-backs."""
-    import json
     import os
 
-    from dask_pipes_spark.session import ensure_index, scratch_path
+    from dask_pipes_spark.session import _write_json, ensure_index, scratch_path
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_g17_dvc_{tag}")
@@ -885,18 +884,9 @@ def g17_dv_compaction(spark, sf_dir):
             f: os.path.getsize(os.path.join(d, "base", f)) for f in carried
         }
         # (3) manifest before (4) vacuum
-        with open(os.path.join(d, "COMPACTION.json.tmp"), "w") as fh:
-            json.dump(
-                {
-                    "rewritten": dirty,
-                    "carried": carried,
-                    "carried_sizes": sizes,
-                },
-                fh,
-            )
-        os.replace(
-            os.path.join(d, "COMPACTION.json.tmp"),
+        _write_json(
             os.path.join(d, "COMPACTION.json"),
+            {"rewritten": dirty, "carried": carried, "carried_sizes": sizes},
         )
         for f in dirty:
             os.remove(os.path.join(d, "base", f))

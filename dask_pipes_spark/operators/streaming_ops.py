@@ -25,9 +25,21 @@ import os
 from pyspark.sql import functions as F
 
 from dask_pipes_spark.operators.llm_ext import _IVF_ASSIGN_SCHEMA, _LSH_BUCKET_SCHEMA
+from dask_pipes_spark.operators.pipeline_ops import (
+    _AGG_MV_BRIDGE_SCHEMA,
+    _AGG_MV_FEED_COLS,
+    _AGG_MV_ORACLE,
+    _agg_mv_bridge,
+    _agg_mv_initial,
+    _agg_mv_merge,
+    _agg_mv_partial,
+    _read_agg_mv,
+    _serve_agg_mv,
+)
 from dask_pipes_spark.operators.vectors import _L81_ASSIGN_SCHEMA
 from dask_pipes_spark.registry import dsum, query, sql_dsum
 from dask_pipes_spark.session import (
+    _write_json,
     checkpoint_index_generation,
     checkpoint_index_generations,
     collect_local,
@@ -976,9 +988,6 @@ def _drop_deleted(table, d_del):
 
 # --- k19: streaming aggregate IVM (round 9) ----------------------------------
 
-_K19_MV_SCHEMA = "n_name string, cnt bigint, rev decimal(38,6), qty decimal(38,6)"
-
-
 def _stage_k19_state(spark, sf_dir: str, d: str) -> None:
     """Stage the continuous-MV world: the o_orderkey→n_name bridge, the
     initial per-nation partials as generation ``agg_mv-g001`` (written
@@ -991,40 +1000,16 @@ def _stage_k19_state(spark, sf_dir: str, d: str) -> None:
     ≡0 mod 4 by construction) — mtime order = replay order (the
     stage_events_dir idiom). Every slice is non-empty and mixes signs,
     so each micro-batch exercises the interleaved insert/retract path."""
-    from dask_pipes_spark.operators.pipeline_ops import (
-        _AGG_MV_FEED_COLS,
-        _agg_mv_qty,
-        _agg_mv_rev,
-    )
-
     lineitem = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    customer = load(spark, sf_dir, "customer")
-    nation = load(spark, sf_dir, "nation")
-    bridge = (
-        orders.join(
-            F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey")
-        )
-        .join(
-            F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey")
-        )
-        .select("o_orderkey", "n_name")
+    _agg_mv_bridge(spark, sf_dir).write.mode("overwrite").parquet(
+        os.path.join(d, "bridge")
     )
-    bridge.write.mode("overwrite").parquet(os.path.join(d, "bridge"))
     li_old = lineitem.filter(F.col("l_orderkey") % 10 != 7)
-    initial = (
-        li_old.join(
-            spark.read.schema("o_orderkey bigint, n_name string").parquet(
-                os.path.join(d, "bridge")
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(_agg_mv_rev()).cast("decimal(38,6)").alias("rev"),
-            F.sum(_agg_mv_qty()).cast("decimal(38,6)").alias("qty"),
-        )
+    initial = _agg_mv_initial(
+        li_old,
+        spark.read.schema(_AGG_MV_BRIDGE_SCHEMA).parquet(
+            os.path.join(d, "bridge")
+        ),
     )
     checkpoint_index_generation(
         d, initial, superseded=[], generation="agg_mv-g001"
@@ -1044,45 +1029,18 @@ def _stage_k19_state(spark, sf_dir: str, d: str) -> None:
 
 def _agg_mv_fold(batch_df, index_dir: str, head: str):
     """The signed aggregate-MV fold shared by k19/k25/k26 and k22: fold
-    the CDC batch into signed per-nation partials (broadcast batch ⋈
-    map-side bridge — p18's algebra with the sign carried per row, since
-    one batch can interleave inserts and retractions), merge them into
-    the ``head`` MV exactly (count + decimal sums), and retire zero-count
-    groups. Associative AND commutative, so the final state is invariant
-    to how the CDC files batch."""
-    from dask_pipes_spark.operators.pipeline_ops import (
-        _agg_mv_qty,
-        _agg_mv_rev,
-    )
-
+    the CDC batch into signed per-nation partials (p18's algebra with the
+    sign carried per row, since one batch can interleave inserts and
+    retractions) and merge them into the ``head`` MV. Associative AND
+    commutative, so the final state is invariant to how the CDC files
+    batch."""
     ss = batch_df.sparkSession
-    mv = _read_gen(ss, index_dir, head, _K19_MV_SCHEMA)
-    bridge = ss.read.schema("o_orderkey bigint, n_name string").parquet(
+    bridge = ss.read.schema(_AGG_MV_BRIDGE_SCHEMA).parquet(
         os.path.join(index_dir, "bridge")
     )
-    partial = (
-        F.broadcast(batch_df)
-        .join(bridge, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("n_name")
-        .agg(
-            F.sum("sign").alias("cnt"),
-            F.sum(F.col("sign") * _agg_mv_rev())
-            .cast("decimal(38,6)")
-            .alias("rev"),
-            F.sum(F.col("sign") * _agg_mv_qty())
-            .cast("decimal(38,6)")
-            .alias("qty"),
-        )
-    )
-    return (
-        mv.unionAll(partial)
-        .groupBy("n_name")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("rev").alias("rev"),
-            F.sum("qty").alias("qty"),
-        )
-        .filter(F.col("cnt") > 0)  # retired groups leave the MV
+    return _agg_mv_merge(
+        _read_agg_mv(ss, index_dir, head),
+        _agg_mv_partial(batch_df, bridge, F.col("sign")),
     )
 
 
@@ -1097,33 +1055,7 @@ def _agg_mv_step(spark, index_dir: str):
     return step
 
 
-def _serve_agg_mv(spark, idx: str):
-    """The aggregate MV's serving read: one scan of the head generation."""
-    mv = _read_gen(spark, idx, head_generations(idx)["agg_mv-"], _K19_MV_SCHEMA)
-    return mv.select(
-        "n_name",
-        F.col("cnt").alias("n_items"),
-        F.col("rev").cast("double").alias("sum_revenue"),
-        F.col("qty").cast("double").alias("sum_qty"),
-    )
-
-
-@query(
-    "k19_stream_agg_ivm",
-    oracle="""
-    SELECT n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                         AS DECIMAL(28,6))) AS DOUBLE) AS sum_revenue,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE l.l_orderkey % 100 <> 4
-    GROUP BY n_name
-    """,
-)
+@query("k19_stream_agg_ivm", oracle=_AGG_MV_ORACLE)
 def k19_stream_agg_ivm(spark, sf_dir):
     """Continuous aggregate IVM through the ACTUAL streaming runtime
     (round 9 — the r8 verdict's item 2, composing p18's signed-partial
@@ -1467,15 +1399,13 @@ def _wap_step(spark, index_dir: str):
         nxt = _next_generation(cur)
         staged = os.path.join(index_dir, nxt + ".tmp")
         head_total, = (
-            _read_gen(ss, index_dir, cur, _K19_MV_SCHEMA)
-            .agg(F.sum("cnt"))
-            .collect()[0]
+            _read_agg_mv(ss, index_dir, cur).agg(F.sum("cnt")).collect()[0]
         )
         batch_signed, = batch_df.agg(F.sum("sign")).collect()[0]
         _agg_mv_fold(batch_df, index_dir, cur).coalesce(1).write.mode(
             "overwrite"
         ).parquet(staged)
-        staged_mv = ss.read.schema(_K19_MV_SCHEMA).parquet(staged)
+        staged_mv = _read_agg_mv(ss, index_dir, nxt + ".tmp")
         staged_total, = staged_mv.agg(F.sum("cnt")).collect()[0]
         staged_total = staged_total or 0
         expected = (head_total or 0) + (batch_signed or 0)
@@ -1494,9 +1424,7 @@ def _wap_step(spark, index_dir: str):
                 "verdict": "publish" if ok else "quarantine",
             }
         )
-        with open(audit_path + ".tmp", "w") as fh:
-            json.dump(audits, fh)
-        os.replace(audit_path + ".tmp", audit_path)
+        _write_json(audit_path, audits)
         if ok:
             return {"agg_mv-": staged_mv}
         os.replace(staged, os.path.join(index_dir, f"{nxt}.quarantine-t{trigger}"))
@@ -1505,22 +1433,7 @@ def _wap_step(spark, index_dir: str):
     return step
 
 
-@query(
-    "k22_stream_wap",
-    oracle="""
-    SELECT n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-                         AS DECIMAL(28,6))) AS DOUBLE) AS sum_revenue,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE l.l_orderkey % 100 <> 4
-    GROUP BY n_name
-    """,
-)
+@query("k22_stream_wap", oracle=_AGG_MV_ORACLE)
 def k22_stream_wap(spark, sf_dir):
     """Streaming write-audit-publish (round 9 — p25's quality gate
     inside k19's continuous-MV runtime; Iceberg WAP applied per
@@ -1900,7 +1813,7 @@ def k24_stream_residual_ivm(spark, sf_dir):
     return _residual_probe(indexed, cent, cent_rows, cents, codes)
 
 
-@query("k25_stream_gc", oracle=_K_ORACLES["k19_stream_agg_ivm"])
+@query("k25_stream_gc", oracle=_AGG_MV_ORACLE)
 def k25_stream_gc(spark, sf_dir):
     """Orphan GC riding the live maintenance stream (round 10 — p28's
     janitor composed into k19's continuous-MV loop; the deployment shape
@@ -1927,7 +1840,7 @@ def k25_stream_gc(spark, sf_dir):
     def _stage(d: str) -> None:
         _stage_k19_state(spark, sf_dir, d)
         # crash debris from a "previous run", planted deterministically
-        mv = _read_gen(spark, d, "agg_mv-g001", _K19_MV_SCHEMA)
+        mv = _read_agg_mv(spark, d, "agg_mv-g001")
         mv.coalesce(1).write.parquet(os.path.join(d, "agg_mv-g001.tmp"))
         mv.coalesce(1).write.parquet(
             os.path.join(d, "agg_mv-g001.staged-crashed")
@@ -1944,7 +1857,7 @@ def k25_stream_gc(spark, sf_dir):
     return _serve_agg_mv(spark, idx)
 
 
-@query("k26_stream_compaction", oracle=_K_ORACLES["k19_stream_agg_ivm"])
+@query("k26_stream_compaction", oracle=_AGG_MV_ORACLE)
 def k26_stream_compaction(spark, sf_dir):
     """Manifest compaction riding the live maintenance loop (round 12 —
     the r11 verdict's item 5, closing the gap between p31's standalone

@@ -19,8 +19,11 @@ it to ``__spark_entry__.entry``); verified runtime-settable on PySpark 4.1.2.
 
 from __future__ import annotations
 
+import atexit
 import itertools
+import json
 import os
+import shutil
 import stat
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,16 +69,30 @@ def scratch_path(name: str) -> str:
     residual exposure is the sub-millisecond rename window, where a
     listing can transiently miss the directory; see ``ensure_index``).
     Plain write-then-read scratch (non-indexed operators) should stay on
-    the default per-process root."""
+    the default per-process root.
+
+    The default per-process root is removed when its process exits; the
+    shared root is never removed, it is the build-once index store."""
     global _SCRATCH_ROOT
     if _SCRATCH_ROOT is None:
         import tempfile
 
-        _SCRATCH_ROOT = os.environ.get(
-            "SPARK_GRAFT_SCRATCH_ROOT"
-        ) or os.path.join(tempfile.gettempdir(), f"dps_scratch_{os.getpid()}")
+        shared = os.environ.get("SPARK_GRAFT_SCRATCH_ROOT")
+        _SCRATCH_ROOT = shared or os.path.join(
+            tempfile.gettempdir(), f"dps_scratch_{os.getpid()}"
+        )
         os.makedirs(_SCRATCH_ROOT, exist_ok=True)
+        if not shared:
+            atexit.register(_remove_scratch_root, _SCRATCH_ROOT, os.getpid())
     return os.path.join(_SCRATCH_ROOT, name)
+
+
+def _remove_scratch_root(root: str, pid: int) -> None:
+    # a forked child inherits this hook with its parent's root: only the
+    # process that created the root may remove it
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
+
 
 def dataset_fingerprint(path: str) -> str:
     """Stable fingerprint of a source dataset (file or directory) for index
@@ -142,8 +159,6 @@ def ensure_index(
     PID-keyed). On a cluster both legs become the table format's commit
     protocol (optimistic snapshot CAS + atomic metadata swap)."""
     import fcntl
-    import json
-    import shutil
 
     manifest = os.path.join(index_dir, "MANIFEST.json")
     fp = dataset_fingerprint(source_path)
@@ -310,8 +325,6 @@ def checkpoint_index_generations(
     sketch sidecar) are the norm, not the exception; one commit point
     for N tables is what makes their serving snapshot consistent without
     cross-table read fences. Returns the final paths in move order."""
-    import shutil
-
     gens = [g for _, _, g in moves]
     if len(set(gens)) != len(gens):
         raise ValueError(f"duplicate generation names in one commit: {gens}")
@@ -390,8 +403,6 @@ def _load_manifest(index_dir: str) -> dict:
     means no manifest was ever committed). Keeping the whole dict is what
     lets rewrites preserve fields beyond history/retained (the round-11
     ``checkpoint`` compaction record)."""
-    import json
-
     manifest_path = os.path.join(index_dir, "VACUUM.json")
     if not os.path.exists(manifest_path):
         return {}
@@ -402,17 +413,21 @@ def _load_manifest(index_dir: str) -> dict:
         return {}
 
 
+def _write_json(path: str, obj) -> None:
+    """Write ``obj`` as JSON via ``<path>.tmp`` + ``os.replace``: a crash
+    mid-write leaves the previous file whole (plus a ``.tmp`` that
+    :func:`gc_index_dir` sweeps), never a truncated one."""
+    with open(path + ".tmp", "w") as fh:
+        json.dump(obj, fh)
+    os.replace(path + ".tmp", path)
+
+
 def _write_manifest(index_dir: str, manifest: dict) -> None:
     """Commit ``manifest`` as ``VACUUM.json`` via write-temp + rename
     (round 9, advice item): a truncate-then-write crashed mid-write would
     leave a corrupt manifest, which :func:`_load_manifest` reads as ``{}``
     — silently resetting the history. Callers hold the commit lock."""
-    import json
-
-    path = os.path.join(index_dir, "VACUUM.json")
-    with open(path + ".tmp", "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(path + ".tmp", path)
+    _write_json(os.path.join(index_dir, "VACUUM.json"), manifest)
 
 
 def _ckpt_heads(manifest: dict) -> list[str]:
@@ -474,8 +489,6 @@ def _append_vacuum_link(
     (round 11): all names commit under ONE history link (``bys``) — the
     atomic multi-table transaction :func:`checkpoint_index_generations`
     rides."""
-    import shutil
-
     manifest = _load_manifest(index_dir)
     history: list = manifest.get("history", [])
     gens = [generation] if isinstance(generation, str) else list(generation)
@@ -572,8 +585,6 @@ def _sweep_unreferenced(index_dir: str, history: list, retained: list) -> list[s
     superseded), retained generations, or names the history never
     mentions (CDC feeds, registries, parallel per-table state — GC cannot
     prove those are garbage from the manifest alone)."""
-    import shutil
-
     bys = _manifest_bys({**_load_manifest(index_dir), "history": history})
     ever_sup = {n for h in history for n in h["superseded"]}
     heads = {b for b in bys if b not in ever_sup}
@@ -591,8 +602,6 @@ def _read_branches(index_dir: str) -> dict:
     """Read the branch-ref registry (``BRANCHES.json``: branch → head
     generation name) — empty on absence or corruption (written via
     temp+rename, so corruption means nothing was ever committed)."""
-    import json
-
     p = os.path.join(index_dir, "BRANCHES.json")
     if not os.path.exists(p):
         return {}
@@ -606,12 +615,7 @@ def _read_branches(index_dir: str) -> dict:
 def _write_branches(index_dir: str, branches: dict) -> None:
     """Persist the branch registry (temp + rename; caller holds the
     commit lock)."""
-    import json
-
-    p = os.path.join(index_dir, "BRANCHES.json")
-    with open(p + ".tmp", "w") as fh:
-        json.dump(branches, fh)
-    os.replace(p + ".tmp", p)
+    _write_json(os.path.join(index_dir, "BRANCHES.json"), branches)
 
 
 def set_branch(index_dir: str, branch: str, generation: str) -> None:
@@ -772,7 +776,6 @@ def gc_index_dir(
 
     100 TB: this is the nightly orphan sweep every continuously-running
     lakehouse schedules — metadata-driven, O(listing), no data reads."""
-    import shutil
     import time
 
     report: dict = {"heads": [], "removed": [], "kept": []}
@@ -896,7 +899,6 @@ def expire_snapshots(
     100 TB: retention-by-count answers "how many rollback points";
     retention-by-age answers the compliance/storage-budget question
     ("keep 7 days") — real tables run both, so this engine does too."""
-    import shutil
     import time
 
     report: dict = {"expired": [], "kept": []}
@@ -1071,7 +1073,6 @@ def gc_scratch_root(
     per-index sweep runs too, so one call covers a whole scratch root.
     Returns ``{"removed", "kept", "indexes"}``, with per-index reports
     under ``indexes``."""
-    import shutil
     import time
 
     report: dict = {"removed": [], "kept": [], "indexes": {}}

@@ -1290,6 +1290,46 @@ def test_branch_refs_cas_retain_and_protection(spark, tmp_path):
     assert spark.read.parquet(os.path.join(base, "g003")).count() == 20
 
 
+def test_default_scratch_root_removed_at_exit(tmp_path):
+    """The default per-process scratch root (<tempdir>/dps_scratch_<pid>)
+    is removed when its process exits; a $SPARK_GRAFT_SCRATCH_ROOT root,
+    the shared build-once store, survives. No Spark: each child process
+    only makes a scratch dir, writes a file there and exits."""
+    import os
+    import subprocess
+    import sys
+
+    child = (
+        "import os\n"
+        "from dask_pipes_spark.session import scratch_path\n"
+        "p = scratch_path('x')\n"
+        "os.makedirs(p)\n"
+        "open(os.path.join(p, 'f'), 'w').close()\n"
+        "print(os.path.dirname(p))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_SCRATCH_ROOT"}
+    env["TMPDIR"] = str(tmp_path)
+
+    def run(env) -> str:
+        out = subprocess.run(
+            [sys.executable, "-c", child], cwd=repo, env=env,
+            capture_output=True, text=True, check=True, timeout=120,
+        )
+        return out.stdout.strip().splitlines()[-1]
+
+    root = run(env)
+    assert os.path.basename(root).startswith("dps_scratch_")
+    assert os.path.dirname(root) == str(tmp_path)
+    assert not os.path.exists(root), "default root outlived its process"
+
+    shared = str(tmp_path / "shared")
+    assert run({**env, "SPARK_GRAFT_SCRATCH_ROOT": shared}) == shared
+    assert os.path.isfile(os.path.join(shared, "x", "f")), (
+        "the shared root must survive its process"
+    )
+
+
 def test_gc_scratch_root_sweeps_ensure_index_debris(tmp_path):
     """The root-level sweep removes what the per-index sweep cannot see:
     torn ensure_index swap intermediates (<index>.build / <index>.stale

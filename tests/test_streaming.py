@@ -382,8 +382,8 @@ def test_k19_batching_invariance(spark):
     import os
     import shutil
 
+    from dask_pipes_spark.operators.pipeline_ops import _AGG_MV_SCHEMA
     from dask_pipes_spark.operators.streaming_ops import (
-        _K19_MV_SCHEMA,
         _agg_mv_step,
         _stage_k19_state,
         k19_stream_agg_ivm,
@@ -405,7 +405,7 @@ def test_k19_batching_invariance(spark):
     man = json.load(open(os.path.join(d, "VACUUM.json")))
     chain = [h["by"] for h in man["history"]]
     assert len(chain) == 3, "4 CDC files at mfpt=2 -> 2 maintenance windows"
-    mv = spark.read.schema(_K19_MV_SCHEMA).parquet(
+    mv = spark.read.schema(_AGG_MV_SCHEMA).parquet(
         os.path.join(d, man["by"])
     )
     from pyspark.sql import functions as F
