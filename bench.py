@@ -586,10 +586,8 @@ def main() -> None:
     # assignment of the every-20th query slice, bucket equi-join, exact
     # top-5 re-rank — never training, never an embeddings scan. DuckDB's
     # published twin is the brute-force exact scan (ANN_BRUTE_SQL above).
-    from dask_pipes_spark.operators.llm_ext import (
-        _ivf_probe_topk,
-        build_ivf_index,
-    )
+    from dask_pipes_spark.operators.ann_lifecycle import _build_index
+    from dask_pipes_spark.operators.llm_ext import IVF, _ivf_probe_topk
     from dask_pipes_spark.session import ensure_index, scratch_path
 
     ann_tag = SF_DIR.rstrip("/").rsplit("/", 1)[-1]
@@ -597,7 +595,7 @@ def main() -> None:
         scratch_path(f"dps_l62_ivf_{ann_tag}"),
         os.path.join(SF_DIR, "embeddings.parquet"),
         version="ivf-v1",
-        build=lambda d: build_ivf_index(spark, SF_DIR, d),
+        build=lambda d: _build_index(IVF, spark, SF_DIR, d),
     )
     ann_cent_rows = (
         spark.read.schema("bucket int, ce array<double>, cnrm double")

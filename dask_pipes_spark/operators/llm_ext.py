@@ -26,8 +26,26 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dask_pipes_spark.operators.ann_lifecycle import (
+    _CENT_SCHEMA,
+    _EMBED_SCHEMA,
+    _FINAL_SQL,
+    _IVF_ASSIGN_SCHEMA,
+    _KEYS_SCHEMA,
+    _LSH_BUCKET_SCHEMA,
+    IndexFamily,
+    _build_index,
+    _checkpoint_feeds,
+    _embedding_frame,
+    _merged_feeds,
+    _read_heads,
+    _read_state,
+    _stage_index,
+)
 from dask_pipes_spark.registry import query
 from dask_pipes_spark.session import (
+    checkpoint_index_generation,
+    collect_local,
     ensure_index,
     fanout,
     load,
@@ -408,25 +426,15 @@ def _ivf_corpus_and_centroids(spark, sf_dir, pred=None):
     (bucket, ce, cnrm). Decimal-summed centroid means keep the codebook
     bit-deterministic across partitionings — the property that lets both
     the DuckDB oracle and the parquet-persisted index agree exactly.
-    ``pred`` restricts the corpus slice (l65's old/delta split)."""
-    e = fanout(load(spark, sf_dir, "embeddings"))
-    if pred is not None:
-        e = e.filter(pred)
-    dbl = e.select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    n = dbl.withColumn(
-        "nrm", F.sqrt(F.aggregate("e", F.lit(0.0), lambda acc, x: acc + x * x))
-    )
+    ``pred`` restricts the corpus slice."""
+    n = _embedding_frame(spark, sf_dir, pred, "label")
     # coarse quantizer: per-label centroids, normalized. The element means
     # use exact DECIMAL sums (d6 discipline): order-insensitive partial
     # aggregation → a bit-deterministic codebook, which is what lets this
-    # key carry a full DuckDB oracle (round 3; previously F.avg made the
-    # centroid — and thus bucket assignment — ULP-unstable across runs).
+    # key carry a full DuckDB oracle (F.avg would make the centroid — and
+    # thus bucket assignment — ULP-unstable across runs).
     cent = (
-        dbl.select("label", F.posexplode("e").alias("pos", "val"))
+        n.select("label", F.posexplode("e").alias("pos", "val"))
         .groupBy("label", "pos")
         .agg(
             (
@@ -505,30 +513,56 @@ def l12_ivf_topk(spark, sf_dir):
     return _ivf_probe_topk(vecs, indexed, cent_rows)
 
 
-def build_ivf_index(spark, sf_dir: str, index_dir: str) -> None:
-    """Materialize the l12 IVF index to parquet: ``centroids/`` (bucket,
-    ce, cnrm — the coarse codebook, label-cardinality rows) and
-    ``assignments/`` (vec_id, e, nrm, bucket — every corpus vector in its
-    nprobe=1 bucket). Both sides round-trip doubles exactly, so the
-    persisted index reproduces the rebuild path bit-for-bit."""
-    vecs, cent = _ivf_corpus_and_centroids(spark, sf_dir)
-    cent_rows = cent.collect()
-    cent.write.mode("overwrite").parquet(os.path.join(index_dir, "centroids"))
-    ivf_assign(vecs, cent_rows, nprobe=1).write.mode("overwrite").parquet(
-        os.path.join(index_dir, "assignments")
+def _ivf_build(spark, sf_dir, pred):
+    """The IVF index over a corpus slice: ``centroids`` (bucket, ce, cnrm —
+    the coarse codebook, label-cardinality rows, one bounded collect) and
+    ``assignments`` (vec_id, e, nrm, bucket — every vector in its nprobe=1
+    bucket). Both round-trip doubles exactly, so a persisted index
+    reproduces the rebuild path bit-for-bit."""
+    vecs, cent = _ivf_corpus_and_centroids(spark, sf_dir, pred)
+    cent = collect_local(cent)
+    assignments = ivf_assign(vecs, cent.collect(), nprobe=1)
+    return {"centroids": cent, "assignments": assignments}
+
+
+def _ivf_assigner(q):
+    """Map-side assignment against the fixed codebook, collected once."""
+    cent_rows = q["centroids"].collect()
+    return lambda ins: {"assignments": ivf_assign(ins, cent_rows, nprobe=1)}
+
+
+IVF = IndexFamily(
+    quantizers=("centroids",),
+    tables=("assignments",),
+    schemas={
+        "centroids": _CENT_SCHEMA,
+        "assignments": _IVF_ASSIGN_SCHEMA,
+        "delta_ins": _EMBED_SCHEMA,
+    },
+    build=_ivf_build,
+    assigner=_ivf_assigner,
+)
+
+
+def _serve_ivf(st):
+    """The l12 probe over persisted IVF state: queries and candidates both
+    come from the assignments table, the codebook from ``centroids``."""
+    indexed = st["assignments"]
+    return _ivf_probe_topk(
+        indexed.select("vec_id", "e", "nrm"), indexed, st["centroids"].collect()
     )
 
 
 @query("l62_ann_index_persist", oracle=_L12_ORACLE)
 def l62_ann_index_persist(spark, sf_dir):
-    """ANN index persistence + reuse (round 7): build-once → load → probe.
+    """ANN index persistence + reuse: build-once → load → probe.
 
     Every prior ANN key rebuilds its index per query; at 100 TB the index
     BUILD is the expensive artifact (a full corpus pass + training) and
     the probe is the cheap, repeated operation — reuse is the entire point
     of IVF (Jégou et al. 2011's inverted file is an on-disk structure).
     This key persists the l12 coarse codebook + bucket assignments to
-    parquet via :func:`build_ivf_index` under an :func:`ensure_index`
+    parquet (the :data:`IVF` family's full build) under an :func:`ensure_index`
     manifest, then answers the SAME probe spec (queries = every 20th
     vector, nprobe=3, cosine top-5) purely from the persisted tables —
     the returned plan contains NO centroid training (no posexplode /
@@ -554,21 +588,11 @@ def l62_ann_index_persist(spark, sf_dir):
         scratch_path(f"dps_l62_ivf_{tag}"),
         os.path.join(sf_dir, "embeddings.parquet"),
         version="ivf-v1",
-        build=lambda d: build_ivf_index(spark, sf_dir, d),
+        build=lambda d: _build_index(IVF, spark, sf_dir, d),
     )
     # schema-explicit read-back (a3 idiom): empty builds leave nothing to
     # infer; bucket carries the label's int type
-    cent_rows = (
-        spark.read.schema("bucket int, ce array<double>, cnrm double")
-        .parquet(os.path.join(idx, "centroids"))
-        .collect()
-    )
-    indexed = spark.read.schema(
-        "vec_id bigint, e array<double>, nrm double, bucket int"
-    ).parquet(os.path.join(idx, "assignments"))
-    return _ivf_probe_topk(
-        indexed.select("vec_id", "e", "nrm"), indexed, cent_rows
-    )
+    return _serve_ivf(_read_state(spark, IVF, idx, ["centroids", "assignments"]))
 
 
 _L69_ORACLE = """
@@ -1063,16 +1087,30 @@ def l17_vector_lsh_topk(spark, sf_dir):
 def _lsh_corpus_index(spark, sf_dir, nbits: int = 6, pred=None):
     """Shared LSH build (l17 rebuild == l64 persist): every corpus vector
     sign-bucketed against the fixed seeded hyperplanes, as
-    (vec_id, e, nrm, bucket). ``pred`` restricts the corpus slice
-    (l75's old/delta split)."""
-    e = fanout(load(spark, sf_dir, "embeddings"))
-    if pred is not None:
-        e = e.filter(pred)
-    dbl = e.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
-    ).withColumn("nrm", F.sqrt(F.aggregate("e", F.lit(0.0), lambda a, x: a + x * x)))
+    (vec_id, e, nrm, bucket). ``pred`` restricts the corpus slice."""
     planes = _hyperplanes(nbits, 64)
-    return dbl.withColumn("bucket", lsh_bucket("e", planes))
+    return _embedding_frame(spark, sf_dir, pred).withColumn(
+        "bucket", lsh_bucket("e", planes)
+    )
+
+
+def _lsh_assigner(q):
+    """Sign-bucketing against the FIXED seeded basis — code, not data, so
+    there is no quantizer to read and a delta-maintained bucket table
+    equals the rebuilt one bucket-for-bucket."""
+    planes = _hyperplanes(6, 64)
+    return lambda ins: {"buckets": ins.withColumn("bucket", lsh_bucket("e", planes))}
+
+
+LSH = IndexFamily(
+    quantizers=(),
+    tables=("buckets",),
+    schemas={"buckets": _LSH_BUCKET_SCHEMA, "delta_ins": _EMBED_SCHEMA},
+    build=lambda spark, sf_dir, pred: {
+        "buckets": _lsh_corpus_index(spark, sf_dir, pred=pred)
+    },
+    assigner=_lsh_assigner,
+)
 
 
 def _lsh_probe_topk(indexed, nbits: int = 6):
@@ -1120,21 +1158,13 @@ def _lsh_probe_topk(indexed, nbits: int = 6):
     )
 
 
-def build_lsh_index(spark, sf_dir: str, index_dir: str) -> None:
-    """Materialize the l17 LSH index to parquet: ``buckets/`` (vec_id, e,
-    nrm, bucket) — the sign-bucketed corpus. The hyperplanes themselves
-    are fixed 6-decimal seeded literals (code, not data), so the bucket
-    table IS the whole index artifact."""
-    _lsh_corpus_index(spark, sf_dir).write.mode("overwrite").parquet(
-        os.path.join(index_dir, "buckets")
-    )
-
-
 @query("l64_lsh_index_persist", oracle=_l17_oracle())
 def l64_lsh_index_persist(spark, sf_dir):
     """LSH index persistence (the l62 protocol for the third ANN path):
-    l17's sign-bucketed corpus persisted once via :func:`build_lsh_index`
-    under an :func:`ensure_index` manifest, probe answered purely from the
+    l17's sign-bucketed corpus (the :data:`LSH` family's full build,
+    one ``buckets`` table — the hyperplanes are fixed 6-decimal seeded
+    literals, code not data) persisted once under an
+    :func:`ensure_index` manifest, probe answered purely from the
     persisted bucket table — queries take their own bucket from the index,
     so the probe plan contains NO hyperplane dot products and zero
     embeddings scans (test-pinned).
@@ -1150,80 +1180,20 @@ def l64_lsh_index_persist(spark, sf_dir):
         scratch_path(f"dps_l64_lsh_{tag}"),
         os.path.join(sf_dir, "embeddings.parquet"),
         version="lsh-v1",
-        build=lambda d: build_lsh_index(spark, sf_dir, d),
+        build=lambda d: _build_index(LSH, spark, sf_dir, d),
     )
-    indexed = spark.read.schema(
-        "vec_id bigint, e array<double>, nrm double, bucket bigint"
-    ).parquet(os.path.join(idx, "buckets"))
-    return _lsh_probe_topk(indexed)
+    return _lsh_probe_topk(_read_state(spark, LSH, idx, ["buckets"])["buckets"])
 
-
-_LSH_BUCKET_SCHEMA = "vec_id bigint, e array<double>, nrm double, bucket bigint"
 
 #: l75/l76 share l17's oracle with only the corpus slice changed — the
 #: hyperplane basis is fixed, so delta-maintained buckets == rebuilt buckets.
-_L75_ORACLE = _l17_oracle(corpus_pred="(vec_id % 9 = 5 OR vec_id % 11 <> 3)")
-
-
-def _stage_lsh_delta_state(spark, sf_dir: str, d: str) -> None:
-    """Stage 'yesterday's' persisted LSH state + CDC feeds (shared by l75
-    and l76): the sign-bucketed old corpus (``%9!=5``), the insert feed =
-    the held-out slice's RAW vectors (arriving unassigned — assignment is
-    the maintenance step), tombstones = ``%11==3``."""
-    old = _lsh_corpus_index(spark, sf_dir, pred=F.col("vec_id") % 9 != 5)
-    old.write.mode("overwrite").parquet(os.path.join(d, "buckets"))
-    e = fanout(load(spark, sf_dir, "embeddings")).filter(
-        F.col("vec_id") % 9 == 5
-    )
-    (
-        e.select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-        )
-        .withColumn(
-            "nrm",
-            F.sqrt(F.aggregate("e", F.lit(0.0), lambda a, x: a + x * x)),
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(d, "delta_ins"))
-    )
-    old.filter(F.col("vec_id") % 11 == 3).select("vec_id").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(d, "delta_del"))
-
-
-def _read_lsh_delta_state(spark, d: str):
-    """Load the staged state back (persisted tables only):
-    (buckets, delta_ins, delta_del)."""
-    buckets = spark.read.schema(_LSH_BUCKET_SCHEMA).parquet(
-        os.path.join(d, "buckets")
-    )
-    d_ins = spark.read.schema(
-        "vec_id bigint, e array<double>, nrm double"
-    ).parquet(os.path.join(d, "delta_ins"))
-    d_del = spark.read.schema("vec_id bigint").parquet(
-        os.path.join(d, "delta_del")
-    )
-    return buckets, d_ins, d_del
-
-
-def _lsh_delta_merge(buckets, d_ins, d_del, nbits: int = 6):
-    """l75's maintenance algebra (l65's shape on the LSH path): broadcast
-    anti-join deletes + map-side sign-bucket assignment of the inserts
-    against the FIXED hyperplane basis — a pure codegen expression, zero
-    exchange, no training of any kind (the basis is code, not data)."""
-    planes = _hyperplanes(nbits, 64)
-    ins = d_ins.withColumn("bucket", lsh_bucket("e", planes))
-    return buckets.join(F.broadcast(d_del), "vec_id", "left_anti").unionAll(
-        ins
-    )
+_L75_ORACLE = _l17_oracle(corpus_pred=_FINAL_SQL)
 
 
 @query("l75_lsh_index_delta", oracle=_L75_ORACLE)
 def l75_lsh_index_delta(spark, sf_dir):
-    """Incremental LSH index maintenance (round 9 — l65's delta algebra on
-    the l64 persisted bucket table, filling the lifecycle cell the r8
-    verdict ranked #3): the persisted sign-bucket table is updated from a
+    """Incremental LSH index maintenance (l65's delta algebra on the l64
+    persisted bucket table): the persisted sign-bucket table is updated from a
     CDC embedding delta — inserts (the held-out ``%9==5`` slice) and
     tombstones (``%11==3``) — WITHOUT re-bucketing the corpus:
 
@@ -1252,17 +1222,15 @@ def l75_lsh_index_delta(spark, sf_dir):
         scratch_path(f"dps_l75_lsh_delta_{tag}"),
         os.path.join(sf_dir, "embeddings.parquet"),
         version="lsh-delta-v1",
-        build=lambda d: _stage_lsh_delta_state(spark, sf_dir, d),
+        build=lambda d: _stage_index(LSH, spark, sf_dir, d),
     )
-    buckets, d_ins, d_del = _read_lsh_delta_state(spark, idx)
-    return _lsh_probe_topk(_lsh_delta_merge(buckets, d_ins, d_del))
+    return _lsh_probe_topk(_merged_feeds(LSH, spark, idx)["buckets"])
 
 
 @query("l76_lsh_index_checkpoint", oracle=_L75_ORACLE)
 def l76_lsh_index_checkpoint(spark, sf_dir):
-    """LSH index write-back (round 9 — the l70/l72 generation protocol on
-    the l75 state, completing the LSH row of the lifecycle matrix):
-    l75's maintenance algebra runs ONCE inside the build and the merged
+    """LSH index write-back (the l70/l72 generation protocol on the l75
+    state): l75's maintenance algebra runs ONCE inside the build and the merged
     bucket table is rewritten as generation ``buckets-g002`` via
     :func:`checkpoint_index_generation` (compact → atomic swap →
     VACUUM.json supersession → delete the old buckets and both feeds).
@@ -1276,19 +1244,11 @@ def l76_lsh_index_checkpoint(spark, sf_dir):
     O(index) IO rewrite per maintenance window, and the CDC feed
     directory is bounded by the vacuum exactly as k18 bounds the
     landing zone."""
-    from dask_pipes_spark.session import checkpoint_index_generation
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
 
     def _stage(d: str) -> None:
-        _stage_lsh_delta_state(spark, sf_dir, d)
-        buckets, d_ins, d_del = _read_lsh_delta_state(spark, d)
-        checkpoint_index_generation(
-            d,
-            _lsh_delta_merge(buckets, d_ins, d_del),
-            superseded=["buckets", "delta_ins", "delta_del"],
-            generation="buckets-g002",
-        )
+        _stage_index(LSH, spark, sf_dir, d)
+        _checkpoint_feeds(LSH, spark, d)
 
     idx = ensure_index(
         scratch_path(f"dps_l76_lsh_ckpt_{tag}"),
@@ -1296,10 +1256,7 @@ def l76_lsh_index_checkpoint(spark, sf_dir):
         version="lsh-ckpt-v1",
         build=_stage,
     )
-    indexed = spark.read.schema(_LSH_BUCKET_SCHEMA).parquet(
-        os.path.join(idx, "buckets-g002")
-    )
-    return _lsh_probe_topk(indexed)
+    return _lsh_probe_topk(_read_heads(spark, LSH, idx)["buckets"])
 
 
 _L65_ORACLE = """
@@ -1362,55 +1319,6 @@ _L65_ORACLE = """
     """
 
 
-def _stage_ivf_delta_state(spark, sf_dir: str, d: str) -> None:
-    """Stage 'yesterday's' persisted IVF state + CDC feeds (shared by l65
-    and l70 — the maintenance and the checkpoint key MUST start from the
-    same bytes): codebook + assignments trained/assigned without the
-    ``%9==5`` slice, insert feed = that slice, tombstones = ``%11==3``."""
-    vecs_old, cent = _ivf_corpus_and_centroids(
-        spark, sf_dir, pred=F.col("vec_id") % 9 != 5
-    )
-    cent.write.mode("overwrite").parquet(os.path.join(d, "centroids"))
-    ivf_assign(vecs_old, cent.collect(), nprobe=1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(d, "assignments"))
-    vecs_new, _ = _ivf_corpus_and_centroids(
-        spark, sf_dir, pred=F.col("vec_id") % 9 == 5
-    )
-    vecs_new.write.mode("overwrite").parquet(os.path.join(d, "delta_ins"))
-    vecs_old.filter(F.col("vec_id") % 11 == 3).select(
-        "vec_id"
-    ).write.mode("overwrite").parquet(os.path.join(d, "delta_del"))
-
-
-def _read_ivf_delta_state(spark, d: str):
-    """Load the staged state back (persisted tables only — never the
-    corpus): (cent_rows, assignments, delta_ins, delta_del)."""
-    cent_rows = (
-        spark.read.schema("bucket int, ce array<double>, cnrm double")
-        .parquet(os.path.join(d, "centroids"))
-        .collect()
-    )
-    assignments = spark.read.schema(_IVF_ASSIGN_SCHEMA).parquet(
-        os.path.join(d, "assignments")
-    )
-    d_ins = spark.read.schema(
-        "vec_id bigint, e array<double>, nrm double"
-    ).parquet(os.path.join(d, "delta_ins"))
-    d_del = spark.read.schema("vec_id bigint").parquet(
-        os.path.join(d, "delta_del")
-    )
-    return cent_rows, assignments, d_ins, d_del
-
-
-def _ivf_delta_merge(assignments, d_ins, d_del, cent_rows):
-    """l65's maintenance algebra: broadcast anti-join deletes + map-side
-    delta assignment against the fixed codebook."""
-    return assignments.join(
-        F.broadcast(d_del), "vec_id", "left_anti"
-    ).unionAll(ivf_assign(d_ins, cent_rows, nprobe=1))
-
-
 @query("l65_ann_index_delta", oracle=_L65_ORACLE)
 def l65_ann_index_delta(spark, sf_dir):
     """Incremental ANN index maintenance (l62's persistence + p17's delta
@@ -1440,27 +1348,19 @@ def l65_ann_index_delta(spark, sf_dir):
     ANN key implied; this is the nightly index refresh that makes a
     trillion-vector IVF operable."""
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = scratch_path(f"dps_l65_ivf_delta_{tag}")
     idx = ensure_index(
-        base,
+        scratch_path(f"dps_l65_ivf_delta_{tag}"),
         os.path.join(sf_dir, "embeddings.parquet"),
         version="ivf-delta-v1",
-        build=lambda d: _stage_ivf_delta_state(spark, sf_dir, d),
+        build=lambda d: _stage_index(IVF, spark, sf_dir, d),
     )
-    cent_rows, assignments, d_ins, d_del = _read_ivf_delta_state(spark, idx)
-    maintained = _ivf_delta_merge(assignments, d_ins, d_del, cent_rows)
-    return _ivf_probe_topk(
-        maintained.select("vec_id", "e", "nrm"), maintained, cent_rows
-    )
-
-
-_IVF_ASSIGN_SCHEMA = "vec_id bigint, e array<double>, nrm double, bucket int"
+    return _serve_ivf(_merged_feeds(IVF, spark, idx))
 
 
 @query("l70_ivf_index_checkpoint", oracle=_L65_ORACLE)
 def l70_ivf_index_checkpoint(spark, sf_dir):
-    """ANN index write-back (round 8 — the lifecycle gap l65 left open):
-    the delta-maintained IVF assignment state is CHECKPOINTED as a fresh
+    """ANN index write-back: the delta-maintained IVF assignment state
+    (l65's) is CHECKPOINTED as a fresh
     index generation via :func:`checkpoint_index_generation` — the
     k17/k18 compact→atomic-swap→manifest→vacuum protocol applied to
     index state — so the probe stops re-paying the anti-join + union
@@ -1489,50 +1389,31 @@ def l70_ivf_index_checkpoint(spark, sf_dir):
     k17's landing-zone compaction, applied to the table every ANN query
     reads. Cites k18's ordering discipline: new generation durable
     before manifest, manifest before vacuum."""
-    from dask_pipes_spark.session import checkpoint_index_generation
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = scratch_path(f"dps_l70_ivf_ckpt_{tag}")
 
     def _stage(d: str) -> None:
-        # 1. yesterday's persisted index + CDC feeds (the shared l65
-        #    staging — maintenance and checkpoint start from the same
-        #    bytes), 2. l65's maintenance algebra over the PERSISTED
-        #    state only, 3. write-back: compact → swap → manifest → vacuum
-        _stage_ivf_delta_state(spark, sf_dir, d)
-        rows, assignments, d_ins, d_del = _read_ivf_delta_state(spark, d)
-        checkpoint_index_generation(
-            d,
-            _ivf_delta_merge(assignments, d_ins, d_del, rows),
-            superseded=["assignments", "delta_ins", "delta_del"],
-            generation="assignments-g002",
-        )
+        # yesterday's index + CDC feeds (l65's staging: maintenance and
+        # checkpoint start from the same bytes), then l65's merge over the
+        # PERSISTED state only, written back: compact → swap → manifest →
+        # vacuum
+        _stage_index(IVF, spark, sf_dir, d)
+        _checkpoint_feeds(IVF, spark, d)
 
     idx = ensure_index(
-        base,
+        scratch_path(f"dps_l70_ivf_ckpt_{tag}"),
         os.path.join(sf_dir, "embeddings.parquet"),
         version="ivf-ckpt-v1",
         build=_stage,
     )
-    cent_rows = (
-        spark.read.schema("bucket int, ce array<double>, cnrm double")
-        .parquet(os.path.join(idx, "centroids"))
-        .collect()
-    )
-    indexed = spark.read.schema(_IVF_ASSIGN_SCHEMA).parquet(
-        os.path.join(idx, "assignments-g002")
-    )
-    return _ivf_probe_topk(
-        indexed.select("vec_id", "e", "nrm"), indexed, cent_rows
-    )
+    return _serve_ivf(_read_heads(spark, IVF, idx))
 
 
 @query("l79_index_time_travel", oracle=_L65_ORACLE)
 def l79_index_time_travel(spark, sf_dir):
-    """ANN index time travel (round 9 — p21's VERSION-AS-OF read applied
-    to INDEX state, completing the symmetry: every artifact the
-    generation protocol checkpoints is as-of readable, not just the
-    aggregate MV): TWO maintenance windows run inside the build —
+    """ANN index time travel (p21's VERSION-AS-OF read applied to INDEX
+    state: every artifact the generation protocol checkpoints is as-of
+    readable, not just the aggregate MV): TWO maintenance windows run
+    inside the build —
     window 1 applies l65's CDC (the ``%9==5`` insert slice + ``%11==3``
     tombstones) and checkpoints ``assignments-g002`` with ``retain=1``;
     window 2 retracts a further tombstone slice (``%13==6`` of the
@@ -1559,31 +1440,20 @@ def l79_index_time_travel(spark, sf_dir):
     assignment table (index-sized, not corpus-sized), swept by the same
     retention window; on object storage the retained list maps to
     Iceberg snapshots / Delta versions of the index table."""
-    from dask_pipes_spark.session import checkpoint_index_generation
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_l79_ivf_travel_{tag}")
 
     def _stage(d: str) -> None:
         # window 1: l65's CDC merge -> g002, retained past window 2
-        _stage_ivf_delta_state(spark, sf_dir, d)
-        rows, assignments, d_ins, d_del = _read_ivf_delta_state(spark, d)
-        checkpoint_index_generation(
-            d,
-            _ivf_delta_merge(assignments, d_ins, d_del, rows),
-            superseded=["assignments", "delta_ins", "delta_del"],
-            generation="assignments-g002",
-            retain=1,
-        )
+        _stage_index(IVF, spark, sf_dir, d)
+        _checkpoint_feeds(IVF, spark, d, retain=1)
         # window 2: retract %13==6 of the SURVIVORS from g002 -> g003;
         # retain=1 keeps g002 readable (the time-travel target)
-        g2 = spark.read.schema(_IVF_ASSIGN_SCHEMA).parquet(
-            os.path.join(d, "assignments-g002")
-        )
+        g2 = _read_state(spark, IVF, d, ["assignments-g002"])["assignments"]
         g2.filter(F.col("vec_id") % 13 == 6).select("vec_id").write.mode(
             "overwrite"
         ).parquet(os.path.join(d, "delta_del2"))
-        d_del2 = spark.read.schema("vec_id bigint").parquet(
+        d_del2 = spark.read.schema(_KEYS_SCHEMA).parquet(
             os.path.join(d, "delta_del2")
         )
         checkpoint_index_generation(
@@ -1600,16 +1470,10 @@ def l79_index_time_travel(spark, sf_dir):
         version="ivf-travel-v1",
         build=_stage,
     )
-    cent_rows = (
-        spark.read.schema("bucket int, ce array<double>, cnrm double")
-        .parquet(os.path.join(idx, "centroids"))
-        .collect()
+    # serving: time-travel probe of the RETAINED generation
+    return _serve_ivf(
+        _read_state(spark, IVF, idx, ["centroids", "assignments-g002"])
     )
-    # --- serving: time-travel probe of the RETAINED generation ---
-    g2 = spark.read.schema(_IVF_ASSIGN_SCHEMA).parquet(
-        os.path.join(idx, "assignments-g002")
-    )
-    return _ivf_probe_topk(g2.select("vec_id", "e", "nrm"), g2, cent_rows)
 
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",

@@ -607,11 +607,12 @@ def p10_checkpoint_restart(spark, sf_dir):
             .alias("total_spend"),
         )
     )
-    # session-unique dir: a fixed world-shared path lets concurrent sessions
-    # overwrite each other's checkpoint mid-read; normpath guards a
-    # trailing-slash sf_dir yielding an empty basename
+    # call-unique dir under the scratch root (removed at exit): a fixed
+    # path, even under a shared $SPARK_GRAFT_SCRATCH_ROOT, lets concurrent
+    # sessions overwrite each other's checkpoint mid-read; normpath guards
+    # a trailing-slash sf_dir yielding an empty basename
     ckpt = os.path.join(
-        tempfile.mkdtemp(prefix="dps_ckpt_p10_"),
+        tempfile.mkdtemp(prefix="dps_ckpt_p10_", dir=scratch_path("")),
         os.path.basename(os.path.normpath(sf_dir)),
     )
     stage1.write.mode("overwrite").parquet(ckpt)

@@ -24,7 +24,20 @@ import os
 
 from pyspark.sql import functions as F
 
-from dask_pipes_spark.operators.llm_ext import _IVF_ASSIGN_SCHEMA, _LSH_BUCKET_SCHEMA
+from dask_pipes_spark.operators.ann_lifecycle import (
+    _delta_step,
+    _final_slice,
+    _read_heads,
+    _stage_index,
+)
+from dask_pipes_spark.operators.llm_ext import (
+    _L65_ORACLE,
+    _L75_ORACLE,
+    IVF,
+    LSH,
+    _lsh_probe_topk,
+    _serve_ivf,
+)
 from dask_pipes_spark.operators.pipeline_ops import (
     _AGG_MV_BRIDGE_SCHEMA,
     _AGG_MV_FEED_COLS,
@@ -36,16 +49,24 @@ from dask_pipes_spark.operators.pipeline_ops import (
     _read_agg_mv,
     _serve_agg_mv,
 )
-from dask_pipes_spark.operators.vectors import _L81_ASSIGN_SCHEMA
+from dask_pipes_spark.operators.vectors import (
+    _L68D_ORACLE,
+    _L77_ORACLE,
+    _L84_ORACLE,
+    IVFPQ,
+    KIVFPQ,
+    RIVF,
+    _serve_ivfpq,
+    _serve_kivfpq,
+    _serve_rivf,
+)
 from dask_pipes_spark.registry import dsum, query, sql_dsum
 from dask_pipes_spark.session import (
     _write_json,
     checkpoint_index_generation,
     checkpoint_index_generations,
-    collect_local,
     compact_manifest,
     ensure_index,
-    fanout,
     gc_index_dir,
     head_generations,
     load,
@@ -969,23 +990,6 @@ def run_ivm_stream(
     drain(q, timeout)
 
 
-def _read_gen(spark, index_dir: str, name: str, schema: str):
-    """Scan one persisted generation (or quantizer artifact) of an index."""
-    return spark.read.schema(schema).parquet(os.path.join(index_dir, name))
-
-
-def _cdc_split(batch_df, cols=("vec_id", "e", "nrm")):
-    """(tombstone keys, insert rows) of an embedding-CDC micro-batch."""
-    d_del = batch_df.filter(F.col("op") == "D").select("vec_id")
-    d_ins = batch_df.filter(F.col("op") == "I").select(*cols)
-    return d_del, d_ins
-
-
-def _drop_deleted(table, d_del):
-    """Broadcast anti-join of a keyed index table against the tombstones."""
-    return table.join(F.broadcast(d_del), "vec_id", "left_anti")
-
-
 # --- k19: streaming aggregate IVM (round 9) ----------------------------------
 
 def _stage_k19_state(spark, sf_dir: str, d: str) -> None:
@@ -1098,87 +1102,13 @@ def k19_stream_agg_ivm(spark, sf_dir):
     return _serve_agg_mv(spark, idx)
 
 
-# --- k20: streaming ANN index maintenance (round 9) ---------------------------
-
-def _stage_k20_state(spark, sf_dir: str, d: str) -> None:
-    """Stage the continuous ANN-ingest world: the coarse codebook trained
-    on yesterday's corpus (``%9!=5``), its assignments as generation
-    ``assignments-g001`` (checkpoint-born, so the VACUUM chain exists
-    from the start), and the embedding CDC as a 4-file stream directory
-    of typed rows — inserts (the held-out ``%9==5`` slice, op='I') and
-    tombstones (``%11==3``, op='D', payload nulled) interleaved and
-    sliced by ``vec_id % 4``; mtime order = replay order. Insert and
-    delete key sets are disjoint by construction, so the maintenance
-    algebra is fully commutative across any batching."""
-    from dask_pipes_spark.operators.llm_ext import (
-        _ivf_corpus_and_centroids,
-        ivf_assign,
-    )
-
-    vecs_old, cent = _ivf_corpus_and_centroids(
-        spark, sf_dir, pred=F.col("vec_id") % 9 != 5
-    )
-    # one execution of the codebook lineage (round 13): the write and the
-    # driver-rows collect previously each re-ran the centroid aggregation
-    cent = collect_local(cent)
-    cent.write.mode("overwrite").parquet(os.path.join(d, "centroids"))
-    checkpoint_index_generation(
-        d,
-        ivf_assign(vecs_old, cent.collect(), nprobe=1),
-        superseded=[],
-        generation="assignments-g001",
-        target_files=8,
-    )
-    vecs_new, _ = _ivf_corpus_and_centroids(
-        spark, sf_dir, pred=F.col("vec_id") % 9 == 5
-    )
-    cdc = vecs_new.withColumn("op", F.lit("I")).unionAll(
-        vecs_old.filter(F.col("vec_id") % 11 == 3).select(
-            "vec_id",
-            F.lit(None).cast("array<double>").alias("e"),
-            F.lit(None).cast("double").alias("nrm"),
-        ).withColumn("op", F.lit("D"))
-    )
-    _stage_cdc_slices(cdc, d, F.col("vec_id"))
-
-
-def _ivf_step(spark, index_dir: str):
-    """k20's :func:`run_ivm_stream` step — l65's algebra per window:
-    tombstones anti-join out of the CURRENT inverted file, inserts are
-    assigned map-side against the FIXED coarse codebook. The codebook is
-    collected once, before the stream starts, because it is exactly the
-    artifact that does NOT change per batch."""
-    from dask_pipes_spark.operators.llm_ext import ivf_assign
-
-    cent_rows = (
-        spark.read.schema("bucket int, ce array<double>, cnrm double")
-        .parquet(os.path.join(index_dir, "centroids"))
-        .collect()
-    )
-
-    def step(batch_df, heads):
-        assigned = _read_gen(
-            batch_df.sparkSession, index_dir, heads["assignments-"],
-            _IVF_ASSIGN_SCHEMA,
-        )
-        d_del, d_ins = _cdc_split(batch_df)
-        return {
-            "assignments-": _drop_deleted(assigned, d_del).unionAll(
-                ivf_assign(d_ins, cent_rows, nprobe=1)
-            )
-        }
-
-    return step
-
-
-from dask_pipes_spark.operators.llm_ext import _L65_ORACLE
-
+# --- k20: streaming ANN index maintenance -----------------------------------
 
 @query("k20_stream_ann_ivm", oracle=_L65_ORACLE)
 def k20_stream_ann_ivm(spark, sf_dir):
     """Continuous ANN index maintenance through the streaming runtime
-    (round 9 — the k19 composition applied to the similarity-search
-    tier, the pattern a continuously-ingesting vector store runs): an
+    (the k19 composition applied to the similarity-search tier, the
+    pattern a continuously-ingesting vector store runs): an
     embedding CDC stream of typed rows (inserts + tombstones) maintains
     the IVF inverted file via ``foreachBatch`` — l65's maintenance
     algebra per micro-batch (broadcast anti-join deletes + map-side
@@ -1200,14 +1130,12 @@ def k20_stream_ann_ivm(spark, sf_dir):
     cadence quantizer retrain is exactly what the l62 staleness manifest
     models. State is the generation chain itself — nothing lives in the
     streaming state store."""
-    from dask_pipes_spark.operators.llm_ext import _ivf_probe_topk
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_k20_ann_stream_{tag}")
 
     def _stage(d: str) -> None:
-        _stage_k20_state(spark, sf_dir, d)
-        run_ivm_stream(spark, d, _ivf_step(spark, d))
+        _stage_index(IVF, spark, sf_dir, d, cdc=True)
+        run_ivm_stream(spark, d, _delta_step(IVF, spark, d))
 
     idx = ensure_index(
         base,
@@ -1215,91 +1143,15 @@ def k20_stream_ann_ivm(spark, sf_dir):
         version="k20-v1",
         build=_stage,
     )
-    cent_rows = _read_gen(
-        spark, idx, "centroids", "bucket int, ce array<double>, cnrm double"
-    ).collect()
-    indexed = _read_gen(
-        spark, idx, head_generations(idx)["assignments-"], _IVF_ASSIGN_SCHEMA
-    )
-    return _ivf_probe_topk(
-        indexed.select("vec_id", "e", "nrm"), indexed, cent_rows
-    )
+    return _serve_ivf(_read_heads(spark, IVF, idx))
 
 
-# --- k21: streaming LSH index maintenance (round 9) ----------------------------
-
-def _stage_k21_state(spark, sf_dir: str, d: str) -> None:
-    """Stage the continuous LSH-ingest world (the k20 staging on the
-    sign-LSH path): the old corpus (``%9!=5``) sign-bucketed against the
-    fixed hyperplane basis as generation ``buckets-g001``
-    (checkpoint-born), and the embedding CDC as a 4-file stream of typed
-    rows — raw-vector inserts (``%9==5``, op='I', arriving UNASSIGNED)
-    and tombstones (``%11==3``, op='D'); mtime order = replay order.
-    Disjoint key sets keep the fold commutative across any batching."""
-    from dask_pipes_spark.operators.llm_ext import _lsh_corpus_index
-
-    old = _lsh_corpus_index(spark, sf_dir, pred=F.col("vec_id") % 9 != 5)
-    checkpoint_index_generation(
-        d, old, superseded=[], generation="buckets-g001", target_files=8
-    )
-    e = fanout(load(spark, sf_dir, "embeddings")).filter(
-        F.col("vec_id") % 9 == 5
-    )
-    ins = (
-        e.select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-        )
-        .withColumn(
-            "nrm",
-            F.sqrt(F.aggregate("e", F.lit(0.0), lambda a, x: a + x * x)),
-        )
-        .withColumn("op", F.lit("I"))
-    )
-    cdc = ins.unionAll(
-        old.filter(F.col("vec_id") % 11 == 3)
-        .select(
-            "vec_id",
-            F.lit(None).cast("array<double>").alias("e"),
-            F.lit(None).cast("double").alias("nrm"),
-        )
-        .withColumn("op", F.lit("D"))
-    )
-    _stage_cdc_slices(cdc, d, F.col("vec_id"))
-
-
-def _lsh_step(spark, index_dir: str):
-    """k21's :func:`run_ivm_stream` step — l75's algebra per window:
-    tombstones anti-join out of the CURRENT bucket table, inserts are
-    sign-bucketed against the FIXED hyperplane basis (code, not data, so
-    there is nothing to collect per batch)."""
-    from dask_pipes_spark.operators.llm_ext import _hyperplanes, lsh_bucket
-
-    planes = _hyperplanes(6, 64)
-
-    def step(batch_df, heads):
-        buckets = _read_gen(
-            batch_df.sparkSession, index_dir, heads["buckets-"],
-            _LSH_BUCKET_SCHEMA,
-        )
-        d_del, d_ins = _cdc_split(batch_df)
-        return {
-            "buckets-": _drop_deleted(buckets, d_del).unionAll(
-                d_ins.withColumn("bucket", lsh_bucket("e", planes))
-            )
-        }
-
-    return step
-
-
-from dask_pipes_spark.operators.llm_ext import _L75_ORACLE
-
+# --- k21: streaming LSH index maintenance -----------------------------------
 
 @query("k21_stream_lsh_ivm", oracle=_L75_ORACLE)
 def k21_stream_lsh_ivm(spark, sf_dir):
     """Continuous LSH index maintenance through the streaming runtime
-    (round 9 — k20's harness on the sign-LSH path, completing the
-    lifecycle matrix's streaming column): the embedding CDC stream
+    (k20's harness on the sign-LSH path): the embedding CDC stream
     maintains the bucket table via ``foreachBatch`` — l75's maintenance
     algebra per micro-batch (broadcast anti-join deletes + map-side
     sign-bucket assignment against the FIXED hyperplane basis, a pure
@@ -1324,14 +1176,12 @@ def k21_stream_lsh_ivm(spark, sf_dir):
     and on a cluster its layout would be bucketed BY ``bucket`` so the
     probe equi-join is shuffle-free. State is the generation chain —
     nothing lives in the streaming state store."""
-    from dask_pipes_spark.operators.llm_ext import _lsh_probe_topk
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_k21_lsh_stream_{tag}")
 
     def _stage(d: str) -> None:
-        _stage_k21_state(spark, sf_dir, d)
-        run_ivm_stream(spark, d, _lsh_step(spark, d))
+        _stage_index(LSH, spark, sf_dir, d, cdc=True)
+        run_ivm_stream(spark, d, _delta_step(LSH, spark, d))
 
     idx = ensure_index(
         base,
@@ -1339,9 +1189,7 @@ def k21_stream_lsh_ivm(spark, sf_dir):
         version="k21-v1",
         build=_stage,
     )
-    return _lsh_probe_topk(
-        _read_gen(spark, idx, head_generations(idx)["buckets-"], _LSH_BUCKET_SCHEMA)
-    )
+    return _lsh_probe_topk(_read_heads(spark, LSH, idx)["buckets"])
 
 
 # --- k22: streaming write-audit-publish (round 9) ------------------------------
@@ -1474,123 +1322,12 @@ def k22_stream_wap(spark, sf_dir):
     return _serve_agg_mv(spark, idx)
 
 
-# --- k23: streaming IVF+PQ maintenance with pruned serving (r10, re-based r11) -
-
-def _stage_k23_state(spark, sf_dir: str, d: str) -> None:
-    """Stage the continuous IVFADC (by_residual=False) ingest world
-    (round 11 — the k20 staging on the composed l68 path): the coarse
-    codebook AND the PQ codebooks trained on yesterday's corpus
-    (``%9!=5``) persisted as the FIXED quantizers, BOTH index tables
-    checkpoint-born (a SLIM ``assignments-g001`` of (vec_id, bucket) —
-    serving needs membership only, unlike k24's residual path which
-    must keep e for re-encoding — and ``codes-g001``), and the
-    embedding CDC as k20's 4-file stream of raw vector inserts
-    (``%9==5``, op='I') and tombstones (``%11==3``, op='D'). Slicing by
-    ``vec_id % 4`` keeps key sets disjoint so the fold is commutative
-    across any batching."""
-    from dask_pipes_spark.operators.llm_ext import (
-        _ivf_corpus_and_centroids,
-        ivf_assign,
-    )
-    from dask_pipes_spark.operators.vectors import (
-        _pq_assign,
-        _pq_corpus,
-        _pq_train,
-    )
-
-    vecs_old, cent = _ivf_corpus_and_centroids(
-        spark, sf_dir, pred=F.col("vec_id") % 9 != 5
-    )
-    # one execution of the codebook lineage (round 13): the write and the
-    # driver-rows collect previously each re-ran the centroid aggregation
-    cent = collect_local(cent)
-    cent.write.mode("overwrite").parquet(os.path.join(d, "centroids"))
-    v_old, sub_old = _pq_corpus(spark, sf_dir, pred=F.col("vec_id") % 9 != 5)
-    cents = _pq_train(v_old, sub_old)
-    cents.write.mode("overwrite").parquet(os.path.join(d, "codebooks"))
-    checkpoint_index_generations(
-        d,
-        [
-            (
-                ivf_assign(vecs_old, cent.collect(), nprobe=1).select(
-                    "vec_id", "bucket"
-                ),
-                [],
-                "assignments-g001",
-            ),
-            (_pq_assign(sub_old, cents), [], "codes-g001"),
-        ],
-        target_files=8,
-    )
-    cdc = vecs_old.filter(F.col("vec_id") % 11 == 3).select(
-        "vec_id",
-        F.lit(None).cast("array<double>").alias("e"),
-        F.lit(None).cast("double").alias("nrm"),
-    ).withColumn("op", F.lit("D"))
-    vecs_new, _ = _ivf_corpus_and_centroids(
-        spark, sf_dir, pred=F.col("vec_id") % 9 == 5
-    )
-    cdc = vecs_new.withColumn("op", F.lit("I")).unionAll(cdc)
-    _stage_cdc_slices(cdc, d, F.col("vec_id"))
-
-
-def _pq_step(spark, index_dir: str):
-    """k23's :func:`run_ivm_stream` step — l67's algebra on BOTH IVFADC
-    tables per window: tombstones anti-join out of the CURRENT pair,
-    insert vectors are coarse-assigned map-side (literal-codebook
-    expression) and their subvectors PQ-encoded against the FIXED
-    codebooks — both quantizers read from the persisted artifacts, never
-    retrained. The pair lands under one manifest link, so a reader can
-    never observe assignments moved without codes."""
-    from dask_pipes_spark.operators.llm_ext import ivf_assign
-    from dask_pipes_spark.operators.vectors import (
-        _RIVF_CENT_SCHEMA,
-        _RIVF_CENTS_SCHEMA,
-        _RIVF_CODES_SCHEMA,
-        _pq_assign,
-        _pq_subspaces,
-    )
-
-    cent_rows = (
-        spark.read.schema(_RIVF_CENT_SCHEMA)
-        .parquet(os.path.join(index_dir, "centroids"))
-        .collect()
-    )
-
-    def step(batch_df, heads):
-        ss = batch_df.sparkSession
-        cents = _read_gen(ss, index_dir, "codebooks", _RIVF_CENTS_SCHEMA)
-        assignments = _read_gen(
-            ss, index_dir, heads["assignments-"], _L81_ASSIGN_SCHEMA
-        )
-        codes = _read_gen(ss, index_dir, heads["codes-"], _RIVF_CODES_SCHEMA)
-        d_del, d_ins = _cdc_split(batch_df)
-        sub_ins = _pq_subspaces(d_ins).select("vec_id", "s", "sv")
-        return {
-            "assignments-": _drop_deleted(assignments, d_del).unionAll(
-                ivf_assign(d_ins, cent_rows, nprobe=1).select(
-                    "vec_id", "bucket"
-                )
-            ),
-            "codes-": _drop_deleted(codes, d_del).unionAll(
-                _pq_assign(sub_ins, cents)
-            ),
-        }
-
-    return step
-
-
-from dask_pipes_spark.operators.vectors import (  # noqa: E402
-    _L68D_ORACLE,
-    _L77_ORACLE,
-)
-
+# --- k23: streaming IVF+PQ maintenance with pruned serving -------------------
 
 @query("k23_stream_pq_ivm", oracle=_L68D_ORACLE)
 def k23_stream_pq_ivm(spark, sf_dir):
-    """Continuous IVF+PQ maintenance with PRUNED serving (round 10,
-    re-based round 11 — the r10 verdict's item 3: the PQ streaming cell
-    no longer serves full-scan ADC): an embedding CDC stream maintains a
+    """Continuous IVF+PQ maintenance with PRUNED serving: an embedding
+    CDC stream maintains a
     slim coarse inverted file AND the PQ code table via ``foreachBatch``
     — broadcast anti-join deletes, map-side coarse assignment
     (literal-codebook expression) and map-side ``_pq_assign`` encoding
@@ -1618,24 +1355,12 @@ def k23_stream_pq_ivm(spark, sf_dir):
     table and 4 B/subspace codes only. The full-scan ADC spec survives
     as l55/l63/l67/l72 — the correctness baseline, exactly like l3 for
     brute-force cosine."""
-    from dask_pipes_spark.operators.llm_ext import (
-        _ivf_corpus_and_centroids,
-        ivf_assign,
-    )
-    from dask_pipes_spark.operators.vectors import (
-        _RIVF_CENT_SCHEMA,
-        _RIVF_CENTS_SCHEMA,
-        _RIVF_CODES_SCHEMA,
-        _pq_pruned_probe_topk,
-        _pq_subspaces,
-    )
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_k23_pq_stream_{tag}")
 
     def _stage(d: str) -> None:
-        _stage_k23_state(spark, sf_dir, d)
-        run_ivm_stream(spark, d, _pq_step(spark, d))
+        _stage_index(IVFPQ, spark, sf_dir, d, cdc=True)
+        run_ivm_stream(spark, d, _delta_step(IVFPQ, spark, d))
 
     idx = ensure_index(
         base,
@@ -1643,129 +1368,22 @@ def k23_stream_pq_ivm(spark, sf_dir):
         version="k23-v2",
         build=_stage,
     )
-    heads = head_generations(idx)
-    cent_rows = _read_gen(spark, idx, "centroids", _RIVF_CENT_SCHEMA).collect()
-    cents = _read_gen(spark, idx, "codebooks", _RIVF_CENTS_SCHEMA)
-    assignments = _read_gen(spark, idx, heads["assignments-"], _L81_ASSIGN_SCHEMA)
-    codes = _read_gen(spark, idx, heads["codes-"], _RIVF_CODES_SCHEMA)
     # queries: every 100th FINAL-corpus vector — embeddings read for the
     # query slice only (the l63 discipline)
-    qvecs, _ = _ivf_corpus_and_centroids(
-        spark,
-        sf_dir,
-        pred=(F.col("vec_id") % 100 == 0)
-        & ((F.col("vec_id") % 9 == 5) | (F.col("vec_id") % 11 != 3)),
-    )
-    probes = ivf_assign(qvecs, cent_rows, nprobe=3).select(
-        F.col("vec_id").alias("query_id"), "bucket"
-    )
-    qsub = _pq_subspaces(qvecs).select("vec_id", "s", "sv")
-    return _pq_pruned_probe_topk(qsub, probes, assignments, cents, codes)
+    return _serve_ivfpq(spark, sf_dir, _read_heads(spark, IVFPQ, idx), _final_slice())
 
 
-# --- k24: streaming residual-IVFADC maintenance (round 10) --------------------
-
-
-def _stage_k24_state(spark, sf_dir: str, d: str) -> None:
-    """Stage the continuous residual-IVFADC world: coarse codebook +
-    residual PQ codebooks persisted as the FIXED quantizers, BOTH index
-    tables checkpoint-born (``assignments-g001``, ``codes-g001`` — two
-    live chains in one VACUUM history, the multi-table shape l78
-    established), and the embedding CDC as k20's 4-file stream of raw
-    vector inserts (``%9==5``) and tombstones (``%11==3``)."""
-    from dask_pipes_spark.operators.llm_ext import (
-        _ivf_corpus_and_centroids,
-        ivf_assign,
-    )
-    from dask_pipes_spark.operators.vectors import (
-        _RIVF_ASSIGN_SCHEMA,
-        _residual_train,
-    )
-
-    vecs_old, cent = _ivf_corpus_and_centroids(
-        spark, sf_dir, pred=F.col("vec_id") % 9 != 5
-    )
-    # one execution of the codebook lineage (round 13): the write and the
-    # driver-rows collect previously each re-ran the centroid aggregation
-    cent = collect_local(cent)
-    cent.write.mode("overwrite").parquet(os.path.join(d, "centroids"))
-    checkpoint_index_generation(
-        d,
-        ivf_assign(vecs_old, cent.collect(), nprobe=1),
-        superseded=[],
-        generation="assignments-g001",
-        target_files=8,
-    )
-    indexed_g1 = spark.read.schema(_RIVF_ASSIGN_SCHEMA).parquet(
-        os.path.join(d, "assignments-g001")
-    )
-    cents, codes = _residual_train(indexed_g1, cent)
-    cents.write.mode("overwrite").parquet(os.path.join(d, "codebooks"))
-    checkpoint_index_generation(
-        d, codes, superseded=[], generation="codes-g001", target_files=8
-    )
-    vecs_new, _ = _ivf_corpus_and_centroids(
-        spark, sf_dir, pred=F.col("vec_id") % 9 == 5
-    )
-    cdc = vecs_new.withColumn("op", F.lit("I")).unionAll(
-        vecs_old.filter(F.col("vec_id") % 11 == 3)
-        .select(
-            "vec_id",
-            F.lit(None).cast("array<double>").alias("e"),
-            F.lit(None).cast("double").alias("nrm"),
-        )
-        .withColumn("op", F.lit("D"))
-    )
-    _stage_cdc_slices(cdc, d, F.col("vec_id"))
-
-
-def _residual_step(spark, index_dir: str):
-    """k24's :func:`run_ivm_stream` step — l77's two-table merge per
-    window (map-side coarse assignment of inserts, residual encode
-    against the pinned centroid, map-side PQ code assignment, broadcast
-    anti-join deletes on each table) against the CURRENT pair of heads;
-    the runner lands BOTH next generations under ONE manifest link (no
-    observable state where assignments moved and codes didn't)."""
-    from dask_pipes_spark.operators.vectors import (
-        _RIVF_ASSIGN_SCHEMA,
-        _RIVF_CENT_SCHEMA,
-        _RIVF_CENTS_SCHEMA,
-        _RIVF_CODES_SCHEMA,
-        _residual_delta_merge,
-    )
-
-    cent_rows = (
-        spark.read.schema(_RIVF_CENT_SCHEMA)
-        .parquet(os.path.join(index_dir, "centroids"))
-        .collect()
-    )
-
-    def step(batch_df, heads):
-        ss = batch_df.sparkSession
-        cent = _read_gen(ss, index_dir, "centroids", _RIVF_CENT_SCHEMA)
-        cents = _read_gen(ss, index_dir, "codebooks", _RIVF_CENTS_SCHEMA)
-        assignments = _read_gen(
-            ss, index_dir, heads["assignments-"], _RIVF_ASSIGN_SCHEMA
-        )
-        codes = _read_gen(ss, index_dir, heads["codes-"], _RIVF_CODES_SCHEMA)
-        d_del, d_ins = _cdc_split(batch_df)
-        a_m, c_m = _residual_delta_merge(
-            assignments, codes, d_ins, d_del, cent, cent_rows, cents
-        )
-        return {"assignments-": a_m, "codes-": c_m}
-
-    return step
+# --- k24: streaming residual-IVFADC maintenance ------------------------------
 
 
 @query("k24_stream_residual_ivm", oracle=_L77_ORACLE)
 def k24_stream_residual_ivm(spark, sf_dir):
     """Continuous residual-IVFADC maintenance through the streaming
-    runtime (round 10 — the last "—" cell of the lifecycle matrix:
-    k20's harness over l77's TWO-TABLE delta algebra): an embedding CDC
-    stream maintains the coarse inverted file AND the residual code
-    table via ``foreachBatch``, every window landing BOTH generations
-    under ONE manifest transaction (round 11 —
-    :func:`checkpoint_index_generations`; a reader resolving heads from
+    runtime (k20's harness over l77's TWO-TABLE delta algebra): an
+    embedding CDC stream maintains the coarse inverted file AND the
+    residual code table via ``foreachBatch``, every window landing BOTH
+    generations under ONE manifest transaction
+    (:func:`checkpoint_index_generations`; a reader resolving heads from
     VACUUM.json can never observe assignments moved without codes)
     against entirely FIXED quantizers (coarse codebook + residual PQ
     codebooks — the slow-cadence artifacts a l73-style rebuild
@@ -1783,20 +1401,12 @@ def k24_stream_residual_ivm(spark, sf_dir):
     broadcast anti-joins + two generation rewrites per window, for BOTH
     tables, with crash recovery = last durable generation pair + replay
     offset."""
-    from dask_pipes_spark.operators.vectors import (
-        _RIVF_ASSIGN_SCHEMA,
-        _RIVF_CENT_SCHEMA,
-        _RIVF_CENTS_SCHEMA,
-        _RIVF_CODES_SCHEMA,
-        _residual_probe,
-    )
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_k24_rivf_stream_{tag}")
 
     def _stage(d: str) -> None:
-        _stage_k24_state(spark, sf_dir, d)
-        run_ivm_stream(spark, d, _residual_step(spark, d))
+        _stage_index(RIVF, spark, sf_dir, d, cdc=True)
+        run_ivm_stream(spark, d, _delta_step(RIVF, spark, d))
 
     idx = ensure_index(
         base,
@@ -1804,13 +1414,7 @@ def k24_stream_residual_ivm(spark, sf_dir):
         version="k24-v2",
         build=_stage,
     )
-    heads = head_generations(idx)
-    cent = _read_gen(spark, idx, "centroids", _RIVF_CENT_SCHEMA)
-    cent_rows = cent.collect()
-    indexed = _read_gen(spark, idx, heads["assignments-"], _RIVF_ASSIGN_SCHEMA)
-    cents = _read_gen(spark, idx, "codebooks", _RIVF_CENTS_SCHEMA)
-    codes = _read_gen(spark, idx, heads["codes-"], _RIVF_CODES_SCHEMA)
-    return _residual_probe(indexed, cent, cent_rows, cents, codes)
+    return _serve_rivf(_read_heads(spark, RIVF, idx))
 
 
 @query("k25_stream_gc", oracle=_AGG_MV_ORACLE)
@@ -1899,104 +1503,12 @@ def k26_stream_compaction(spark, sf_dir):
     return _serve_agg_mv(spark, idx)
 
 
-def _stage_k27_state(spark, sf_dir: str, d: str) -> None:
-    """Stage the continuous k-means-IVFPQ ingest world (round 12 — k23's
-    staging with the fixture's fixed-K label quantizer replaced by the
-    corpus-sized K=⌈√N_train⌉ seeded-Lloyd one, i.e. l84's build fed to
-    the ACTUAL streaming runtime): both quantizers trained on
-    yesterday's slice (``%9!=5``) at the data-derived K, all four
-    tables — coarse codebook, PQ codebooks, inverted file, codes —
-    landed under ONE N=4 :func:`checkpoint_index_generations`
-    transaction, and the embedding CDC staged as k20's 4-file op-stream
-    (inserts ``%9==5`` with raw vectors, tombstones ``%11==3``).
-    Slicing by ``vec_id % 4`` keeps key sets disjoint so the fold is
-    commutative across any batching."""
-    from dask_pipes_spark.operators.vectors import (
-        _coarse_kmeans_assign,
-        _coarse_kmeans_train,
-        _pq_assign,
-        _pq_corpus,
-        _pq_train,
-        _sqrt_k,
-    )
-
-    v, sub = _pq_corpus(spark, sf_dir)
-    train = v.filter(F.col("vec_id") % 9 != 5)
-    tsub = sub.filter(F.col("vec_id") % 9 != 5)
-    k = _sqrt_k(train.count())
-    ccents = _coarse_kmeans_train(train, k=k)
-    cents = _pq_train(train, tsub)
-    checkpoint_index_generations(
-        d,
-        [
-            (ccents, [], "centroids-g001"),
-            (cents, [], "codebooks-g001"),
-            (_coarse_kmeans_assign(train, ccents), [], "assignments-g001"),
-            (_pq_assign(tsub, cents), [], "codes-g001"),
-        ],
-        target_files=8,
-    )
-    cdc = train.filter(F.col("vec_id") % 11 == 3).select(
-        "vec_id", F.lit(None).cast("array<double>").alias("e")
-    ).withColumn("op", F.lit("D"))
-    cdc = (
-        v.filter(F.col("vec_id") % 9 == 5)
-        .withColumn("op", F.lit("I"))
-        .unionAll(cdc)
-    )
-    _stage_cdc_slices(cdc, d, F.col("vec_id"))
-
-
-def _kivfpq_step(spark, index_dir: str):
-    """k27's :func:`run_ivm_stream` step against the CORPUS-SIZED k-means
-    quantizers: tombstones anti-join out of the CURRENT pair, insert
-    vectors are coarse-assigned against the persisted K=⌈√N⌉ codebook
-    head (broadcast crossJoin — map-side at any K that fits a broadcast,
-    which √N keeps true to 10¹¹ vectors) and PQ-encoded against the
-    FIXED PQ codebook head. The quantizer generations stay heads —
-    retraining is l85's 4-table transaction on the slow cadence, never
-    the stream's job."""
-    from dask_pipes_spark.operators.vectors import (
-        _CK_CENTS_SCHEMA,
-        _RIVF_CENTS_SCHEMA,
-        _RIVF_CODES_SCHEMA,
-        _coarse_kmeans_assign,
-        _pq_assign,
-        _pq_subspaces,
-    )
-
-    def step(batch_df, heads):
-        ss = batch_df.sparkSession
-        ccents = _read_gen(ss, index_dir, heads["centroids-"], _CK_CENTS_SCHEMA)
-        cents = _read_gen(ss, index_dir, heads["codebooks-"], _RIVF_CENTS_SCHEMA)
-        assignments = _read_gen(
-            ss, index_dir, heads["assignments-"], _L81_ASSIGN_SCHEMA
-        )
-        codes = _read_gen(ss, index_dir, heads["codes-"], _RIVF_CODES_SCHEMA)
-        d_del, d_ins = _cdc_split(batch_df, ("vec_id", "e"))
-        sub_ins = _pq_subspaces(d_ins).select("vec_id", "s", "sv")
-        return {
-            "assignments-": _drop_deleted(assignments, d_del).unionAll(
-                _coarse_kmeans_assign(d_ins, ccents)
-            ),
-            "codes-": _drop_deleted(codes, d_del).unionAll(
-                _pq_assign(sub_ins, cents)
-            ),
-        }
-
-    return step
-
-
-from dask_pipes_spark.operators.vectors import _L84_ORACLE  # noqa: E402
-
-
 @query("k27_stream_kivfpq_ivm", oracle=_L84_ORACLE)
 def k27_stream_kivfpq_ivm(spark, sf_dir):
-    """Continuous maintenance on the CORPUS-SIZED quantizer (round 12 —
-    completing the r11 verdict's top item for the STREAMING lifecycle:
-    l84 closed the batch path, k23 still prunes through the fixed K=10
-    label quantizer; this key is k23's foreachBatch IVM re-based on the
-    K=⌈√N⌉ seeded-Lloyd world). The embedding CDC stream maintains the
+    """Continuous maintenance on the CORPUS-SIZED quantizer: k23's
+    foreachBatch IVM on l84's K=⌈√N⌉ seeded-Lloyd world (k23 prunes
+    through the fixed K=10 label quantizer). The embedding CDC stream
+    maintains the
     slim inverted file and the PQ code table against entirely FIXED
     persisted quantizers — broadcast anti-join deletes, map-side coarse
     assignment against the √N-cell codebook, map-side PQ encode — with
@@ -2014,14 +1526,12 @@ def k27_stream_kivfpq_ivm(spark, sf_dir):
     anti-joins + the paired generation rewrite; serving cost is the
     measured flat-per-query √N economics (SCALING.md round-12 table:
     11 ms/query at sf10 vs 399 ms for the fixed-K path)."""
-    from dask_pipes_spark.operators.vectors import _serve_kivfpq
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = scratch_path(f"dps_k27_kivfpq_stream_{tag}")
 
     def _stage(d: str) -> None:
-        _stage_k27_state(spark, sf_dir, d)
-        run_ivm_stream(spark, d, _kivfpq_step(spark, d))
+        _stage_index(KIVFPQ, spark, sf_dir, d, cdc=True)
+        run_ivm_stream(spark, d, _delta_step(KIVFPQ, spark, d))
 
     idx = ensure_index(
         base,

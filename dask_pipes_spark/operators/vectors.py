@@ -38,8 +38,40 @@ from functools import lru_cache
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from dask_pipes_spark.operators.ann_lifecycle import (
+    _CENT_SCHEMA,
+    _CK_CENTS_SCHEMA,
+    _EMBED_SCHEMA,
+    _FINAL_SQL,
+    _IVF_ASSIGN_SCHEMA,
+    _OLD_SQL,
+    _PQ_CENTS_SCHEMA,
+    _PQ_CODES_SCHEMA,
+    _SLIM_ASSIGN_SCHEMA,
+    _SUB_SCHEMA,
+    _VEC_SCHEMA,
+    IndexFamily,
+    _build_index,
+    _checkpoint_feeds,
+    _final_slice,
+    _ins_slice,
+    _merged_feeds,
+    _old_slice,
+    _read_heads,
+    _read_state,
+    _stage_index,
+)
+from dask_pipes_spark.operators.llm_ext import (
+    _ivf_assigner,
+    _ivf_build,
+    _ivf_corpus_and_centroids,
+    ivf_assign,
+)
 from dask_pipes_spark.registry import query
 from dask_pipes_spark.session import (
+    _link_bys,
+    _load_manifest,
+    checkpoint_index_generations,
     collect_local,
     ensure_index,
     fanout,
@@ -328,6 +360,11 @@ def _pq_subspaces(df, vec_col="e"):
     ).drop("sub")
 
 
+def _subvectors(df):
+    """(vec_id, s, sv): the subvector rows PQ encodes."""
+    return _pq_subspaces(df).select("vec_id", "s", "sv")
+
+
 @lru_cache(maxsize=32)
 def _l2sq(a: str, b: str):
     """Squared L2 between two equal-length array columns (codegen HOFs).
@@ -479,7 +516,7 @@ def l55_pq_topk(spark, sf_dir):
 def _pq_corpus(spark, sf_dir, pred=None):
     """Shared PQ corpus prep (l55 rebuild == l63 persist): (v, sub) where
     ``sub`` is the 8× subspace fan-out of every corpus vector. ``pred``
-    restricts the corpus slice (l67's old/delta split)."""
+    restricts the corpus slice."""
     e = fanout(load(spark, sf_dir, "embeddings"))
     if pred is not None:
         e = e.filter(pred)
@@ -487,7 +524,7 @@ def _pq_corpus(spark, sf_dir, pred=None):
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("e"),
     )
-    return v, _pq_subspaces(v).select("vec_id", "s", "sv")
+    return v, _subvectors(v)
 
 
 def _pq_assign(sub, cents):
@@ -580,6 +617,40 @@ def _pq_train(v, sub):
     return cents
 
 
+def _pq_build(spark, sf_dir, pred):
+    """The PQ index over a corpus slice: ``codebooks`` (s, cid, cv — 8×16
+    trained subspace centroids) and ``codes`` (vec_id, s, code — the 64×
+    compressed corpus). Doubles round-trip exactly, so a persisted index
+    reproduces the rebuild path bit-for-bit."""
+    v, sub = _pq_corpus(spark, sf_dir, pred)
+    cents = _pq_train(v, sub)
+    return {"codebooks": cents, "codes": _pq_assign(sub, cents)}
+
+
+#: PQ's insert feed is already exploded into subvectors, so its assigner
+#: encodes feed rows directly against the fixed codebooks
+PQ = IndexFamily(
+    quantizers=("codebooks",),
+    tables=("codes",),
+    schemas={
+        "codebooks": _PQ_CENTS_SCHEMA,
+        "codes": _PQ_CODES_SCHEMA,
+        "delta_ins": _SUB_SCHEMA,
+    },
+    build=_pq_build,
+    assigner=lambda q: lambda ins: {"codes": _pq_assign(ins, q["codebooks"])},
+    feed=_subvectors,
+)
+
+
+def _serve_pq(spark, sf_dir, st):
+    """The l55 ADC probe over persisted PQ state; the query subvectors
+    (every 100th vector of the final corpus) are the only corpus read."""
+    _, sub = _pq_corpus(spark, sf_dir)
+    qsub = sub.filter((F.col("vec_id") % 100 == 0) & _final_slice())
+    return _pq_probe_topk(qsub, st["codebooks"], st["codes"])
+
+
 def _pq_probe_topk(qsub, cents, codes):
     """Shared ADC probe (l55 rebuild == l63 persist): per-query 8×16
     distance grid against the codebook, 8-lookup decimal-summed distance
@@ -624,9 +695,8 @@ def _pq_probe_topk(qsub, cents, codes):
 
 
 def _pq_pruned_probe_topk(qsub, probes, assignments, cents, codes):
-    """IVF-pruned ADC probe (round 11 — the r10 verdict's item 3,
-    composing l68's candidate economics into the PERSISTED PQ serving
-    path): instead of joining every query's ADC grid against the whole
+    """IVF-pruned ADC probe (l68's candidate economics in the PERSISTED PQ
+    serving path): instead of joining every query's ADC grid against the whole
     code table (l55/l67's full scan — O(corpus × queries) lookups, the
     28.6 s sf1 number SCALING.md documents), candidates are pruned to
     the query's nprobe coarse buckets via the persisted assignments
@@ -677,30 +747,14 @@ def _pq_pruned_probe_topk(qsub, probes, assignments, cents, codes):
     )
 
 
-def build_pq_index(spark, sf_dir: str, index_dir: str) -> None:
-    """Materialize the l55 PQ index to parquet: ``codebooks/`` (s, cid,
-    cv — 8×16 trained subspace centroids) and ``codes/`` (vec_id, s,
-    code — 4-bit code per vector per subspace, the 64× compressed corpus
-    representation). Doubles round-trip exactly, so the persisted index
-    reproduces the rebuild path bit-for-bit."""
-    import os
-
-    v, sub = _pq_corpus(spark, sf_dir)
-    cents = _pq_train(v, sub)
-    cents.write.mode("overwrite").parquet(os.path.join(index_dir, "codebooks"))
-    _pq_assign(sub, cents).write.mode("overwrite").parquet(
-        os.path.join(index_dir, "codes")
-    )
-
-
 @query("l63_pq_index_persist", oracle=_l55_oracle())
 def l63_pq_index_persist(spark, sf_dir):
-    """PQ index persistence + reuse (round 7, the l62 protocol applied to
-    product quantization): l55's trained codebooks and per-vector codes are
+    """PQ index persistence + reuse (the l62 protocol applied to product
+    quantization): l55's trained codebooks and per-vector codes are
     the expensive artifacts — training is two full-corpus Lloyd passes and
     encoding touches every vector — while the ADC probe only needs the
-    128-row codebook and the 4-byte codes. This key persists both via
-    :func:`build_pq_index` under an :func:`ensure_index` manifest
+    128-row codebook and the 4-byte codes. This key persists both (the
+    :data:`PQ` family's full build) under an :func:`ensure_index` manifest
     (source-listing fingerprint + format version; stale → full rebuild,
     the right trade for codebooks — incremental code maintenance under CDC
     is p5/g15 territory), then answers the SAME probe spec (queries =
@@ -721,19 +775,14 @@ def l63_pq_index_persist(spark, sf_dir):
         scratch_path(f"dps_l63_pq_{tag}"),
         os.path.join(sf_dir, "embeddings.parquet"),
         version="pq-v1",
-        build=lambda d: build_pq_index(spark, sf_dir, d),
+        build=lambda d: _build_index(PQ, spark, sf_dir, d),
     )
     # schema-explicit read-back (a3 idiom): empty builds leave nothing to
     # infer
-    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
-        os.path.join(idx, "codebooks")
-    )
-    codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
-        os.path.join(idx, "codes")
-    )
+    st = _read_state(spark, PQ, idx, ["codebooks", "codes"])
     _, sub = _pq_corpus(spark, sf_dir)
     return _pq_probe_topk(
-        sub.filter(F.col("vec_id") % 100 == 0), cents, codes
+        sub.filter(F.col("vec_id") % 100 == 0), st["codebooks"], st["codes"]
     )
 
 
@@ -932,11 +981,6 @@ def l68_ivfadc_topk(spark, sf_dir):
     persisted indexes this probe runs against on-disk artifacts; the
     recall/efficiency trade (nprobe, bucket count) is the operational
     knob. Recall vs brute force is asserted in tests."""
-    from dask_pipes_spark.operators.llm_ext import (
-        _ivf_corpus_and_centroids,
-        ivf_assign,
-    )
-
     vecs, cent = _ivf_corpus_and_centroids(spark, sf_dir)
     cent_rows = cent.collect()
     indexed = ivf_assign(vecs, cent_rows, nprobe=1).select("vec_id", "bucket")
@@ -1188,7 +1232,7 @@ def _l71_oracle(
 
 @query("l71_ivfadc_residual", oracle=_l71_oracle())
 def l71_ivfadc_residual(spark, sf_dir):
-    """IVFADC with residual encoding (round 8 — the FAISS-default
+    """IVFADC with residual encoding (the FAISS-default
     ``by_residual=True`` regime l68's docstring names as the accuracy
     upgrade, Jégou/Douze/Schmid 2011 §III): the PQ codebooks are trained
     on r = x − q1(x) — each vector minus its coarse centroid — so the
@@ -1216,22 +1260,11 @@ def l71_ivfadc_residual(spark, sf_dir):
     extra cost is nprobe ADC grids per query (nprobe × M × K tiny-row
     work, still broadcast) — the standard trade for the recall gain;
     recall vs l68 is measured in the SCALING.md sizing table."""
-    from dask_pipes_spark.operators.llm_ext import (
-        _ivf_corpus_and_centroids,
-        ivf_assign,
-    )
-
-    vecs, cent = _ivf_corpus_and_centroids(spark, sf_dir)
-    # collect_local (round 12): the coarse codebook is broadcast-joined in
-    # BOTH the residual train (per Lloyd collect) and the probe — as a
-    # lazy frame its posexplode double-shuffle re-ran inside every one of
-    # those jobs (~5× per query). One bounded collect, literal everywhere.
-    cent = collect_local(cent)
-    cent_rows = cent.collect()
-    # indexed keeps e: the residual needs the vector AND its bucket
-    indexed = ivf_assign(vecs, cent_rows, nprobe=1)
-    cents, codes = _residual_train(indexed, cent)
-    return _residual_probe(indexed, cent, cent_rows, cents, codes)
+    # the RIVF build collects the coarse codebook once (collect_local): it
+    # is broadcast-joined in BOTH the residual train (per Lloyd collect)
+    # and the probe, and as a lazy frame its posexplode double-shuffle
+    # would re-run inside every one of those jobs
+    return _serve_rivf(RIVF.build(spark, sf_dir, None))
 
 
 def _residual_train(indexed, cent):
@@ -1256,8 +1289,6 @@ def _residual_probe(indexed, cent, cent_rows, cents, codes):
     (and thus the ADC grid) PER (query, bucket), candidates scored by 8
     code lookups against their bucket's grid, top-5 by (adc_dist,
     vec_id)."""
-    from dask_pipes_spark.operators.llm_ext import ivf_assign
-
     probes = ivf_assign(
         indexed.select("vec_id", "e", "nrm").filter(
             F.col("vec_id") % 100 == 0
@@ -1319,39 +1350,64 @@ def _residual_probe(indexed, cent, cent_rows, cents, codes):
     )
 
 
-def build_residual_index(spark, sf_dir: str, index_dir: str) -> None:
-    """Materialize the l71 residual-IVFADC index: ``centroids/`` (the IVF
-    coarse codebook), ``assignments/`` (vec_id, e, nrm, bucket — the
-    inverted file), ``codebooks/`` (residual-trained PQ centroids) and
-    ``codes/`` (4-bit residual codes). Everything the probe needs; the
-    raw corpus is never read again."""
-    import os
+def _rivf_build(spark, sf_dir, pred):
+    """The residual-IVFADC index over a corpus slice: the IVF coarse
+    codebook and inverted file (vec_id, e, nrm, bucket — e kept for the
+    residual), then residual-trained PQ codebooks and 4-bit residual
+    codes. Everything the probe needs; the raw corpus is never read
+    again."""
+    st = _ivf_build(spark, sf_dir, pred)
+    cents, codes = _residual_train(st["assignments"], st["centroids"])
+    return {**st, "codebooks": cents, "codes": codes}
 
-    from dask_pipes_spark.operators.llm_ext import (
-        _ivf_corpus_and_centroids,
-        ivf_assign,
-    )
 
-    vecs, cent = _ivf_corpus_and_centroids(spark, sf_dir)
-    # one bounded collect; the centroid write and every train-side
-    # broadcast reuse the literal instead of re-running the aggregation
-    cent = collect_local(cent)
-    cent.write.mode("overwrite").parquet(os.path.join(index_dir, "centroids"))
-    indexed = ivf_assign(vecs, cent.collect(), nprobe=1)
-    indexed.write.mode("overwrite").parquet(
-        os.path.join(index_dir, "assignments")
+def _rivf_assigner(q):
+    """Inserts get a map-side coarse assignment, then a residual encode:
+    one broadcast join pins each insert's coarse centroid, the
+    subtraction is a codegen zip_with, and the PQ code is the same
+    map-side :func:`_pq_assign` — all against FIXED quantizers."""
+    ivf, cent, cents = _ivf_assigner(q), q["centroids"], q["codebooks"]
+
+    def assign(ins):
+        assigned = ivf(ins)["assignments"]
+        resid = assigned.join(F.broadcast(cent), "bucket").select(
+            "vec_id", F.zip_with("e", "ce", lambda x, y: x - y).alias("e")
+        )
+        return {"assignments": assigned, "codes": _pq_assign(_subvectors(resid), cents)}
+
+    return assign
+
+
+#: residual births land one table per link: a k24 stream's history starts
+#: with the inverted file's link, then the codes' link
+RIVF = IndexFamily(
+    quantizers=("centroids", "codebooks"),
+    tables=("assignments", "codes"),
+    schemas={
+        "centroids": _CENT_SCHEMA,
+        "assignments": _IVF_ASSIGN_SCHEMA,
+        "codebooks": _PQ_CENTS_SCHEMA,
+        "codes": _PQ_CODES_SCHEMA,
+        "delta_ins": _EMBED_SCHEMA,
+    },
+    build=_rivf_build,
+    assigner=_rivf_assigner,
+    births=(("assignments",), ("codes",)),
+)
+
+
+def _serve_rivf(st):
+    """The l71 residual-ADC probe over (persisted) residual-IVFADC state."""
+    cent = st["centroids"]
+    return _residual_probe(
+        st["assignments"], cent, cent.collect(), st["codebooks"], st["codes"]
     )
-    cents, codes = _residual_train(indexed, cent)
-    cents.write.mode("overwrite").parquet(
-        os.path.join(index_dir, "codebooks")
-    )
-    codes.write.mode("overwrite").parquet(os.path.join(index_dir, "codes"))
 
 
 @query("l73_residual_index_persist", oracle=_l71_oracle())
 def l73_residual_index_persist(spark, sf_dir):
-    """Residual-IVFADC index persistence (round 8 — the l62/l63 lifecycle
-    applied to l71, so every ANN variant in the engine has a persisted
+    """Residual-IVFADC index persistence (the l62/l63 lifecycle applied to
+    l71, so every ANN variant in the engine has a persisted
     steady-state path): the coarse codebook, inverted-file assignments,
     residual-trained PQ codebooks, and residual codes are all built once
     under an :func:`ensure_index` staleness manifest, and the probe —
@@ -1375,138 +1431,25 @@ def l73_residual_index_persist(spark, sf_dir):
         scratch_path(f"dps_l73_rivfadc_{tag}"),
         os.path.join(sf_dir, "embeddings.parquet"),
         version="rivfadc-v1",
-        build=lambda d: build_residual_index(spark, sf_dir, d),
+        build=lambda d: _build_index(RIVF, spark, sf_dir, d),
     )
-    cent = spark.read.schema(
-        "bucket int, ce array<double>, cnrm double"
-    ).parquet(os.path.join(idx, "centroids"))
-    cent_rows = cent.collect()
-    indexed = spark.read.schema(
-        "vec_id bigint, e array<double>, nrm double, bucket int"
-    ).parquet(os.path.join(idx, "assignments"))
-    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
-        os.path.join(idx, "codebooks")
-    )
-    codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
-        os.path.join(idx, "codes")
-    )
-    return _residual_probe(indexed, cent, cent_rows, cents, codes)
+    return _serve_rivf(_read_heads(spark, RIVF, idx))
 
 
-_L67_ORACLE = _l55_oracle(
-    train_pred="vec_id % 9 <> 5",
-    corpus_pred="(vec_id % 9 = 5 OR vec_id % 11 <> 3)",
-)
+_L67_ORACLE = _l55_oracle(train_pred=_OLD_SQL, corpus_pred=_FINAL_SQL)
 
-_L77_ORACLE = _l71_oracle(
-    train_pred="vec_id % 9 <> 5",
-    corpus_pred="(vec_id % 9 = 5 OR vec_id % 11 <> 3)",
-)
+_L77_ORACLE = _l71_oracle(train_pred=_OLD_SQL, corpus_pred=_FINAL_SQL)
 
-# round 11 — k23's composed streaming serving: IVFADC (by_residual=False)
-# with quantizers trained on yesterday's slice, index tables tracking the
-# final corpus
-_L68D_ORACLE = _l68_oracle(
-    train_pred="vec_id % 9 <> 5",
-    corpus_pred="(vec_id % 9 = 5 OR vec_id % 11 <> 3)",
-)
-
-_RIVF_CENT_SCHEMA = "bucket int, ce array<double>, cnrm double"
-_RIVF_ASSIGN_SCHEMA = "vec_id bigint, e array<double>, nrm double, bucket int"
-_RIVF_CENTS_SCHEMA = "s int, cid int, cv array<double>"
-_RIVF_CODES_SCHEMA = "vec_id bigint, s int, code int"
-
-
-def _stage_residual_delta_state(spark, sf_dir: str, d: str) -> None:
-    """Stage 'yesterday's' persisted residual-IVFADC state + CDC feeds
-    (shared by l77 and l78): coarse codebook trained on the ``%9!=5``
-    slice, that slice's inverted-file assignments, residual PQ codebooks
-    + codes trained/encoded over it, insert feed = the held-out slice's
-    raw vectors, tombstones = ``%11==3``."""
-    import os
-
-    from dask_pipes_spark.operators.llm_ext import (
-        _ivf_corpus_and_centroids,
-        ivf_assign,
-    )
-
-    vecs_old, cent = _ivf_corpus_and_centroids(
-        spark, sf_dir, pred=F.col("vec_id") % 9 != 5
-    )
-    cent.write.mode("overwrite").parquet(os.path.join(d, "centroids"))
-    indexed_old = ivf_assign(vecs_old, cent.collect(), nprobe=1)
-    indexed_old.write.mode("overwrite").parquet(
-        os.path.join(d, "assignments")
-    )
-    cents, codes = _residual_train(indexed_old, cent)
-    cents.write.mode("overwrite").parquet(os.path.join(d, "codebooks"))
-    codes.write.mode("overwrite").parquet(os.path.join(d, "codes"))
-    vecs_new, _ = _ivf_corpus_and_centroids(
-        spark, sf_dir, pred=F.col("vec_id") % 9 == 5
-    )
-    vecs_new.write.mode("overwrite").parquet(os.path.join(d, "delta_ins"))
-    vecs_old.filter(F.col("vec_id") % 11 == 3).select(
-        "vec_id"
-    ).write.mode("overwrite").parquet(os.path.join(d, "delta_del"))
-
-
-def _read_residual_delta_state(spark, d: str):
-    """Load the staged state back (persisted tables only): (cent,
-    assignments, cents, codes, delta_ins, delta_del)."""
-    import os
-
-    cent = spark.read.schema(_RIVF_CENT_SCHEMA).parquet(
-        os.path.join(d, "centroids")
-    )
-    assignments = spark.read.schema(_RIVF_ASSIGN_SCHEMA).parquet(
-        os.path.join(d, "assignments")
-    )
-    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
-        os.path.join(d, "codebooks")
-    )
-    codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
-        os.path.join(d, "codes")
-    )
-    d_ins = spark.read.schema(
-        "vec_id bigint, e array<double>, nrm double"
-    ).parquet(os.path.join(d, "delta_ins"))
-    d_del = spark.read.schema("vec_id bigint").parquet(
-        os.path.join(d, "delta_del")
-    )
-    return cent, assignments, cents, codes, d_ins, d_del
-
-
-def _residual_delta_merge(
-    assignments, codes, d_ins, d_del, cent, cent_rows, cents
-):
-    """l77's maintenance algebra — l65's shape applied to BOTH residual
-    index tables at once, against entirely FIXED quantizers: inserts get
-    (1) a map-side coarse assignment (literal-codebook expression, zero
-    exchange), then (2) a residual encode — one broadcast join pins each
-    insert's coarse centroid, the subtraction is a codegen zip_with, and
-    the PQ code assignment is the same map-side `_pq_assign`; deletes are
-    broadcast anti-joins on each table. Returns (assignments', codes')."""
-    from dask_pipes_spark.operators.llm_ext import ivf_assign
-
-    assign_new = ivf_assign(d_ins, cent_rows, nprobe=1)
-    assignments_m = assignments.join(
-        F.broadcast(d_del), "vec_id", "left_anti"
-    ).unionAll(assign_new)
-    resid_ins = assign_new.join(F.broadcast(cent), "bucket").select(
-        "vec_id", F.zip_with("e", "ce", lambda x, y: x - y).alias("e")
-    )
-    sub_ins = _pq_subspaces(resid_ins).select("vec_id", "s", "sv")
-    codes_m = codes.join(
-        F.broadcast(d_del), "vec_id", "left_anti"
-    ).unionAll(_pq_assign(sub_ins, cents))
-    return assignments_m, codes_m
+#: k23/l81's composed serving: IVFADC (by_residual=False) with quantizers
+#: trained on yesterday's slice, index tables tracking the final corpus
+_L68D_ORACLE = _l68_oracle(train_pred=_OLD_SQL, corpus_pred=_FINAL_SQL)
 
 
 @query("l77_residual_index_delta", oracle=_L77_ORACLE)
 def l77_residual_index_delta(spark, sf_dir):
-    """Incremental residual-IVFADC maintenance (round 9 — the l65/l67
-    algebra composed over BOTH of l71's index tables, the r8 verdict's
-    item 4): a CDC embedding delta — inserts (``%9==5``) and tombstones
+    """Incremental residual-IVFADC maintenance (the l65/l67 algebra
+    composed over BOTH of l71's index tables): a CDC embedding delta —
+    inserts (``%9==5``) and tombstones
     (``%11==3``) — updates the persisted inverted file AND the residual
     code table without re-training or re-encoding the corpus:
 
@@ -1539,29 +1482,19 @@ def l77_residual_index_delta(spark, sf_dir):
         scratch_path(f"dps_l77_rivfadc_delta_{tag}"),
         os.path.join(sf_dir, "embeddings.parquet"),
         version="rivfadc-delta-v1",
-        build=lambda d: _stage_residual_delta_state(spark, sf_dir, d),
+        build=lambda d: _stage_index(RIVF, spark, sf_dir, d),
     )
-    cent, assignments, cents, codes, d_ins, d_del = (
-        _read_residual_delta_state(spark, idx)
-    )
-    cent_rows = cent.collect()
-    assignments_m, codes_m = _residual_delta_merge(
-        assignments, codes, d_ins, d_del, cent, cent_rows, cents
-    )
-    return _residual_probe(assignments_m, cent, cent_rows, cents, codes_m)
+    return _serve_rivf(_merged_feeds(RIVF, spark, idx))
 
 
 @query("l78_residual_index_checkpoint", oracle=_L77_ORACLE)
 def l78_residual_index_checkpoint(spark, sf_dir):
-    """Residual-IVFADC write-back (round 9, re-based round 11 on the
-    atomic multi-table commit — the r10 verdict's item 2): l77's merge
-    runs ONCE inside the build, then ONE
-    :func:`checkpoint_index_generations` transaction lands
+    """Residual-IVFADC write-back: l77's merge runs ONCE inside the build,
+    then ONE :func:`checkpoint_index_generations` transaction lands
     ``assignments-g002`` AND ``codes-g002`` under a single VACUUM.json
     history link (``bys``) — there is no observable manifest state where
-    the inverted file moved and the code table didn't (the r10 shape was
-    two sequential links with a documented recovery ordering; the crash
-    window between them is now structurally gone). The old tables and
+    the inverted file moved and the code table didn't, so there is no
+    crash window between two commits to recover from. The old tables and
     both CDC feeds are vacuumed by the same link; the quantizer
     artifacts (centroids, codebooks) survive as the next window's fixed
     basis.
@@ -1578,26 +1511,11 @@ def l78_residual_index_checkpoint(spark, sf_dir):
     read fences."""
     import os
 
-    from dask_pipes_spark.session import checkpoint_index_generations
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
 
     def _stage(d: str) -> None:
-        _stage_residual_delta_state(spark, sf_dir, d)
-        cent, assignments, cents, codes, d_ins, d_del = (
-            _read_residual_delta_state(spark, d)
-        )
-        cent_rows = cent.collect()
-        assignments_m, codes_m = _residual_delta_merge(
-            assignments, codes, d_ins, d_del, cent, cent_rows, cents
-        )
-        checkpoint_index_generations(
-            d,
-            [
-                (assignments_m, ["assignments"], "assignments-g002"),
-                (codes_m, ["codes", "delta_ins", "delta_del"], "codes-g002"),
-            ],
-        )
+        _stage_index(RIVF, spark, sf_dir, d)
+        _checkpoint_feeds(RIVF, spark, d)
 
     idx = ensure_index(
         scratch_path(f"dps_l78_rivfadc_ckpt_{tag}"),
@@ -1605,75 +1523,71 @@ def l78_residual_index_checkpoint(spark, sf_dir):
         version="rivfadc-ckpt-v2",
         build=_stage,
     )
-    cent = spark.read.schema(_RIVF_CENT_SCHEMA).parquet(
-        os.path.join(idx, "centroids")
-    )
-    cent_rows = cent.collect()
-    indexed = spark.read.schema(_RIVF_ASSIGN_SCHEMA).parquet(
-        os.path.join(idx, "assignments-g002")
-    )
-    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
-        os.path.join(idx, "codebooks")
-    )
-    codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
-        os.path.join(idx, "codes-g002")
-    )
-    return _residual_probe(indexed, cent, cent_rows, cents, codes)
+    return _serve_rivf(_read_heads(spark, RIVF, idx))
 
 
-_L81_ASSIGN_SCHEMA = "vec_id bigint, bucket int"
+def _ivfpq_build(spark, sf_dir, pred):
+    """The IVFADC (by_residual=False) pair over a corpus slice: the IVF
+    coarse codebook and PQ codebooks as quantizers, a SLIM inverted file
+    (vec_id, bucket — pruned serving needs membership only) and the code
+    table."""
+    ivf, pq = _ivf_build(spark, sf_dir, pred), _pq_build(spark, sf_dir, pred)
+    return {
+        "centroids": ivf["centroids"],
+        "codebooks": pq["codebooks"],
+        "assignments": ivf["assignments"].select("vec_id", "bucket"),
+        "codes": pq["codes"],
+    }
 
 
-def _stage_l81_state(spark, sf_dir: str, d: str) -> None:
-    """Stage 'yesterday's' persisted IVF+PQ state + CDC feeds (the batch
-    twin of k23's staging): coarse centroids + PQ codebooks trained on
-    the ``%9!=5`` slice as the FIXED quantizers, the slim inverted file
-    and the code table committed as a generation PAIR (one manifest
-    link), insert feed = the held-out slice's raw vectors, tombstones =
-    ``%11==3``."""
-    import os
+def _ivfpq_assigner(q):
+    """Map-side coarse assignment plus PQ encode of the insert vectors
+    against both FIXED quantizers."""
+    ivf, cents = _ivf_assigner(q), q["codebooks"]
+    return lambda ins: {
+        "assignments": ivf(ins)["assignments"].select("vec_id", "bucket"),
+        "codes": _pq_assign(_subvectors(ins), cents),
+    }
 
-    from dask_pipes_spark.operators.llm_ext import (
-        _ivf_corpus_and_centroids,
-        ivf_assign,
-    )
-    from dask_pipes_spark.session import checkpoint_index_generations
 
-    vecs_old, cent = _ivf_corpus_and_centroids(
-        spark, sf_dir, pred=F.col("vec_id") % 9 != 5
+#: the pair is born as one generation link in batch too, so a reader
+#: always resolves a consistent (assignments, codes) snapshot
+IVFPQ = IndexFamily(
+    quantizers=("centroids", "codebooks"),
+    tables=("assignments", "codes"),
+    schemas={
+        "centroids": _CENT_SCHEMA,
+        "codebooks": _PQ_CENTS_SCHEMA,
+        "assignments": _SLIM_ASSIGN_SCHEMA,
+        "codes": _PQ_CODES_SCHEMA,
+        "delta_ins": _EMBED_SCHEMA,
+    },
+    build=_ivfpq_build,
+    assigner=_ivfpq_assigner,
+    born=True,
+)
+
+
+def _serve_ivfpq(spark, sf_dir, st, qpred):
+    """l68's pruned IVFADC composition over a persisted pair: queries
+    (every 100th vector within ``qpred``) probe their nprobe=3 coarse
+    buckets via the inverted file and ADC scores only those candidates;
+    the query slice is the only corpus read."""
+    qvecs, _ = _ivf_corpus_and_centroids(
+        spark, sf_dir, pred=(F.col("vec_id") % 100 == 0) & qpred
     )
-    cent.write.mode("overwrite").parquet(os.path.join(d, "centroids"))
-    v_old, sub_old = _pq_corpus(spark, sf_dir, pred=F.col("vec_id") % 9 != 5)
-    cents = _pq_train(v_old, sub_old)
-    cents.write.mode("overwrite").parquet(os.path.join(d, "codebooks"))
-    checkpoint_index_generations(
-        d,
-        [
-            (
-                ivf_assign(vecs_old, cent.collect(), nprobe=1).select(
-                    "vec_id", "bucket"
-                ),
-                [],
-                "assignments-g001",
-            ),
-            (_pq_assign(sub_old, cents), [], "codes-g001"),
-        ],
-        target_files=8,
+    probes = ivf_assign(qvecs, st["centroids"].collect(), nprobe=3).select(
+        F.col("vec_id").alias("query_id"), "bucket"
     )
-    vecs_new, _ = _ivf_corpus_and_centroids(
-        spark, sf_dir, pred=F.col("vec_id") % 9 == 5
+    return _pq_pruned_probe_topk(
+        _subvectors(qvecs), probes, st["assignments"], st["codebooks"], st["codes"]
     )
-    vecs_new.write.mode("overwrite").parquet(os.path.join(d, "delta_ins"))
-    vecs_old.filter(F.col("vec_id") % 11 == 3).select(
-        "vec_id"
-    ).write.mode("overwrite").parquet(os.path.join(d, "delta_del"))
 
 
 @query("l81_ivfpq_pruned_checkpoint", oracle=_L68D_ORACLE)
 def l81_ivfpq_pruned_checkpoint(spark, sf_dir):
-    """Batch IVF-pruned PQ serving over an atomically-maintained pair
-    (round 11 — the batch half of the r10 verdict's item 3, closing what
-    k23 closed for streaming): the slim coarse inverted file AND the PQ
+    """Batch IVF-pruned PQ serving over an atomically-maintained pair (the
+    batch twin of k23): the slim coarse inverted file AND the PQ
     code table are delta-maintained together (broadcast anti-join
     deletes; map-side coarse assignment + ``_pq_assign`` encoding of the
     insert vectors against FIXED quantizers — l77's algebra minus the
@@ -1698,64 +1612,11 @@ def l81_ivfpq_pruned_checkpoint(spark, sf_dir):
     (assignments, codes) snapshot with no cross-table fence."""
     import os
 
-    from dask_pipes_spark.operators.llm_ext import (
-        _ivf_corpus_and_centroids,
-        ivf_assign,
-    )
-    from dask_pipes_spark.session import (
-        checkpoint_index_generations,
-        ensure_index,
-        head_generations,
-    )
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
 
     def _stage(d: str) -> None:
-        _stage_l81_state(spark, sf_dir, d)
-        cent_rows_b = (
-            spark.read.schema(_RIVF_CENT_SCHEMA)
-            .parquet(os.path.join(d, "centroids"))
-            .collect()
-        )
-        cents_b = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
-            os.path.join(d, "codebooks")
-        )
-        assignments = spark.read.schema(_L81_ASSIGN_SCHEMA).parquet(
-            os.path.join(d, "assignments-g001")
-        )
-        codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
-            os.path.join(d, "codes-g001")
-        )
-        d_ins = spark.read.schema(
-            "vec_id bigint, e array<double>, nrm double"
-        ).parquet(os.path.join(d, "delta_ins"))
-        d_del = spark.read.schema("vec_id bigint").parquet(
-            os.path.join(d, "delta_del")
-        )
-        a_m = assignments.join(
-            F.broadcast(d_del), "vec_id", "left_anti"
-        ).unionAll(
-            ivf_assign(d_ins, cent_rows_b, nprobe=1).select(
-                "vec_id", "bucket"
-            )
-        )
-        c_m = codes.join(
-            F.broadcast(d_del), "vec_id", "left_anti"
-        ).unionAll(
-            _pq_assign(_pq_subspaces(d_ins).select("vec_id", "s", "sv"), cents_b)
-        )
-        checkpoint_index_generations(
-            d,
-            [
-                (
-                    a_m,
-                    ["assignments-g001", "delta_del"],
-                    "assignments-g002",
-                ),
-                (c_m, ["codes-g001", "delta_ins"], "codes-g002"),
-            ],
-            target_files=8,
-        )
+        _stage_index(IVFPQ, spark, sf_dir, d)
+        _checkpoint_feeds(IVFPQ, spark, d, target_files=8)
 
     idx = ensure_index(
         scratch_path(f"dps_l81_ivfpq_{tag}"),
@@ -1763,33 +1624,7 @@ def l81_ivfpq_pruned_checkpoint(spark, sf_dir):
         version="ivfpq-pruned-v1",
         build=_stage,
     )
-    heads = head_generations(idx)
-    head_a, head_c = heads["assignments-"], heads["codes-"]
-    cent_rows = (
-        spark.read.schema(_RIVF_CENT_SCHEMA)
-        .parquet(os.path.join(idx, "centroids"))
-        .collect()
-    )
-    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
-        os.path.join(idx, "codebooks")
-    )
-    assignments = spark.read.schema(_L81_ASSIGN_SCHEMA).parquet(
-        os.path.join(idx, head_a)
-    )
-    codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
-        os.path.join(idx, head_c)
-    )
-    qvecs, _ = _ivf_corpus_and_centroids(
-        spark,
-        sf_dir,
-        pred=(F.col("vec_id") % 100 == 0)
-        & ((F.col("vec_id") % 9 == 5) | (F.col("vec_id") % 11 != 3)),
-    )
-    probes = ivf_assign(qvecs, cent_rows, nprobe=3).select(
-        F.col("vec_id").alias("query_id"), "bucket"
-    )
-    qsub = _pq_subspaces(qvecs).select("vec_id", "s", "sv")
-    return _pq_pruned_probe_topk(qsub, probes, assignments, cents, codes)
+    return _serve_ivfpq(spark, sf_dir, _read_heads(spark, IVFPQ, idx), _final_slice())
 
 
 _CQ_K = 64  # corpus-sized coarse cells (the K ~ sqrt(N) sizing rule)
@@ -2140,24 +1975,17 @@ def l83_kmeans_coarse_ivfpq(spark, sf_dir):
     return _pq_pruned_probe_topk(qsub, probes, indexed, cents, codes)
 
 
-_CK_CENTS_SCHEMA = "cid int, cv array<double>"
-_L84_TRAIN_PRED = "vec_id % 9 <> 5"
-_L84_CORPUS_PRED = "(vec_id % 9 = 5 OR vec_id % 11 <> 3)"
 #: data-derived coarse-codebook size — the K ∝ √N sizing rule as SQL, over
 #: whatever slice the oracle's vt CTE binds (train for l84, final for l85)
 _K_SQRT_SQL = "(SELECT GREATEST(1, CAST(CEIL(SQRT(COUNT(*))) AS BIGINT)) FROM vt)"
 
 _L84_ORACLE = _l83_oracle(
-    train_pred=_L84_TRAIN_PRED,
-    corpus_pred=_L84_CORPUS_PRED,
-    k_sql=_K_SQRT_SQL,
+    train_pred=_OLD_SQL, corpus_pred=_FINAL_SQL, k_sql=_K_SQRT_SQL
 )
 
 # retrained world: BOTH quantizers re-derived from the final corpus
 _L85_ORACLE = _l83_oracle(
-    train_pred=_L84_CORPUS_PRED,
-    corpus_pred=_L84_CORPUS_PRED,
-    k_sql=_K_SQRT_SQL,
+    train_pred=_FINAL_SQL, corpus_pred=_FINAL_SQL, k_sql=_K_SQRT_SQL
 )
 
 
@@ -2171,128 +1999,72 @@ def _sqrt_k(n: int) -> int:
     return max(1, math.ceil(math.sqrt(n)))
 
 
-def _stage_l84_state(spark, sf_dir: str, d: str) -> None:
-    """Stage 'yesterday's' persisted k-means-IVFPQ world + CDC feeds
-    (round 12 — l81's staging with the fixture's K=10 label quantizer
-    replaced by the corpus-sized seeded-Lloyd one): BOTH quantizers are
-    trained on the ``%9!=5`` slice with the data-derived K=⌈√N_train⌉,
-    and ALL FOUR index tables — coarse codebook, PQ codebooks, inverted
-    file, code table — land under ONE history link (the N=4
-    :func:`checkpoint_index_generations` transaction), so a reader can
-    never observe a quantizer without the tables encoded against it.
-    Insert feed = the held-out slice's raw vectors; tombstones =
-    ``%11==3``."""
-    import os
+def _kivfpq_build(spark, sf_dir, pred):
+    """The k-means IVFPQ world over a corpus slice: the seeded-Lloyd
+    coarse codebook at the data-derived K=⌈√N⌉ of the slice, the PQ
+    codebooks, the slim inverted file and the code table."""
+    v, sub = _pq_corpus(spark, sf_dir, pred)
+    ccents = _coarse_kmeans_train(v, k=_sqrt_k(v.count()))
+    cents = _pq_train(v, sub)
+    return {
+        "centroids": ccents,
+        "codebooks": cents,
+        "assignments": _coarse_kmeans_assign(v, ccents),
+        "codes": _pq_assign(sub, cents),
+    }
 
-    from dask_pipes_spark.session import checkpoint_index_generations
 
-    v, sub = _pq_corpus(spark, sf_dir)
-    train = v.filter(F.col("vec_id") % 9 != 5)
-    tsub = sub.filter(F.col("vec_id") % 9 != 5)
-    k = _sqrt_k(train.count())
-    ccents = _coarse_kmeans_train(train, k=k)
-    cents = _pq_train(train, tsub)
-    checkpoint_index_generations(
-        d,
-        [
-            (ccents, [], "centroids-g001"),
-            (cents, [], "codebooks-g001"),
-            (_coarse_kmeans_assign(train, ccents), [], "assignments-g001"),
-            (_pq_assign(tsub, cents), [], "codes-g001"),
-        ],
-        target_files=8,
+#: all FOUR tables are born under ONE history link, so a reader can never
+#: observe a quantizer without the tables encoded against it; quantizers
+#: are generations too (l85 retrains them), so the assigner reads their
+#: heads, and the insert feed carries no norm
+KIVFPQ = IndexFamily(
+    quantizers=("centroids", "codebooks"),
+    tables=("assignments", "codes"),
+    schemas={
+        "centroids": _CK_CENTS_SCHEMA,
+        "codebooks": _PQ_CENTS_SCHEMA,
+        "assignments": _SLIM_ASSIGN_SCHEMA,
+        "codes": _PQ_CODES_SCHEMA,
+        "delta_ins": _VEC_SCHEMA,
+    },
+    build=_kivfpq_build,
+    assigner=lambda q: lambda ins: {
+        "assignments": _coarse_kmeans_assign(ins, q["centroids"]),
+        "codes": _pq_assign(_subvectors(ins), q["codebooks"]),
+    },
+    feed=lambda frame: frame.select("vec_id", "e"),
+    born=True,
+    births=(("centroids", "codebooks", "assignments", "codes"),),
+)
+
+
+def _serve_kivfpq(spark, sf_dir: str, idx: str):
+    """Shared l84/l85/k27 serving path: all FOUR table heads resolved
+    compaction-proof, then the pruned IVFADC probe entirely from persisted
+    state: query vectors are the only corpus read; candidates are the
+    query's nprobe coarse buckets via the persisted inverted file; ADC
+    scores only those."""
+    st = _read_heads(spark, KIVFPQ, idx)
+    qvecs, qsub = _pq_corpus(
+        spark, sf_dir, pred=(F.col("vec_id") % 100 == 0) & _final_slice()
     )
-    v.filter(F.col("vec_id") % 9 == 5).write.mode("overwrite").parquet(
-        os.path.join(d, "delta_ins")
+    probes = _coarse_kmeans_assign(qvecs, st["centroids"], nprobe=_CQ_NPROBE).select(
+        F.col("vec_id").alias("query_id"), "bucket"
     )
-    train.filter(F.col("vec_id") % 11 == 3).select("vec_id").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(d, "delta_del"))
+    return _pq_pruned_probe_topk(
+        qsub, probes, st["assignments"], st["codebooks"], st["codes"]
+    )
 
 
 def _stage_l84_lifecycle(spark, sf_dir: str, d: str) -> None:
-    """The l84 maintenance day: apply the CDC delta against the FIXED
-    persisted quantizers (l81's algebra — broadcast anti-join deletes,
-    map-side coarse assignment + PQ encode of the inserts) and commit
+    """The l84 build and maintenance day: stage yesterday's world, then
+    apply the CDC delta against the FIXED persisted quantizers and commit
     the (assignments, codes) pair atomically. The quantizer generations
     stay heads — retraining them is l85's transaction, on the slow
     cadence the staleness manifest drives."""
-    import os
-
-    from dask_pipes_spark.session import checkpoint_index_generations
-
-    _stage_l84_state(spark, sf_dir, d)
-    ccents = spark.read.schema(_CK_CENTS_SCHEMA).parquet(
-        os.path.join(d, "centroids-g001")
-    )
-    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
-        os.path.join(d, "codebooks-g001")
-    )
-    assignments = spark.read.schema(_L81_ASSIGN_SCHEMA).parquet(
-        os.path.join(d, "assignments-g001")
-    )
-    codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
-        os.path.join(d, "codes-g001")
-    )
-    d_ins = spark.read.schema("vec_id bigint, e array<double>").parquet(
-        os.path.join(d, "delta_ins")
-    )
-    d_del = spark.read.schema("vec_id bigint").parquet(
-        os.path.join(d, "delta_del")
-    )
-    a_m = assignments.join(
-        F.broadcast(d_del), "vec_id", "left_anti"
-    ).unionAll(_coarse_kmeans_assign(d_ins, ccents))
-    c_m = codes.join(F.broadcast(d_del), "vec_id", "left_anti").unionAll(
-        _pq_assign(_pq_subspaces(d_ins).select("vec_id", "s", "sv"), cents)
-    )
-    checkpoint_index_generations(
-        d,
-        [
-            (a_m, ["assignments-g001", "delta_del"], "assignments-g002"),
-            (c_m, ["codes-g001", "delta_ins"], "codes-g002"),
-        ],
-        target_files=8,
-    )
-
-
-def _serve_kivfpq(spark, sf_dir: str, idx: str, qpred=None):
-    """Shared l84/l85 serving path: resolve all FOUR table heads by
-    prefix from :func:`head_generations` (checkpoint.heads + tail links — the
-    round-12 contract, since quantizers commit orders of magnitude less
-    often than the pair and their links are the first to fold), then run
-    the pruned IVFADC probe entirely from persisted state: query vectors
-    are the only corpus read; candidates are the query's nprobe coarse
-    buckets via the persisted inverted file; ADC scores only those."""
-    import os
-
-    from dask_pipes_spark.session import head_generations
-
-    head = head_generations(idx)
-    ccents = spark.read.schema(_CK_CENTS_SCHEMA).parquet(
-        os.path.join(idx, head["centroids-"])
-    )
-    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
-        os.path.join(idx, head["codebooks-"])
-    )
-    assignments = spark.read.schema(_L81_ASSIGN_SCHEMA).parquet(
-        os.path.join(idx, head["assignments-"])
-    )
-    codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
-        os.path.join(idx, head["codes-"])
-    )
-    if qpred is None:
-        qpred = F.col("vec_id") % 100 == 0
-    qvecs, qsub = _pq_corpus(
-        spark,
-        sf_dir,
-        pred=qpred
-        & ((F.col("vec_id") % 9 == 5) | (F.col("vec_id") % 11 != 3)),
-    )
-    probes = _coarse_kmeans_assign(qvecs, ccents, nprobe=_CQ_NPROBE).select(
-        F.col("vec_id").alias("query_id"), "bucket"
-    )
-    return _pq_pruned_probe_topk(qsub, probes, assignments, cents, codes)
+    _stage_index(KIVFPQ, spark, sf_dir, d)
+    _checkpoint_feeds(KIVFPQ, spark, d, target_files=8)
 
 
 def _l84_index(spark, sf_dir: str) -> str:
@@ -2352,34 +2124,20 @@ def l84_kmeans_ivfpq_serving(spark, sf_dir):
 
 
 def _stage_l85_state(spark, sf_dir: str, d: str) -> None:
-    """l84's lifecycle, then the RETRAIN transaction: both quantizers
-    re-derived from the FINAL corpus (K re-sized to ⌈√N_final⌉ — the
-    sizing rule tracks growth), the corpus re-assigned and re-encoded
-    against them, and all four tables committed under ONE history link
-    superseding all four old heads. No observable manifest state mixes
-    old and new quantizers (kill-point tested)."""
-    from dask_pipes_spark.session import checkpoint_index_generations
-
+    """l84's lifecycle, then the RETRAIN transaction: the whole world
+    rebuilt over the FINAL corpus (K re-sized to ⌈√N_final⌉ — the sizing
+    rule tracks growth) and all four tables committed under ONE history
+    link superseding all four old heads. No observable manifest state
+    mixes old and new quantizers (kill-point tested)."""
     _stage_l84_lifecycle(spark, sf_dir, d)
-    v, sub = _pq_corpus(
-        spark,
-        sf_dir,
-        pred=(F.col("vec_id") % 9 == 5) | (F.col("vec_id") % 11 != 3),
-    )
-    k = _sqrt_k(v.count())
-    ccents = _coarse_kmeans_train(v, k=k)
-    cents = _pq_train(v, sub)
+    frames = _kivfpq_build(spark, sf_dir, _final_slice())
     checkpoint_index_generations(
         d,
         [
-            (ccents, ["centroids-g001"], "centroids-g002"),
-            (cents, ["codebooks-g001"], "codebooks-g002"),
-            (
-                _coarse_kmeans_assign(v, ccents),
-                ["assignments-g002"],
-                "assignments-g003",
-            ),
-            (_pq_assign(sub, cents), ["codes-g002"], "codes-g003"),
+            (frames["centroids"], ["centroids-g001"], "centroids-g002"),
+            (frames["codebooks"], ["codebooks-g001"], "codebooks-g002"),
+            (frames["assignments"], ["assignments-g002"], "assignments-g003"),
+            (frames["codes"], ["codes-g002"], "codes-g003"),
         ],
         target_files=8,
     )
@@ -2387,9 +2145,9 @@ def _stage_l85_state(spark, sf_dir: str, d: str) -> None:
 
 @query("l85_quantizer_retrain_txn", oracle=_L85_ORACLE)
 def l85_quantizer_retrain_txn(spark, sf_dir):
-    """Quantizer retrain as ONE 4-table transaction (round 12 — the r11
-    verdict's item 2, exercising ``checkpoint_index_generations`` at
-    N=4 across a RETRAIN boundary): after l84's CDC day drifts the
+    """Quantizer retrain as ONE 4-table transaction (exercising
+    ``checkpoint_index_generations`` at N=4 across a RETRAIN boundary):
+    after l84's CDC day drifts the
     corpus away from the slice the quantizers were trained on, the
     staleness cadence fires and the whole world re-derives — new coarse
     codebook (K re-sized to ⌈√N_final⌉), new PQ codebooks, corpus
@@ -2451,8 +2209,8 @@ def _l86_oracle() -> str:
              LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE)) AS e
       FROM embeddings
     ),
-    vt AS (SELECT vec_id, e FROM v WHERE {_L84_TRAIN_PRED}),
-    vc AS (SELECT vec_id, e FROM v WHERE {_L84_CORPUS_PRED}),
+    vt AS (SELECT vec_id, e FROM v WHERE {_OLD_SQL}),
+    vc AS (SELECT vec_id, e FROM v WHERE {_FINAL_SQL}),
     cseeds AS (
       SELECT vec_id, e, ROW_NUMBER() OVER (ORDER BY h, vec_id) - 1 AS cid
       FROM (SELECT vec_id, e,
@@ -2531,10 +2289,10 @@ def _l86_oracle() -> str:
 
 @query("l86_retrain_staleness", oracle=_l86_oracle())
 def l86_retrain_staleness(spark, sf_dir):
-    """The staleness manifest that drives l85's retrain cadence (round
-    12 — completing the r11 verdict's item-1 story: build → maintain →
-    serve → DECIDE WHEN TO RETRAIN). Reads l84's persisted world — the
-    SAME generations a prober reads, heads resolved compaction-proof —
+    """The staleness manifest that drives l85's retrain cadence (build →
+    maintain → serve → DECIDE WHEN TO RETRAIN). Reads l84's persisted
+    world — the SAME generations a prober reads, heads resolved
+    compaction-proof —
     and publishes the operational trigger a deployment schedules the
     4-table retrain transaction on:
 
@@ -2562,18 +2320,8 @@ def l86_retrain_staleness(spark, sf_dir):
     cheap enough to ride every maintenance window, which is the point:
     the trigger is computed FROM the serving state, so the decision
     needs no side-channel bookkeeping."""
-    import os
-
-    from dask_pipes_spark.session import head_generations
-
-    idx = _l84_index(spark, sf_dir)
-    head = head_generations(idx)
-    ccents = spark.read.schema(_CK_CENTS_SCHEMA).parquet(
-        os.path.join(idx, head["centroids-"])
-    )
-    assignments = spark.read.schema(_L81_ASSIGN_SCHEMA).parquet(
-        os.path.join(idx, head["assignments-"])
-    )
+    st = _read_heads(spark, KIVFPQ, _l84_index(spark, sf_dir))
+    ccents, assignments = st["centroids"], st["assignments"]
     # the persisted codebook's ACTUAL size — bounded (≤√N rows), the
     # fit-param exemption (SURVEY §7.7)
     k_trained = ccents.count()
@@ -2582,7 +2330,7 @@ def l86_retrain_staleness(spark, sf_dir):
         assignments.join(v, "vec_id")
         .join(F.broadcast(ccents), F.col("bucket") == F.col("cid"))
         .select(
-            (F.col("vec_id") % 9 == 5).cast("int").alias("is_new"),
+            _ins_slice().cast("int").alias("is_new"),
             F.round(_l2sq("e", "cv"), 6).alias("d2"),
         )
     )
@@ -2623,20 +2371,17 @@ def l86_retrain_staleness(spark, sf_dir):
     )
 
 
-_L82_ASOF_ORACLE = _l68_oracle(
-    train_pred="vec_id % 9 <> 5",
-    corpus_pred="vec_id % 9 <> 5",
-)
+_L82_ASOF_ORACLE = _l68_oracle(train_pred=_OLD_SQL, corpus_pred=_OLD_SQL)
 
 
 @query("l82_pair_time_travel", oracle=_L82_ASOF_ORACLE)
 def l82_pair_time_travel(spark, sf_dir):
-    """Consistent two-table time travel (round 11 — the as-of payoff of
-    the atomic multi-table commit, extending l79/p21's VERSION-AS-OF to
-    generation PAIRS): because k23/l81 land (assignments, codes) under
-    ONE history link, an as-of reader resolves BOTH tables from that
-    single link — a consistent snapshot by construction. Per-table
-    resolution (the r10 two-link shape) could legitimately pair
+    """Consistent two-table time travel (the as-of payoff of the atomic
+    multi-table commit, extending l79/p21's VERSION-AS-OF to generation
+    PAIRS): because k23/l81 land (assignments, codes) under ONE history
+    link, an as-of reader resolves BOTH tables from that single link — a
+    consistent snapshot by construction. Per-table resolution (one link
+    per table) could legitimately pair
     yesterday's assignments with today's codes when the as-of timestamp
     falls between the two commits; with the paired link that torn read
     is unrepresentable.
@@ -2659,68 +2404,13 @@ def l82_pair_time_travel(spark, sf_dir):
     state."""
     import os
 
-    from dask_pipes_spark.operators.llm_ext import (
-        _ivf_corpus_and_centroids,
-        ivf_assign,
-    )
-    from dask_pipes_spark.session import (
-        _link_bys,
-        _load_manifest,
-        checkpoint_index_generations,
-        ensure_index,
-    )
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
 
     def _stage(d: str) -> None:
-        _stage_l81_state(spark, sf_dir, d)
-        cent_rows_b = (
-            spark.read.schema(_RIVF_CENT_SCHEMA)
-            .parquet(os.path.join(d, "centroids"))
-            .collect()
-        )
-        cents_b = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
-            os.path.join(d, "codebooks")
-        )
-        assignments = spark.read.schema(_L81_ASSIGN_SCHEMA).parquet(
-            os.path.join(d, "assignments-g001")
-        )
-        codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
-            os.path.join(d, "codes-g001")
-        )
-        d_ins = spark.read.schema(
-            "vec_id bigint, e array<double>, nrm double"
-        ).parquet(os.path.join(d, "delta_ins"))
-        d_del = spark.read.schema("vec_id bigint").parquet(
-            os.path.join(d, "delta_del")
-        )
-        a_m = assignments.join(
-            F.broadcast(d_del), "vec_id", "left_anti"
-        ).unionAll(
-            ivf_assign(d_ins, cent_rows_b, nprobe=1).select(
-                "vec_id", "bucket"
-            )
-        )
-        c_m = codes.join(
-            F.broadcast(d_del), "vec_id", "left_anti"
-        ).unionAll(
-            _pq_assign(_pq_subspaces(d_ins).select("vec_id", "s", "sv"), cents_b)
-        )
         # retain=2 keeps BOTH members of the superseded pair readable —
         # the time-travel target is the whole pair, not one table
-        checkpoint_index_generations(
-            d,
-            [
-                (
-                    a_m,
-                    ["assignments-g001", "delta_del"],
-                    "assignments-g002",
-                ),
-                (c_m, ["codes-g001", "delta_ins"], "codes-g002"),
-            ],
-            retain=2,
-            target_files=8,
-        )
+        _stage_index(IVFPQ, spark, sf_dir, d)
+        _checkpoint_feeds(IVFPQ, spark, d, retain=2, target_files=8)
 
     idx = ensure_index(
         scratch_path(f"dps_l82_pair_travel_{tag}"),
@@ -2731,80 +2421,9 @@ def l82_pair_time_travel(spark, sf_dir):
     man = _load_manifest(idx)
     pair_links = [h for h in man["history"] if len(_link_bys(h)) == 2]
     asof = pair_links[-2]  # the previous pair — ONE link names both tables
-    head_a, head_c = _link_bys(asof)
-    cent_rows = (
-        spark.read.schema(_RIVF_CENT_SCHEMA)
-        .parquet(os.path.join(idx, "centroids"))
-        .collect()
-    )
-    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
-        os.path.join(idx, "codebooks")
-    )
-    assignments = spark.read.schema(_L81_ASSIGN_SCHEMA).parquet(
-        os.path.join(idx, head_a)
-    )
-    codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
-        os.path.join(idx, head_c)
-    )
+    st = _read_state(spark, IVFPQ, idx, ["centroids", "codebooks", *_link_bys(asof)])
     # yesterday's queries over yesterday's corpus (the as-of replay)
-    qvecs, _ = _ivf_corpus_and_centroids(
-        spark,
-        sf_dir,
-        pred=(F.col("vec_id") % 100 == 0) & (F.col("vec_id") % 9 != 5),
-    )
-    probes = ivf_assign(qvecs, cent_rows, nprobe=3).select(
-        F.col("vec_id").alias("query_id"), "bucket"
-    )
-    qsub = _pq_subspaces(qvecs).select("vec_id", "s", "sv")
-    return _pq_pruned_probe_topk(qsub, probes, assignments, cents, codes)
-
-
-def _stage_pq_delta_state(spark, sf_dir: str, d: str) -> None:
-    """Stage 'yesterday's' persisted PQ state + CDC feeds (shared by l67
-    and l72): codebooks trained on the ``%9!=5`` slice, codes for that
-    slice, insert feed = the held-out slice's subvectors, tombstones =
-    ``%11==3``."""
-    import os
-
-    v_old, sub_old = _pq_corpus(spark, sf_dir, pred=F.col("vec_id") % 9 != 5)
-    cents = _pq_train(v_old, sub_old)
-    cents.write.mode("overwrite").parquet(os.path.join(d, "codebooks"))
-    _pq_assign(sub_old, cents).write.mode("overwrite").parquet(
-        os.path.join(d, "codes")
-    )
-    _, sub_new = _pq_corpus(spark, sf_dir, pred=F.col("vec_id") % 9 == 5)
-    sub_new.write.mode("overwrite").parquet(os.path.join(d, "delta_ins"))
-    v_old.filter(F.col("vec_id") % 11 == 3).select(
-        "vec_id"
-    ).write.mode("overwrite").parquet(os.path.join(d, "delta_del"))
-
-
-def _read_pq_delta_state(spark, d: str):
-    """Load the staged state back (persisted tables only):
-    (cents, codes_old, delta_ins, delta_del)."""
-    import os
-
-    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
-        os.path.join(d, "codebooks")
-    )
-    codes_old = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
-        os.path.join(d, "codes")
-    )
-    d_ins = spark.read.schema(
-        "vec_id bigint, s int, sv array<double>"
-    ).parquet(os.path.join(d, "delta_ins"))
-    d_del = spark.read.schema("vec_id bigint").parquet(
-        os.path.join(d, "delta_del")
-    )
-    return cents, codes_old, d_ins, d_del
-
-
-def _pq_delta_merge(codes_old, d_ins, d_del, cents):
-    """l67's maintenance algebra: broadcast anti-join deletes + map-side
-    delta encoding against the fixed codebooks."""
-    return codes_old.join(
-        F.broadcast(d_del), "vec_id", "left_anti"
-    ).unionAll(_pq_assign(d_ins, cents))
+    return _serve_ivfpq(spark, sf_dir, st, _old_slice())
 
 
 @query("l67_pq_index_delta", oracle=_L67_ORACLE)
@@ -2831,27 +2450,19 @@ def l67_pq_index_delta(spark, sf_dir):
     import os
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = scratch_path(f"dps_l67_pq_delta_{tag}")
     idx = ensure_index(
-        base,
+        scratch_path(f"dps_l67_pq_delta_{tag}"),
         os.path.join(sf_dir, "embeddings.parquet"),
         version="pq-delta-v1",
-        build=lambda d: _stage_pq_delta_state(spark, sf_dir, d),
+        build=lambda d: _stage_index(PQ, spark, sf_dir, d),
     )
-    cents, codes_old, d_ins, d_del = _read_pq_delta_state(spark, idx)
-    codes = _pq_delta_merge(codes_old, d_ins, d_del, cents)
-    _, sub = _pq_corpus(spark, sf_dir)
-    qsub = sub.filter(
-        (F.col("vec_id") % 100 == 0)
-        & ((F.col("vec_id") % 9 == 5) | (F.col("vec_id") % 11 != 3))
-    )
-    return _pq_probe_topk(qsub, cents, codes)
+    return _serve_pq(spark, sf_dir, _merged_feeds(PQ, spark, idx))
 
 
 @query("l72_pq_index_checkpoint", oracle=_L67_ORACLE)
 def l72_pq_index_checkpoint(spark, sf_dir):
-    """PQ code-table write-back (round 8 — l70's protocol on the l67
-    state): the delta-maintained code table is checkpointed as a fresh
+    """PQ code-table write-back (l70's protocol on the l67 state): the
+    delta-maintained code table is checkpointed as a fresh
     index generation via :func:`checkpoint_index_generation` (compact →
     atomic swap → vacuum manifest → delete superseded), so ADC probes
     stop re-paying the anti-join + union merge and the CDC feeds stop
@@ -2875,41 +2486,21 @@ def l72_pq_index_checkpoint(spark, sf_dir):
     that keep a trillion-vector PQ index serving while it churns."""
     import os
 
-    from dask_pipes_spark.session import checkpoint_index_generation
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = scratch_path(f"dps_l72_pq_ckpt_{tag}")
 
     def _stage(d: str) -> None:
-        # shared l67 staging → maintenance over the persisted state only
-        # → write-back (compact → swap → manifest → vacuum)
-        _stage_pq_delta_state(spark, sf_dir, d)
-        cents, codes_old, d_ins, d_del = _read_pq_delta_state(spark, d)
-        checkpoint_index_generation(
-            d,
-            _pq_delta_merge(codes_old, d_ins, d_del, cents),
-            superseded=["codes", "delta_ins", "delta_del"],
-            generation="codes-g002",
-        )
+        # l67's staging, then its merge over the persisted state only,
+        # written back (compact → swap → manifest → vacuum)
+        _stage_index(PQ, spark, sf_dir, d)
+        _checkpoint_feeds(PQ, spark, d)
 
     idx = ensure_index(
-        base,
+        scratch_path(f"dps_l72_pq_ckpt_{tag}"),
         os.path.join(sf_dir, "embeddings.parquet"),
         version="pq-ckpt-v1",
         build=_stage,
     )
-    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
-        os.path.join(idx, "codebooks")
-    )
-    codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
-        os.path.join(idx, "codes-g002")
-    )
-    _, sub = _pq_corpus(spark, sf_dir)
-    qsub = sub.filter(
-        (F.col("vec_id") % 100 == 0)
-        & ((F.col("vec_id") % 9 == 5) | (F.col("vec_id") % 11 != 3))
-    )
-    return _pq_probe_topk(qsub, cents, codes)
+    return _serve_pq(spark, sf_dir, _read_heads(spark, PQ, idx))
 
 
 @query(

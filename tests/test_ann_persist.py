@@ -8,6 +8,8 @@ import json
 import os
 import re
 
+import pytest
+
 from tests.conftest import SF_SMOKE
 
 
@@ -682,6 +684,37 @@ def test_l77_maintenance_plan_reads_only_index_and_deltas(spark):
     assert "ExistingRDD" not in plan, "Lloyd checkpoint leaked into probe"
     assert "posexplode" not in plan  # no coarse training
     assert plan.count("dps_l77_rivfadc_delta") >= 5  # 4 tables + feeds
+
+
+@pytest.mark.parametrize(
+    "module, key, index_name, tables",
+    [
+        ("llm_ext", "l65_ann_index_delta", "dps_l65_ivf_delta",
+         ["assignments", "centroids"]),
+        ("vectors", "l67_pq_index_delta", "dps_l67_pq_delta",
+         ["codebooks", "codes"]),
+        ("llm_ext", "l75_lsh_index_delta", "dps_l75_lsh_delta", ["buckets"]),
+        ("vectors", "l77_residual_index_delta", "dps_l77_rivfadc_delta",
+         ["assignments", "centroids", "codebooks", "codes"]),
+    ],
+)
+def test_batch_delta_index_layout(spark, module, key, index_name, tables):
+    """The batch delta keys keep yesterday's state as plain (generation-
+    less) tables beside both staged CDC feeds, and write no VACUUM
+    manifest: the probe-time merge never commits."""
+    import importlib
+
+    fn = getattr(
+        importlib.import_module(f"dask_pipes_spark.operators.{module}"), key
+    )
+    from dask_pipes_spark.session import scratch_path
+
+    assert fn(spark, SF_SMOKE).count() > 0
+    tag = SF_SMOKE.rstrip("/").rsplit("/", 1)[-1]
+    names = sorted(os.listdir(scratch_path(f"{index_name}_{tag}")))
+    assert names == sorted(
+        ["MANIFEST.json", "delta_del", "delta_ins", *tables]
+    )
 
 
 def test_l78_checkpoint_equals_l77_merge(spark):

@@ -169,15 +169,10 @@ def test_dag_pipeline_shared_branch_fans_out(spark):
     assert all(r["count"] > 0 for r in rows)
 
 
-def test_p10_checkpoint_equals_single_plan(spark, registry):
-    """The checkpointed two-stage pipeline must produce exactly the rowset
-    of the equivalent single Catalyst plan."""
-    from pyspark.sql import functions as F
-
+def _p10_single_plan_rows(spark):
+    """p10's rowset computed as ONE Catalyst plan (no checkpoint)."""
     from dask_pipes_spark.session import load_tables
 
-    queries, _ = registry
-    staged = sorted(map(tuple, queries["p10_checkpoint_restart"](spark, SF_SMOKE).collect()))
     t = load_tables(spark, SF_SMOKE, ("orders", "customer"))
     direct = (
         t["orders"]
@@ -192,7 +187,32 @@ def test_p10_checkpoint_equals_single_plan(spark, registry):
         .filter(F.col("n_orders") >= 5)
         .select("c_custkey", "c_mktsegment", "n_orders", "total_spend")
     )
-    assert staged == sorted(map(tuple, direct.collect()))
+    return sorted(map(tuple, direct.collect()))
+
+
+def test_p10_checkpoint_equals_single_plan(spark, registry):
+    """The checkpointed two-stage pipeline must produce exactly the rowset
+    of the equivalent single Catalyst plan."""
+    queries, _ = registry
+    staged = sorted(map(tuple, queries["p10_checkpoint_restart"](spark, SF_SMOKE).collect()))
+    assert staged == _p10_single_plan_rows(spark)
+
+
+def test_p10_checkpoint_leaves_no_temp_dir(spark, registry):
+    """p10 checkpoints under the scratch root (removed at exit), never
+    into a fresh top-level temp dir that nothing removes."""
+    queries, _ = registry
+
+    def leaked():
+        return {
+            n for n in os.listdir(tempfile.gettempdir())
+            if n.startswith("dps_ckpt_p10_")
+        }
+
+    before = leaked()
+    staged = sorted(map(tuple, queries["p10_checkpoint_restart"](spark, SF_SMOKE).collect()))
+    assert leaked() == before
+    assert staged == _p10_single_plan_rows(spark)
 
 
 def test_p1_registry_key_contract(spark, registry):

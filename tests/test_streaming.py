@@ -478,10 +478,13 @@ def test_k20_batching_invariance(spark):
     import os
     import shutil
 
-    from dask_pipes_spark.operators.llm_ext import _IVF_ASSIGN_SCHEMA, _ivf_probe_topk
+    from dask_pipes_spark.operators.ann_lifecycle import (
+        _IVF_ASSIGN_SCHEMA,
+        _delta_step,
+        _stage_index,
+    )
+    from dask_pipes_spark.operators.llm_ext import IVF, _ivf_probe_topk
     from dask_pipes_spark.operators.streaming_ops import (
-        _ivf_step,
-        _stage_k20_state,
         k20_stream_ann_ivm,
         run_ivm_stream,
     )
@@ -493,8 +496,8 @@ def test_k20_batching_invariance(spark):
     d = scratch_path("dps_k20_invariance")
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
-    _stage_k20_state(spark, SF_SMOKE, d)
-    run_ivm_stream(spark, d, _ivf_step(spark, d), max_files_per_trigger=2)
+    _stage_index(IVF, spark, SF_SMOKE, d, cdc=True)
+    run_ivm_stream(spark, d, _delta_step(IVF, spark, d), max_files_per_trigger=2)
     man = json.load(open(os.path.join(d, "VACUUM.json")))
     assert len(man["history"]) == 3, "4 files at mfpt=2 -> 2 windows"
     indexed = spark.read.schema(_IVF_ASSIGN_SCHEMA).parquet(
@@ -569,10 +572,13 @@ def test_k21_batching_invariance(spark):
     import os
     import shutil
 
-    from dask_pipes_spark.operators.llm_ext import _LSH_BUCKET_SCHEMA, _lsh_probe_topk
+    from dask_pipes_spark.operators.ann_lifecycle import (
+        _LSH_BUCKET_SCHEMA,
+        _delta_step,
+        _stage_index,
+    )
+    from dask_pipes_spark.operators.llm_ext import LSH, _lsh_probe_topk
     from dask_pipes_spark.operators.streaming_ops import (
-        _lsh_step,
-        _stage_k21_state,
         k21_stream_lsh_ivm,
         run_ivm_stream,
     )
@@ -584,8 +590,8 @@ def test_k21_batching_invariance(spark):
     d = scratch_path("dps_k21_invariance")
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
-    _stage_k21_state(spark, SF_SMOKE, d)
-    run_ivm_stream(spark, d, _lsh_step(spark, d), max_files_per_trigger=2)
+    _stage_index(LSH, spark, SF_SMOKE, d, cdc=True)
+    run_ivm_stream(spark, d, _delta_step(LSH, spark, d), max_files_per_trigger=2)
     man = json.load(open(os.path.join(d, "VACUUM.json")))
     assert len(man["history"]) == 3, "4 files at mfpt=2 -> 2 windows"
     indexed = spark.read.schema(_LSH_BUCKET_SCHEMA).parquet(
@@ -786,9 +792,13 @@ def test_k23_batching_invariance(spark):
     import os
     import shutil
 
+    from dask_pipes_spark.operators.ann_lifecycle import (
+        _CENT_SCHEMA,
+        _SLIM_ASSIGN_SCHEMA,
+        _delta_step,
+        _stage_index,
+    )
     from dask_pipes_spark.operators.streaming_ops import (
-        _pq_step,
-        _stage_k23_state,
         k23_stream_pq_ivm,
         run_ivm_stream,
     )
@@ -797,8 +807,7 @@ def test_k23_batching_invariance(spark):
         ivf_assign,
     )
     from dask_pipes_spark.operators.vectors import (
-        _L81_ASSIGN_SCHEMA,
-        _RIVF_CENT_SCHEMA,
+        IVFPQ,
         _pq_pruned_probe_topk,
         _pq_subspaces,
     )
@@ -809,20 +818,20 @@ def test_k23_batching_invariance(spark):
     d = scratch_path("dps_k23_invariance")
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
-    _stage_k23_state(spark, SF_SMOKE, d)
-    run_ivm_stream(spark, d, _pq_step(spark, d), max_files_per_trigger=2)
+    _stage_index(IVFPQ, spark, SF_SMOKE, d, cdc=True)
+    run_ivm_stream(spark, d, _delta_step(IVFPQ, spark, d), max_files_per_trigger=2)
     man = json.load(open(os.path.join(d, "VACUUM.json")))
     assert len(man["history"]) == 3, "init pair + 2 windows at mfpt=2"
     bys = [b for h in man["history"] for b in _link_bys(h)]
     cent_rows = (
-        spark.read.schema(_RIVF_CENT_SCHEMA)
+        spark.read.schema(_CENT_SCHEMA)
         .parquet(os.path.join(d, "centroids"))
         .collect()
     )
     cents = spark.read.schema("s int, cid int, cv array<double>").parquet(
         os.path.join(d, "codebooks")
     )
-    assignments = spark.read.schema(_L81_ASSIGN_SCHEMA).parquet(
+    assignments = spark.read.schema(_SLIM_ASSIGN_SCHEMA).parquet(
         os.path.join(d, [b for b in bys if b.startswith("assignments-")][-1])
     )
     codes = spark.read.schema("vec_id bigint, s int, code int").parquet(
@@ -930,19 +939,19 @@ def test_k24_batching_invariance(spark):
     import os
     import shutil
 
+    from dask_pipes_spark.operators.ann_lifecycle import (
+        _CENT_SCHEMA,
+        _IVF_ASSIGN_SCHEMA,
+        _PQ_CENTS_SCHEMA,
+        _PQ_CODES_SCHEMA,
+        _delta_step,
+        _stage_index,
+    )
     from dask_pipes_spark.operators.streaming_ops import (
-        _residual_step,
-        _stage_k24_state,
         k24_stream_residual_ivm,
         run_ivm_stream,
     )
-    from dask_pipes_spark.operators.vectors import (
-        _RIVF_ASSIGN_SCHEMA,
-        _RIVF_CENT_SCHEMA,
-        _RIVF_CENTS_SCHEMA,
-        _RIVF_CODES_SCHEMA,
-        _residual_probe,
-    )
+    from dask_pipes_spark.operators.vectors import RIVF, _residual_probe
     from dask_pipes_spark.session import scratch_path
 
     ref = sorted(
@@ -951,8 +960,8 @@ def test_k24_batching_invariance(spark):
     d = scratch_path("dps_k24_invariance")
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
-    _stage_k24_state(spark, SF_SMOKE, d)
-    run_ivm_stream(spark, d, _residual_step(spark, d), max_files_per_trigger=2)
+    _stage_index(RIVF, spark, SF_SMOKE, d, cdc=True)
+    run_ivm_stream(spark, d, _delta_step(RIVF, spark, d), max_files_per_trigger=2)
     man = json.load(open(os.path.join(d, "VACUUM.json")))
     assert len(man["history"]) == 4, (
         "2 initial links + 2 windows x 1 atomic pair link"
@@ -960,17 +969,17 @@ def test_k24_batching_invariance(spark):
     from dask_pipes_spark.session import _link_bys
 
     bys = [b for h in man["history"] for b in _link_bys(h)]
-    cent = spark.read.schema(_RIVF_CENT_SCHEMA).parquet(
+    cent = spark.read.schema(_CENT_SCHEMA).parquet(
         os.path.join(d, "centroids")
     )
     cent_rows = cent.collect()
-    indexed = spark.read.schema(_RIVF_ASSIGN_SCHEMA).parquet(
+    indexed = spark.read.schema(_IVF_ASSIGN_SCHEMA).parquet(
         os.path.join(d, [b for b in bys if b.startswith("assignments-")][-1])
     )
-    cents = spark.read.schema(_RIVF_CENTS_SCHEMA).parquet(
+    cents = spark.read.schema(_PQ_CENTS_SCHEMA).parquet(
         os.path.join(d, "codebooks")
     )
-    codes = spark.read.schema(_RIVF_CODES_SCHEMA).parquet(
+    codes = spark.read.schema(_PQ_CODES_SCHEMA).parquet(
         os.path.join(d, [b for b in bys if b.startswith("codes-")][-1])
     )
     got = sorted(
@@ -1065,13 +1074,13 @@ def test_k27_stream_equals_l84_batch_lifecycle(spark):
     state l84's one-shot batch lifecycle lands — same quantizers (data-
     derived K), same final pair — so the served probes are identical;
     and batching invariance: 2-files-per-trigger == 1-file-per-trigger."""
+    from dask_pipes_spark.operators.ann_lifecycle import _delta_step, _stage_index
     from dask_pipes_spark.operators.streaming_ops import (
-        _kivfpq_step,
-        _stage_k27_state,
         k27_stream_kivfpq_ivm,
         run_ivm_stream,
     )
     from dask_pipes_spark.operators.vectors import (
+        KIVFPQ,
         _serve_kivfpq,
         l84_kmeans_ivfpq_serving,
     )
@@ -1092,9 +1101,9 @@ def test_k27_stream_equals_l84_batch_lifecycle(spark):
     base2 = scratch_path(f"dps_k27_kivfpq_stream2_{tag}")
 
     def _stage2(d: str) -> None:
-        _stage_k27_state(spark, SF_SMOKE, d)
+        _stage_index(KIVFPQ, spark, SF_SMOKE, d, cdc=True)
         run_ivm_stream(
-            spark, d, _kivfpq_step(spark, d), max_files_per_trigger=2
+            spark, d, _delta_step(KIVFPQ, spark, d), max_files_per_trigger=2
         )
 
     idx2 = ensure_index(

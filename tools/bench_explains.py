@@ -177,7 +177,8 @@ def main() -> None:
     dump("q_dedup_chain_histogram", hist)
 
     # ann probe: the steady-state prepared plan
-    from dask_pipes_spark.operators.llm_ext import _ivf_probe_topk, build_ivf_index
+    from dask_pipes_spark.operators.ann_lifecycle import _build_index
+    from dask_pipes_spark.operators.llm_ext import IVF, _ivf_probe_topk
     from dask_pipes_spark.session import ensure_index, scratch_path
 
     ann_tag = bench.SF_DIR.rstrip("/").rsplit("/", 1)[-1]
@@ -185,7 +186,7 @@ def main() -> None:
         scratch_path(f"dps_l62_ivf_{ann_tag}"),
         os.path.join(bench.SF_DIR, "embeddings.parquet"),
         version="ivf-v1",
-        build=lambda d: build_ivf_index(spark, bench.SF_DIR, d),
+        build=lambda d: _build_index(IVF, spark, bench.SF_DIR, d),
     )
     ann_cent_rows = (
         spark.read.schema("bucket int, ce array<double>, cnrm double")
